@@ -12,11 +12,26 @@ object ReadstatFormats {
   /** Driver-built, task-serialized decode context for one file. */
   trait FileContext extends Serializable
 
+  /** Everything planning needs from one file, from one metadata parse: its
+    * Spark schema, its (rowStart, rowCount) ranges (a single range for
+    * sequential formats) and its decode context.
+    */
+  final case class FilePlan(schema: StructType, ranges: Seq[(Long, Long)], context: FileContext)
+
   trait FormatModule {
-    def schema(path: String, opts: ReadstatOptions): StructType
-    /** (rowStart, rowCount) ranges; a single range for sequential formats. */
-    def partitionRanges(path: String, opts: ReadstatOptions): Seq[(Long, Long)]
-    def fileContext(path: String, opts: ReadstatOptions): FileContext
+    /** Parses `file`'s metadata with one open and a read buffer no larger
+      * than the file. `memo = false` leaves a format's between-loads memo
+      * (SAS only) untouched.
+      */
+    def parse(file: ReadstatIO.FileStamp, opts: ReadstatOptions, memo: Boolean = true): FilePlan
+
+    def schema(path: String, opts: ReadstatOptions): StructType =
+      parse(ReadstatIO.stamp(path), opts).schema
+    def partitionRanges(path: String, opts: ReadstatOptions): Seq[(Long, Long)] =
+      parse(ReadstatIO.stamp(path), opts).ranges
+    def fileContext(path: String, opts: ReadstatOptions): FileContext =
+      parse(ReadstatIO.stamp(path), opts).context
+
     def reader(
         part: ReadstatInputPartition,
         ctx: FileContext,
@@ -33,6 +48,15 @@ object ReadstatFormats {
         required: StructType,
         opts: ReadstatOptions,
         filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty): Option[(RowCursor, Array[ColumnAppender])] = None
+  }
+
+  /** Row ranges of at most `maxPartitionBytes` (but at least
+    * `minRowsPerPartition` rows) over `n` fixed-width records.
+    */
+  def fixedWidthRanges(n: Long, recordLen: Int, opts: ReadstatOptions): Seq[(Long, Long)] = {
+    val rowsPerPart = math.max(opts.minRowsPerPartition, opts.maxPartitionBytes / math.max(1, recordLen))
+    if (n <= 0) Seq((0L, 0L))
+    else (0L until n by rowsPerPart).map(s => (s, math.min(rowsPerPart, n - s)))
   }
 
   def forName(format: String): FormatModule = format match {

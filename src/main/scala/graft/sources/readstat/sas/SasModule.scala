@@ -1,7 +1,5 @@
 package graft.sources.readstat.sas
 
-import java.io.BufferedInputStream
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -25,32 +23,41 @@ object SasModule extends ReadstatFormats.FormatModule {
 
   final case class SasContext(meta: Metadata) extends ReadstatFormats.FileContext
 
-  /** Metadata parse walks every page (AMD metadata can trail the data, same
-    * as the reference `src/sas/metadata.rs:38-88`) — ~1 GB of driver IO for
-    * a 1 GB file. One planning pass calls this ~5× (schema, ranges, context,
-    * natural schema), so cache per (path, size, mtime) with LRU eviction;
-    * entries are a few KB.
+  /** Entries the between-loads memo holds; a listing of more SAS files
+    * than this bypasses it.
+    */
+  val MemoEntries = 4096
+
+  /** The metadata walk reads every page (AMD metadata can trail the data,
+    * same as the reference `src/sas/metadata.rs:38-88`) — ~1 GB of driver
+    * IO for a 1 GB file. A load's file index parses each file once; this
+    * memo keeps the result between loads (a re-read of the same file, a
+    * streaming batch, the per-path wrappers), keyed by the listing's
+    * (path, size, mtime) with LRU eviction; entries are a few KB.
     */
   private val metaCache =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[(String, Long, Long), Metadata](64, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), Metadata]): Boolean = size() > 4096
+            e: java.util.Map.Entry[(String, Long, Long), Metadata]): Boolean = size() > MemoEntries
       })
 
-  private def parseMeta(path: String): Metadata = {
-    val key = try {
-      val st = ReadstatIO.status(path)
-      (path, st.getLen, st.getModificationTime)
-    } catch { case _: Exception => (path, -1L, -1L) }
-    val cached = metaCache.get(key)
-    if (cached != null) cached
-    else {
-      val in = new BufferedInputStream(ReadstatIO.open(path), 1 << 20)
-      val meta = try Sas.parseMetadata(in) finally in.close()
-      metaCache.put(key, meta)
-      meta
-    }
+  override def parse(
+      file: ReadstatIO.FileStamp,
+      opts: ReadstatOptions,
+      memo: Boolean): ReadstatFormats.FilePlan = {
+    val key = (file.path, file.len, file.mtime)
+    val cached = if (memo) metaCache.get(key) else null
+    val meta =
+      if (cached != null) cached
+      else {
+        val in = ReadstatIO.buffered(ReadstatIO.open(file.path), file.len)
+        val m = try Sas.parseMetadata(in) finally in.close()
+        if (memo) metaCache.put(key, m)
+        m
+      }
+    ReadstatFormats.FilePlan(
+      StructType(fieldsWithRoles(meta, opts).map(_._1)), ranges(meta, opts), SasContext(meta))
   }
 
   def sparkField(c: Column): StructField = {
@@ -84,14 +91,10 @@ object SasModule extends ReadstatFormats.FormatModule {
     }
   }
 
-  override def schema(path: String, opts: ReadstatOptions): StructType =
-    StructType(fieldsWithRoles(parseMeta(path), opts).map(_._1))
-
   /** Pack whole pages into partitions of ~maxPartitionBytes. Every cut is a
     * page boundary, so readers seek in O(1) from the exact page index.
     */
-  override def partitionRanges(path: String, opts: ReadstatOptions): Seq[(Long, Long)] = {
-    val meta = parseMeta(path)
+  private def ranges(meta: Metadata, opts: ReadstatOptions): Seq[(Long, Long)] = {
     // zero-variable (metadata-only) files have no row storage to iterate
     val n = if (meta.rowLength <= 0) 0L else meta.rowCount
     if (n <= 0) return Seq((0L, 0L))
@@ -124,9 +127,6 @@ object SasModule extends ReadstatFormats.FormatModule {
     if (curRows > 0) parts += ((curStart, curRows))
     if (parts.isEmpty) Seq((0L, n)) else parts.toSeq
   }
-
-  override def fileContext(path: String, opts: ReadstatOptions): ReadstatFormats.FileContext =
-    SasContext(parseMeta(path))
 
   override def reader(
       part: ReadstatInputPartition,

@@ -1,6 +1,6 @@
 package graft.sources.readstat.spss
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.{BufferedInputStream, FilterInputStream, InputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -24,8 +24,17 @@ object SavModule extends ReadstatFormats.FormatModule {
 
   final case class SavContext(meta: Metadata) extends ReadstatFormats.FileContext
 
-  private def parseMeta(path: String): Metadata =
-    Sav.parseMetadata(() => new BufferedInputStream(ReadstatIO.open(path), 1 << 20))
+  /** One open for both of `Sav.parseMetadata`'s passes: each pass seeks
+    * back to the start and reads through its own buffer.
+    */
+  private def parseMeta(file: ReadstatIO.FileStamp): Metadata = {
+    val fsin = ReadstatIO.open(file.path)
+    try Sav.parseMetadata { () =>
+      fsin.seek(0L)
+      // the passes close their stream; the file stays open for the next one
+      ReadstatIO.buffered(new FilterInputStream(fsin) { override def close(): Unit = () }, file.len)
+    } finally fsin.close()
+  }
 
   def sparkField(v: Variable, meta: Metadata, opts: ReadstatOptions): StructField = {
     val mb = new MetadataBuilder()
@@ -69,23 +78,18 @@ object SavModule extends ReadstatFormats.FormatModule {
     }
   }
 
-  override def schema(path: String, opts: ReadstatOptions): StructType =
-    StructType(fieldsWithRoles(parseMeta(path), opts).map(_._1))
-
-  override def partitionRanges(path: String, opts: ReadstatOptions): Seq[(Long, Long)] = {
-    val meta = parseMeta(path)
+  override def parse(
+      file: ReadstatIO.FileStamp,
+      opts: ReadstatOptions,
+      memo: Boolean): ReadstatFormats.FilePlan = {
+    val meta = parseMeta(file)
     val n = math.max(0L, meta.header.rowCount)
-    if (meta.header.compression != 0) Seq((0L, n)) // sequential decode
-    else {
-      val recordLen = math.max(1, meta.recordLen)
-      val rowsPerPart = math.max(opts.minRowsPerPartition, opts.maxPartitionBytes / recordLen)
-      if (n <= 0) Seq((0L, 0L))
-      else (0L until n by rowsPerPart).map(s => (s, math.min(rowsPerPart, n - s)))
-    }
+    val ranges =
+      if (meta.header.compression != 0) Seq((0L, n)) // sequential decode
+      else ReadstatFormats.fixedWidthRanges(n, meta.recordLen, opts)
+    ReadstatFormats.FilePlan(
+      StructType(fieldsWithRoles(meta, opts).map(_._1)), ranges, SavContext(meta))
   }
-
-  override def fileContext(path: String, opts: ReadstatOptions): ReadstatFormats.FileContext =
-    SavContext(parseMeta(path))
 
   override def reader(
       part: ReadstatInputPartition,
@@ -433,11 +437,11 @@ final class SavRowCursor(
     h.compression match {
       case 0 =>
         fsin.seek(meta.dataOffset + part.rowStart * recordLen.toLong)
-        chunkRows = math.max(1, (4 << 20) / math.max(1, recordLen))
+        chunkRows = RowCursor.chunkRows(part.rowCount, recordLen)
         chunk = new Array[Byte](chunkRows * recordLen)
       case 1 =>
         fsin.seek(meta.dataOffset)
-        in = new BufferedInputStream(fsin, 4 << 20)
+        in = new BufferedInputStream(fsin, RowCursor.ChunkBytes)
         decompressor = new SavByteCode(le, h.bias)
         skipRows = part.rowStart
       case 2 =>

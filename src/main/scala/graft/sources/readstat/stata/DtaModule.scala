@@ -1,7 +1,6 @@
 package graft.sources.readstat.stata
 
-import java.io.BufferedInputStream
-
+import org.apache.hadoop.fs.FSDataInputStream
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -21,65 +20,53 @@ object DtaModule extends ReadstatFormats.FormatModule {
       meta: Metadata,
       strls: Map[(Int, Long), String]) extends ReadstatFormats.FileContext
 
-  private def parseMeta(path: String): Metadata = {
-    val in = new BufferedInputStream(ReadstatIO.open(path), 1 << 20)
-    try Dta.parseMetadata(ByteReader(in))
-    finally in.close()
+  /** One open: the metadata from the head of the file, then seeks to the
+    * value labels and the strL table.
+    */
+  override def parse(
+      file: ReadstatIO.FileStamp,
+      opts: ReadstatOptions,
+      memo: Boolean): ReadstatFormats.FilePlan = {
+    val fsin = ReadstatIO.open(file.path)
+    try {
+      val meta = withLabels(fsin, file,
+        Dta.parseMetadata(ByteReader(ReadstatIO.buffered(fsin, file.len))))
+      ReadstatFormats.FilePlan(
+        DtaRowDecoder.buildSchema(meta, opts),
+        ReadstatFormats.fixedWidthRanges(meta.header.nobs, meta.recordLen, opts),
+        DtaContext(meta, loadStrls(fsin, file, meta, opts)))
+    } finally fsin.close()
   }
 
-  private def withLabels(path: String, meta: Metadata): Metadata = {
+  private def withLabels(fsin: FSDataInputStream, file: ReadstatIO.FileStamp,
+      meta: Metadata): Metadata = {
     meta.valueLabelsOffset match {
       case Some(off) if off > 0 =>
-        val fsin = ReadstatIO.open(path)
-        try {
-          // the seek is inside the degrade catch: a file truncated after
-          // its data section (labels gone, rows intact) must still read —
-          // the PERMISSIVE clean-prefix path reaches the data through here
-          val labels =
-            try {
-              fsin.seek(off)
-              Dta.parseValueLabels(ByteReader(new BufferedInputStream(fsin, 1 << 20)), meta)
-            }
-            catch { case _: Exception => Map.empty[String, Map[Int, String]] }
-          meta.copy(valueLabels = labels)
-        } finally fsin.close()
+        // the seek is inside the degrade catch: a file truncated after
+        // its data section (labels gone, rows intact) must still read —
+        // the PERMISSIVE clean-prefix path reaches the data through here
+        val labels =
+          try {
+            fsin.seek(off)
+            Dta.parseValueLabels(ByteReader(ReadstatIO.buffered(fsin, file.len - off)), meta)
+          }
+          catch { case _: Exception => Map.empty[String, Map[Int, String]] }
+        meta.copy(valueLabels = labels)
       case _ => meta
     }
   }
 
-  private def loadStrls(path: String, meta: Metadata,
+  private def loadStrls(fsin: FSDataInputStream, file: ReadstatIO.FileStamp, meta: Metadata,
       opts: ReadstatOptions): Map[(Int, Long), String] = {
     val hasStrl = meta.variables.exists(_.varType == TStrL)
     if (!hasStrl) return Map.empty
     meta.strlsOffset match {
       case Some(off) if off > 0 =>
-        val fsin = ReadstatIO.open(path)
-        try {
-          fsin.seek(off)
-          Dta.parseStrls(ByteReader(new BufferedInputStream(fsin, 1 << 20)), meta,
-            opts.maxStrlBytes)
-        } finally fsin.close()
+        fsin.seek(off)
+        Dta.parseStrls(ByteReader(ReadstatIO.buffered(fsin, file.len - off)), meta,
+          opts.maxStrlBytes)
       case _ => Map.empty
     }
-  }
-
-  override def schema(path: String, opts: ReadstatOptions): StructType = {
-    val meta = withLabels(path, parseMeta(path))
-    DtaRowDecoder.buildSchema(meta, opts)
-  }
-
-  override def partitionRanges(path: String, opts: ReadstatOptions): Seq[(Long, Long)] = {
-    val meta = parseMeta(path)
-    val recordLen = math.max(1, meta.recordLen)
-    val rowsPerPart = math.max(opts.minRowsPerPartition, opts.maxPartitionBytes / recordLen)
-    val n = meta.header.nobs
-    if (n <= 0) Seq((0L, 0L))
-    else (0L until n by rowsPerPart).map(s => (s, math.min(rowsPerPart, n - s)))
-  }
-
-  override def fileContext(path: String, opts: ReadstatOptions): ReadstatFormats.FileContext = {
-    val meta = withLabels(path, parseMeta(path))
-    DtaContext(meta, loadStrls(path, meta, opts))
   }
 
   /** P4 EXT: decode only the filter columns first; skip the row when the
@@ -144,7 +131,7 @@ final class DtaRowCursor(
     fsin.seek(dataStart + part.rowStart * recordLen.toLong)
   }
 
-  private val chunkRows = math.max(1, (4 << 20) / math.max(1, recordLen))
+  private val chunkRows = graft.sources.readstat.RowCursor.chunkRows(part.rowCount, recordLen)
   private val chunk = new Array[Byte](chunkRows * recordLen)
   private var rowsInChunk = 0
   private var rowInChunk = 0

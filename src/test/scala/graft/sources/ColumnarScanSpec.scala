@@ -26,13 +26,17 @@ class ColumnarScanSpec extends SparkSpec {
   }
 
   test("scan is columnar: ColumnarToRow feeds from the readstat batch scan") {
-    val df = spark.read.format("readstat")
-      .load("/root/reference/tests/sas/data/test.sas7bdat")
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(
+      StructField("id", DoubleType), StructField("s", StringType)))
+    val rows = (0 until 100).map(i => Row(i.toDouble, s"s$i"))
+    val path = tmp("columnar.sas7bdat")
+    SasFixtureWriter.write(spark.createDataFrame(rows.asJava, schema), path, rle = false)
+    val df = spark.read.format("readstat").load(path)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), s"expected a vectorized scan, got:\n$plan")
     // and the escape hatch restores the row path
-    val rowDf = spark.read.format("readstat").option("columnar", "false")
-      .load("/root/reference/tests/sas/data/test.sas7bdat")
+    val rowDf = spark.read.format("readstat").option("columnar", "false").load(path)
     assert(!rowDf.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
   }
 
