@@ -88,21 +88,28 @@ object SasFixtureWriter {
         parts.foreach { case (_, rows, partPath) =>
           val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
             graft.sources.readstat.ReadstatIO.open(partPath), 1 << 20))
-          try {
-            var r = 0L
-            var buf = new Array[Byte](256)
-            while (r < rows) {
-              val len = in.readInt()
-              if (len > buf.length) buf = new Array[Byte](len)
-              in.readFully(buf, 0, len)
-              emit(buf, len)
-              r += 1
-            }
-          } finally in.close()
+          try packRecords(in, rows, emit) finally in.close()
         }
       }
       nRows
     } finally ReadstatWriteSupport.deleteDir(stagingDir)
+  }
+
+  /** Streams `rows` `[i32 len][bytes]` subheader records from `in` into
+    * `emit` — the packer loop for record part files, shared by the
+    * compressed distributed write and the sink's commit.
+    */
+  private[readstat] def packRecords(
+      in: java.io.DataInputStream, rows: Long, emit: (Array[Byte], Int) => Unit): Unit = {
+    var r = 0L
+    var buf = new Array[Byte](256)
+    while (r < rows) {
+      val len = in.readInt()
+      if (len > buf.length) buf = new Array[Byte](len)
+      in.readFully(buf, 0, len)
+      emit(buf, len)
+      r += 1
+    }
   }
 
   /** Streaming compressed-container framer: header (page count patched back
@@ -210,23 +217,29 @@ object SasFixtureWriter {
       stringWidths: Map[String, Int],
       nRows: Long): Long = {
     val cols = colsFor(schema, stringWidths)
-    writeFramedStreaming(schema, stringWidths, path, nRows) { (page, off, written) =>
-      require(rows.hasNext, s"sas fixture: iterator ended at $written of $nRows")
-      encodeRowAt(cols, rows.next(), page, off)
+    val rowBuf = new Array[Byte](cols.map(_.length).sum)
+    writeFramedStreaming(schema, stringWidths, path, nRows) { out =>
+      var written = 0L
+      while (written < nRows) {
+        require(rows.hasNext, s"sas fixture: iterator ended at $written of $nRows")
+        encodeRowAt(cols, rows.next(), rowBuf, 0)
+        out.write(rowBuf)
+        written += 1
+      }
     }
   }
 
-  /** Page-framing core: header + meta pages + streamed DATA pages, the row
-    * bytes supplied by `fill(page, offset, rowIdx)`. The distributed sink's
-    * assembler drives this with executor-encoded spill bytes (no Row
-    * boxing); the row-count-first requirement is satisfied there by the
-    * part messages.
+  /** Page-framing core: header + meta pages + DATA pages around the fixed
+    * rows that `data` writes into the stream it is given (exactly `nRows`
+    * rows, in any write sizes); the stream packs them into pages as they
+    * arrive. The sink's commit streams rendered part rows through it; the
+    * row-count-first requirement is satisfied there by the part messages.
     */
   private[readstat] def writeFramedStreaming(
       schema: StructType,
       stringWidths: Map[String, Int],
       path: String,
-      nRows: Long)(fill: (Array[Byte], Int, Long) => Unit): Long = {
+      nRows: Long)(data: java.io.OutputStream => Unit): Long = {
     val cols = colsFor(schema, stringWidths)
     val rowLength = cols.map(_.length).sum
     val pageLength = math.max(8192, Integer.highestOneBit(rowLength + 512) * 2)
@@ -236,30 +249,43 @@ object SasFixtureWriter {
     val rowsPerPage = (pageLength - bitOffset - 8) / rowLength
     require(rowsPerPage > 0, "sas fixture: row too long for page")
     val nDataPages = ((nRows + rowsPerPage - 1) / rowsPerPage).toInt
+    val pageRows = rowsPerPage * rowLength
 
     val os = new BufferedOutputStream(new FileOutputStream(path), 1 << 20)
     try {
       os.write(buildHeader(headerLen, pageLength, metaPages.length + nDataPages))
       metaPages.foreach(os.write)
       val page = new Array[Byte](pageLength)
-      var written = 0L
-      while (written < nRows) {
-        val inPage = math.min(rowsPerPage.toLong, nRows - written).toInt
-        java.util.Arrays.fill(page, 0.toByte)
+      var fill = 0 // row bytes in the current page
+      var total = 0L
+      def emitPage(): Unit = {
         putU16(page, bitOffset, 256) // DATA
-        putU16(page, bitOffset + 2, inPage)
+        putU16(page, bitOffset + 2, fill / rowLength)
         putU16(page, bitOffset + 4, 0)
-        var off = bitOffset + 8
-        var i = 0
-        while (i < inPage) {
-          fill(page, off, written)
-          off += rowLength
-          i += 1
-          written += 1
-        }
         os.write(page)
+        java.util.Arrays.fill(page, 0.toByte)
+        fill = 0
       }
-      written
+      data(new java.io.OutputStream {
+        override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+          var o = off
+          var n = len
+          while (n > 0) {
+            val k = math.min(pageRows - fill, n)
+            System.arraycopy(b, o, page, bitOffset + 8 + fill, k)
+            fill += k
+            o += k
+            n -= k
+            if (fill == pageRows) emitPage()
+          }
+          total += len
+        }
+      })
+      require(total == nRows * rowLength,
+        s"sas writer: ${total / rowLength} rows written, $nRows declared")
+      if (fill > 0) emitPage()
+      nRows
     } finally os.close()
   }
 
@@ -589,34 +615,38 @@ object RdcEncode {
   }
 }
 
-/** Simple SASYZCRL-compatible encoder: runs → INSERT_*, literals → COPY. */
+/** Simple SASYZCRL-compatible encoder: runs → INSERT_*, literals → COPY.
+  * Literal bytes are always a contiguous range of the row, so they are
+  * copied from it; one output array per row, sized for the worst case
+  * (every 16 literals cost one control byte).
+  */
 object RleEncode {
   def encode(row: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var i = 0
     val n = row.length
-    val lit = new java.io.ByteArrayOutputStream()
+    val out = new Array[Byte](n + n / 16 + 1)
+    var o = 0
+    var litStart = 0 // pending literals are row[litStart, i)
 
-    def flushLiterals(): Unit = {
-      var data = lit.toByteArray
-      var p = 0
-      while (p < data.length) {
-        val chunk = math.min(16, data.length - p)
-        out.write(0x80 | (chunk - 1)) // COPY1: lo+1 bytes
-        out.write(data, p, chunk)
+    def flushLiterals(end: Int): Unit = {
+      var p = litStart
+      while (p < end) {
+        val chunk = math.min(16, end - p)
+        out(o) = (0x80 | (chunk - 1)).toByte // COPY1: lo+1 bytes
+        System.arraycopy(row, p, out, o + 1, chunk)
+        o += 1 + chunk
         p += chunk
       }
-      lit.reset()
     }
 
+    var i = 0
     while (i < n) {
       var runLen = 1
       val b = row(i)
       while (i + runLen < n && row(i + runLen) == b && runLen < 4000) runLen += 1
       if (runLen >= 4) {
-        flushLiterals()
+        flushLiterals(i)
         var left = runLen
-        while (left > 0) {
+        while (left >= 3) {
           if (left >= 18) {
             // INSERT_BYTE18 with the control nibble ALWAYS 0: decoders
             // disagree on its weight (readstat/the reference read
@@ -625,25 +655,21 @@ object RleEncode {
             // command at the single count byte: ≤ 255+18 per command
             // (fuzz-crosscheck-caught r6)
             val count = math.min(left, 255 + 18)
-            out.write(0x40); out.write(count - 18); out.write(b)
+            out(o) = 0x40; out(o + 1) = (count - 18).toByte; out(o + 2) = b
+            o += 3
             left -= count
-          } else if (left >= 3) {
-            out.write(0xC0 | (left - 3)); out.write(b) // INSERT_BYTE3
-            left = 0
           } else {
-            var k = 0
-            while (k < left) { lit.write(b); k += 1 }
+            out(o) = (0xC0 | (left - 3)).toByte; out(o + 1) = b // INSERT_BYTE3
+            o += 2
             left = 0
           }
         }
-        i += runLen
-      } else {
-        var k = 0
-        while (k < runLen) { lit.write(b); k += 1 }
-        i += runLen
+        // a remainder of 1-2 bytes joins the literals that follow
+        litStart = i + runLen - left
       }
+      i += runLen
     }
-    flushLiterals()
-    out.toByteArray
+    flushLiterals(n)
+    java.util.Arrays.copyOf(out, o)
   }
 }

@@ -170,7 +170,8 @@ object SavWriter {
       stringMissingValues: Map[String, Seq[String]] = Map.empty): Long = {
     val specs = buildSpecs(schema, stringWidths)
     writeFramed(schema, specs, path, compress, valueLabels, missingValues, zsav,
-      stringValueLabels, stringMissingValues) { sink =>
+      stringValueLabels, stringMissingValues) { out =>
+      val sink = new SavCellSink(out, compress || zsav)
       var n = 0L
       while (rows.hasNext) {
         val row = rows.next()
@@ -180,7 +181,7 @@ object SavWriter {
             val bytes =
               if (row.isNullAt(ci)) Array.emptyByteArray
               else row.getString(ci).getBytes(StandardCharsets.UTF_8)
-            sink.stringCell(s, bytes)
+            sink.stringCell(s, bytes, bytes.length)
           } else {
             if (row.isNullAt(ci)) sink.numericBits(Sav.MissingDoubleBits)
             else sink.numericBits(
@@ -190,53 +191,75 @@ object SavWriter {
         }
         n += 1
       }
+      sink.finish()
       n
     }
   }
 
   /** Per-cell emission surface for the data section: routes through the
     * bytecode codec when compressing, raw LE doubles otherwise; lays very
-    * long strings into their 252-per-256 segment regions. Driven by the
-    * writeRows Row loop and by the distributed sink's byte-level assembler.
+    * long strings into their 252-per-256 segment regions. Allocation-free
+    * per cell (one reused cell buffer and string region). `start` is the
+    * bytecode position of the first cell (see [[BytecodeEncoder]]).
     */
-  final class SavCellSink private[SavWriter] (
-      codec: BytecodeEncoder, wr: Array[Byte] => Unit) {
-    private val cellBuf = new Array[Byte](8)
+  final class SavCellSink private[readstat] (
+      out: java.io.OutputStream, bytecode: Boolean, start: Int = 0) {
+    private val codec: BytecodeEncoder =
+      if (bytecode) new BytecodeEncoder(out, start) else null
+    private val cell = new Array[Byte](8)
+    private var region = new Array[Byte](256)
 
     def numericBits(bits: Long): Unit =
-      if (codec == null) wr(leBits(bits))
+      if (codec == null) { putLE64(cell, 0, bits); out.write(cell) }
       else if (bits == Sav.MissingDoubleBits) codec.sysmiss()
       else codec.numCell(java.lang.Double.longBitsToDouble(bits))
 
-    def stringCell(s: Spec, bytes: Array[Byte]): Unit = {
-      require(bytes.length <= s.stringLen, s"sav: string too long for ${s.name}")
+    def stringCell(s: Spec, bytes: Array[Byte], len: Int): Unit = {
+      require(len <= s.stringLen, s"sav: string too long for ${s.name}")
       // lay the content into the record region: contiguous for <=255,
       // 252 bytes per 256-byte chunk for very long strings
-      val region = new Array[Byte](s.widthSegments * 8)
-      java.util.Arrays.fill(region, ' '.toByte)
-      if (s.stringLen <= 255) System.arraycopy(bytes, 0, region, 0, bytes.length)
+      val n = s.widthSegments * 8
+      if (region.length < n) region = new Array[Byte](n)
+      java.util.Arrays.fill(region, 0, n, ' '.toByte)
+      if (s.stringLen <= 255) System.arraycopy(bytes, 0, region, 0, len)
       else {
         var seg = 0
         var done = 0
-        while (done < bytes.length) {
-          val take = math.min(252, bytes.length - done)
+        while (done < len) {
+          val take = math.min(252, len - done)
           System.arraycopy(bytes, done, region, seg * 256, take)
           done += take
           seg += 1
         }
       }
-      var seg = 0
-      while (seg < s.widthSegments) {
-        System.arraycopy(region, seg * 8, cellBuf, 0, 8)
-        if (codec != null) codec.strCell(cellBuf) else wr(cellBuf.clone())
-        seg += 1
+      if (codec == null) out.write(region, 0, n)
+      else {
+        var off = 0
+        while (off < n) { codec.strCell(region, off); off += 8 }
       }
     }
+
+    /** The bytecode groups this sink shares with the previous and the next
+      * part (see [[BytecodeEncoder.fragments]]); none for raw data.
+      */
+    private[readstat] def fragments(): (BytecodeFragment, BytecodeFragment) =
+      if (codec == null) (null, null) else codec.fragments()
+
+    /** Appends another part's shared group fragment (null: none). */
+    private[readstat] def merge(f: BytecodeFragment): Unit = if (f != null) codec.merge(f)
+
+    /** Ends the data section: the bytecode end code (252) and the last,
+      * zero-padded group. Raw data has no terminator.
+      */
+    def finish(): Unit = if (codec != null) codec.finish()
   }
 
   /** Writes the full sav container frame — header, dictionary records,
     * encoding record, zsav blocks, row-count patch-back — around a data
-    * section produced by `data` (which returns the row count).
+    * section that `data` writes into the stream it is given (raw records
+    * or bytecode, including the bytecode end code; for zsav the stream
+    * deflates into blocks on up to `threads` threads) and whose row count
+    * it returns.
     */
   def writeFramed(
       schema: StructType,
@@ -247,8 +270,9 @@ object SavWriter {
       missingValues: Map[String, Seq[Double]] = Map.empty,
       zsav: Boolean = false,
       stringValueLabels: Map[String, Map[String, String]] = Map.empty,
-      stringMissingValues: Map[String, Seq[String]] = Map.empty)(
-      data: SavCellSink => Long): Long = {
+      stringMissingValues: Map[String, Seq[String]] = Map.empty,
+      threads: Int = Runtime.getRuntime.availableProcessors)(
+      data: java.io.OutputStream => Long): Long = {
     val nominalCaseSize = specs.map(_.widthSegments).sum
 
     val os = new BufferedOutputStream(new FileOutputStream(path), 1 << 20)
@@ -257,10 +281,8 @@ object SavWriter {
     def u32(v: Int): Unit = wr(Array(
       (v & 0xff).toByte, ((v >> 8) & 0xff).toByte, ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte))
     def f64le(d: Double): Array[Byte] = {
-      val bits = java.lang.Double.doubleToLongBits(d)
       val b = new Array[Byte](8)
-      var i = 0
-      while (i < 8) { b(i) = ((bits >> (8 * i)) & 0xff).toByte; i += 1 }
+      putLE64(b, 0, java.lang.Double.doubleToLongBits(d))
       b
     }
 
@@ -393,29 +415,40 @@ object SavWriter {
     u32(999); u32(0)
 
     // ---- data ----
-    val bias = 100.0
-    // zsav: bytecode stream spools to a TEMP FILE (not a heap buffer — a
-    // larger-than-heap dataset must still export), then deflates per block
-    val spoolFile = if (zsav) java.io.File.createTempFile("graft-zsav-", ".bin") else null
-    val spool = if (zsav)
-      new BufferedOutputStream(new FileOutputStream(spoolFile), 1 << 20) else null
-    val codec =
-      if (zsav) new BytecodeEncoder(spool, bias)
-      else if (compress) new BytecodeEncoder(os, bias) else null
-    val n = data(new SavCellSink(codec, wr))
-    if (codec != null) codec.finish()
-    if (zsav) {
-      spool.close()
-      try writeZsavBlocks(spoolFile, bytesOut, wr, u32)
-      finally spoolFile.delete()
-    }
+    var zsavPatch: Option[(Long, Long, Long)] = None
+    val n =
+      if (!zsav) data(os)
+      else {
+        // zheader: its trailer offset and length are patched below
+        val zheaderOfs = bytesOut
+        wr(new Array[Byte](24))
+        val blocks = new ZsavBlockStream(os, threads)
+        val rows = try data(blocks) finally blocks.close()
+        val ztrailerOfs = zheaderOfs + 24 + blocks.index.map(_._2.toLong).sum
+        zsavPatch = Some((zheaderOfs, ztrailerOfs, 24L + 24L * blocks.index.size))
+        // ztrailer: bias, zero, block size, block count, then per block its
+        // uncompressed and compressed offsets and sizes
+        os.write(le64(-100L)); os.write(le64(0L))
+        os.write(le32(ZsavBlockStream.BlockBytes)); os.write(le32(blocks.index.size))
+        var uOfs = zheaderOfs
+        var cOfs = zheaderOfs + 24
+        blocks.index.foreach { case (u, c) =>
+          os.write(le64(uOfs)); os.write(le64(cOfs)); os.write(le32(u)); os.write(le32(c))
+          uOfs += u
+          cOfs += c
+        }
+        rows
+      }
     os.close()
 
     val raf = new RandomAccessFile(path, "rw")
     try {
       raf.seek(80)
-      raf.write(Array((n & 0xff).toByte, ((n >> 8) & 0xff).toByte,
-        ((n >> 16) & 0xff).toByte, ((n >> 24) & 0xff).toByte))
+      raf.write(le32(n.toInt))
+      zsavPatch.foreach { case (zheaderOfs, ztrailerOfs, ztrailerLen) =>
+        raf.seek(zheaderOfs)
+        raf.write(le64(zheaderOfs)); raf.write(le64(ztrailerOfs)); raf.write(le64(ztrailerLen))
+      }
     } finally raf.close()
     n
   }
@@ -450,70 +483,19 @@ object SavWriter {
     case dt => throw new IllegalArgumentException(s"sav writer: $dt")
   }
 
-  /** zsav container: 24-byte zheader, deflate blocks, ztrailer with the
-    * block index (reference `read_zsav_data` `src/spss/data.rs:1687-1761`).
-    * Reads the spooled bytecode block-by-block (bounded memory) and
-    * deflates blocks concurrently — deflate is the CPU cost of zsav export
-    * and the blocks are independent.
-    */
-  private def writeZsavBlocks(
-      spool: java.io.File, zheaderOfs: Long,
-      wr: Array[Byte] => Unit, u32: Int => Unit): Unit = {
-    val blockSize = 0x3FF000
-    val total = spool.length()
-    val nBlocks = ((total + blockSize - 1) / blockSize).toInt // 0 when empty
-    val blockLens = (0 until nBlocks).map(i =>
-      math.min(blockSize.toLong, total - i.toLong * blockSize).toInt)
-
-    def deflateBlock(i: Int): Array[Byte] = {
-      val raf = new RandomAccessFile(spool, "r")
-      try {
-        raf.seek(i.toLong * blockSize)
-        val buf = new Array[Byte](blockLens(i))
-        raf.readFully(buf)
-        val bos = new java.io.ByteArrayOutputStream()
-        val d = new java.util.zip.DeflaterOutputStream(bos)
-        d.write(buf); d.close()
-        bos.toByteArray
-      } finally raf.close()
-    }
-    val deflated = graft.sources.readstat.ReadstatIO.parMap(0 until nBlocks)(deflateBlock)
-
-    def u64(v: Long): Unit = {
-      val b = new Array[Byte](8)
-      var i = 0
-      while (i < 8) { b(i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-      wr(b)
-    }
-    val ztrailerOfs = zheaderOfs + 24 + deflated.map(_.length.toLong).sum
-    // zheader
-    u64(zheaderOfs); u64(ztrailerOfs); u64(24L + 24L * nBlocks)
-    // blocks
-    deflated.foreach(wr)
-    // ztrailer
-    u64(-100L); u64(0L)
-    u32(blockSize); u32(nBlocks)
-    var uOfs = zheaderOfs
-    var cOfs = zheaderOfs + 24
-    (0 until nBlocks).foreach { i =>
-      u64(uOfs); u64(cOfs)
-      u32(blockLens(i)); u32(deflated(i).length)
-      uOfs += blockLens(i)
-      cOfs += deflated(i).length
-    }
-  }
-
   private def writeI32(b: Array[Byte], off: Int, v: Int): Unit = {
     var i = 0
     while (i < 4) { b(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
   }
 
-  private def leBits(bits: Long): Array[Byte] = {
-    val b = new Array[Byte](8)
+  private def putLE64(b: Array[Byte], off: Int, v: Long): Unit = {
     var i = 0
-    while (i < 8) { b(i) = ((bits >> (8 * i)) & 0xff).toByte; i += 1 }
-    b
+    while (i < 8) { b(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
   }
+
+  private def le32(v: Int): Array[Byte] = { val b = new Array[Byte](4); writeI32(b, 0, v); b }
+
+  private def le64(v: Long): Array[Byte] = { val b = new Array[Byte](8); putLE64(b, 0, v); b }
 
   private def fixed(b: Array[Byte], len: Int, pad: Byte): Array[Byte] = {
     val out = new Array[Byte](len)
@@ -522,28 +504,53 @@ object SavWriter {
     out
   }
 
-  /** Bytecode emitter: 8 control codes then their literal payloads.
-    * Codes: 253 literal, 254 spaces, 255 sysmiss, 1..251 = value+bias.
+  /** The codes and literal payloads of one bytecode group at positions
+    * [from, to) — what a part of a parallel commit cannot write itself
+    * because the group is shared with the previous or the next part.
     */
-  private final class BytecodeEncoder(os: java.io.OutputStream, bias: Double) {
-    private val codes = new Array[Byte](8)
-    private val payload = new java.io.ByteArrayOutputStream()
-    private var ci = 0
+  private[readstat] final case class BytecodeFragment(from: Int, to: Int, group: Array[Byte])
 
-    private def flush(fillCode: Int): Unit = {
-      if (ci == 0 && fillCode == 0) return
-      while (ci < 8) { codes(ci) = fillCode.toByte; ci += 1 }
-      os.write(codes)
-      payload.writeTo(os)
-      payload.reset()
+  /** Bytecode emitter: groups of 8 control codes, each followed by its
+    * literal payloads. Codes: 253 literal, 254 spaces, 255 sysmis,
+    * 1..251 = value+bias, 252 end of data, 0 padding. One reused group
+    * buffer (8 codes + 64 payload bytes); a group is written when its 8th
+    * code arrives.
+    *
+    * Every row emits exactly `nominalCaseSize` codes, so a part of a
+    * parallel commit whose rows start at code position `start` (mod 8)
+    * renders on its own: its first, shared group (when `start > 0`) and its
+    * unfinished last group are kept as fragments ([[fragments]]) and the
+    * stitch merges them with the neighbouring parts' ([[merge]]). No code 0
+    * is padded mid-stream, so the bytes equal a sequential encode of the
+    * same rows.
+    */
+  private final class BytecodeEncoder(os: java.io.OutputStream, start: Int = 0) {
+    private val bias = 100.0
+    private val group = new Array[Byte](72)
+    private var ci = start
+    private var pay = 0
+    private var from = start
+    private var head: BytecodeFragment = null
+
+    private def full(): Unit = {
+      if (from > 0) head = BytecodeFragment(from, 8, java.util.Arrays.copyOf(group, 8 + pay))
+      else os.write(group, 0, 8 + pay)
+      java.util.Arrays.fill(group, 0, 8, 0.toByte)
       ci = 0
+      pay = 0
+      from = 0
     }
 
-    private def emit(code: Int, data: Array[Byte]): Unit = {
-      if (ci == 8) flush(0)
-      codes(ci) = code.toByte
+    private def code(c: Int): Unit = {
+      group(ci) = c.toByte
       ci += 1
-      if (data != null) payload.write(data)
+      if (ci == 8) full()
+    }
+
+    private def literal(src: Array[Byte], off: Int): Unit = {
+      System.arraycopy(src, off, group, 8 + pay, 8)
+      pay += 8
+      code(253)
     }
 
     def numCell(d: Double): Unit = {
@@ -553,28 +560,191 @@ object SavWriter {
       // integrality test alone would encode it as code 100 and decode 0.0
       // (fuzz-caught r6)
       if (c == Math.rint(c) && c >= 1.0 && c <= 251.0 && c.toInt.toDouble - bias == d)
-        emit(c.toInt, null)
+        code(c.toInt)
       else {
-        val bits = java.lang.Double.doubleToLongBits(d)
-        val b = new Array[Byte](8)
-        var i = 0
-        while (i < 8) { b(i) = ((bits >> (8 * i)) & 0xff).toByte; i += 1 }
-        emit(253, b)
+        putLE64(group, 8 + pay, java.lang.Double.doubleToLongBits(d))
+        pay += 8
+        code(253)
       }
     }
 
-    def sysmiss(): Unit = emit(255, null)
+    def sysmiss(): Unit = code(255)
 
-    def strCell(cell: Array[Byte]): Unit = {
+    /** The 8 bytes at `off` of `cell` as one string cell. */
+    def strCell(cell: Array[Byte], off: Int): Unit = {
       var allSpace = true
       var i = 0
-      while (i < 8 && allSpace) { if (cell(i) != ' '.toByte) allSpace = false; i += 1 }
-      if (allSpace) emit(254, null) else emit(253, cell.clone())
+      while (i < 8 && allSpace) { if (cell(off + i) != ' '.toByte) allSpace = false; i += 1 }
+      if (allSpace) code(254) else literal(cell, off)
     }
 
+    /** Appends a fragment of another encoder's group; it must start where
+      * this encoder's current group stops.
+      */
+    def merge(f: BytecodeFragment): Unit = {
+      require(f.from == ci, s"bytecode stitch: fragment at ${f.from}, group at $ci")
+      val p = f.group.length - 8
+      System.arraycopy(f.group, 8, group, 8 + pay, p)
+      pay += p
+      System.arraycopy(f.group, f.from, group, f.from, f.to - f.from)
+      ci = f.to
+      if (ci == 8) full()
+    }
+
+    /** This part's (first shared group, unfinished last group), each null
+      * when absent; the first is the only one when the part never completes
+      * its first group.
+      */
+    def fragments(): (BytecodeFragment, BytecodeFragment) = {
+      val pending =
+        if (ci > from) BytecodeFragment(from, ci, java.util.Arrays.copyOf(group, 8 + pay)) else null
+      if (from > 0) (pending, null) else (head, pending)
+    }
+
+    /** The end code 252 and the last group, zero-padded. */
     def finish(): Unit = {
-      emit(252, null)
-      flush(0)
+      code(252)
+      if (ci > 0) {
+        while (ci < 8) { group(ci) = 0; ci += 1 }
+        os.write(group, 0, 8 + pay)
+        ci = 0
+        pay = 0
+      }
+    }
+  }
+
+  /** The zsav data section as a stream: bytecode in, zlib blocks out.
+    *
+    * The stream is cut into blocks of [[ZsavBlockStream.BlockBytes]] (every
+    * block but the last full), and each block into chunks of at most
+    * [[ZsavBlockStream.ChunkBytes]] that deflate in parallel, pigz-style:
+    * a raw deflater at the default level, the previous 32 KB of the block
+    * as its preset dictionary, SYNC_FLUSH on every chunk but the block's
+    * last. One zlib header and the Adler-32 of the whole block wrap the
+    * chunks, so each block is still one standard zlib stream; a block of
+    * one chunk is byte-identical to a `DeflaterOutputStream` of it. Chunks
+    * are written to `os` in order as they finish; at most `threads + 1` are
+    * in flight, and no buffer reaches 2 MB. `index` lists each block's
+    * (uncompressed, compressed) size once the stream is closed.
+    */
+  private final class ZsavBlockStream(os: java.io.OutputStream, threads: Int)
+      extends java.io.OutputStream {
+    import ZsavBlockStream._
+
+    val index = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
+
+    private final class Chunk(
+        val first: Boolean, val last: Boolean, val blockLen: Int, val adler: Int,
+        val out: java.util.concurrent.Future[Seq[Array[Byte]]])
+
+    private var chunk = new Array[Byte](ChunkBytes)
+    private var fill = 0
+    private var inBlock = 0 // bytes of the current block in earlier chunks
+    private var prev: Array[Byte] = null // the block's previous chunk: the dictionary
+    private val adler = new java.util.zip.Adler32
+    private val queue = new java.util.ArrayDeque[Chunk]()
+    private var pool: java.util.concurrent.ExecutorService = null
+    private var blockOut = 0L
+    private val one = new Array[Byte](1)
+
+    private def limit: Int = math.min(ChunkBytes, BlockBytes - inBlock)
+
+    override def write(b: Int): Unit = { one(0) = b.toByte; write(one, 0, 1) }
+
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      var o = off
+      var n = len
+      while (n > 0) {
+        // cut lazily: a full chunk is the block's last if the stream ends
+        if (fill == limit) cut(closing = false)
+        val k = math.min(limit - fill, n)
+        System.arraycopy(b, o, chunk, fill, k)
+        fill += k
+        o += k
+        n -= k
+      }
+    }
+
+    private def cut(closing: Boolean): Unit = {
+      val data = chunk
+      val len = fill
+      val last = closing || inBlock + len == BlockBytes
+      val dict = if (inBlock > 0) prev else null
+      adler.update(data, 0, len)
+      val blockAdler = if (last) adler.getValue.toInt else 0
+      val task = new java.util.concurrent.Callable[Seq[Array[Byte]]] {
+        def call(): Seq[Array[Byte]] = deflateChunk(data, len, dict, last)
+      }
+      val out =
+        if (threads <= 1 || (closing && queue.isEmpty)) {
+          val f = new java.util.concurrent.FutureTask(task)
+          f.run()
+          f
+        } else {
+          if (pool == null) pool = graft.sources.readstat.ReadstatWriteSupport.commitPool(threads)
+          pool.submit(task)
+        }
+      queue.add(new Chunk(inBlock == 0, last, inBlock + len, blockAdler, out))
+      if (last) { adler.reset(); inBlock = 0; prev = null }
+      else { inBlock += len; prev = data }
+      chunk = if (closing) null else new Array[Byte](ChunkBytes)
+      fill = 0
+      while (queue.size > math.max(threads, 1)) drainOne()
+    }
+
+    private def drainOne(): Unit = {
+      val c = queue.poll()
+      val pieces = try c.out.get() catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      }
+      if (c.first) { os.write(0x78); os.write(0x9c); blockOut = 2 }
+      pieces.foreach { p => os.write(p); blockOut += p.length }
+      if (c.last) {
+        os.write(Array((c.adler >>> 24).toByte, (c.adler >>> 16).toByte,
+          (c.adler >>> 8).toByte, c.adler.toByte))
+        index += ((c.blockLen, (blockOut + 4).toInt))
+      }
+    }
+
+    override def close(): Unit = {
+      try {
+        if (chunk != null && (fill > 0 || inBlock > 0)) cut(closing = true)
+        chunk = null
+        while (!queue.isEmpty) drainOne()
+      } finally if (pool != null) { pool.shutdownNow(); pool = null }
+    }
+  }
+
+  private object ZsavBlockStream {
+    /** Uncompressed bytes per zlib block, as SPSS writes them. */
+    val BlockBytes: Int = 0x3FF000
+    val ChunkBytes: Int = 1 << 20
+    private val DictBytes = 32 * 1024
+
+    /** One chunk as raw deflate: NO_FLUSH over the input, then SYNC_FLUSH
+      * (more chunks follow in the block) or FINISH (the block's last).
+      */
+    def deflateChunk(data: Array[Byte], len: Int, dict: Array[Byte], last: Boolean): Seq[Array[Byte]] = {
+      val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+      try {
+        if (dict != null) d.setDictionary(dict, dict.length - DictBytes, DictBytes)
+        d.setInput(data, 0, len)
+        val out = Seq.newBuilder[Array[Byte]]
+        val buf = new Array[Byte](64 * 1024)
+        def take(n: Int): Unit = if (n > 0) out += java.util.Arrays.copyOf(buf, n)
+        while (!d.needsInput) take(d.deflate(buf))
+        if (last) {
+          d.finish()
+          while (!d.finished) take(d.deflate(buf))
+        } else {
+          var n = buf.length
+          while (n == buf.length) {
+            n = d.deflate(buf, 0, buf.length, java.util.zip.Deflater.SYNC_FLUSH)
+            take(n)
+          }
+        }
+        out.result()
+      } finally d.end()
     }
   }
 }

@@ -127,24 +127,26 @@ object DtaWriter {
   }
 
   /** Record emission surface handed to `writeFramed`'s data callback: a
-    * reusable record buffer plus the strL side table (the distributed sink's
-    * assembler drives this directly with spill bytes — no Row boxing).
+    * reusable record buffer, the data section's stream (`data`, for
+    * records rendered elsewhere) and the strL side table, whose blobs are
+    * written in the order they are added.
     */
   final class DtaDataSink private[DtaWriter] (
       val version: Int,
       val recordLen: Int,
-      out: CountingOut,
+      val data: java.io.OutputStream,
       val strls: scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Byte])]) {
     val rowBuf = new Array[Byte](recordLen)
     def clearRow(): Unit = java.util.Arrays.fill(rowBuf, 0.toByte)
-    def emitRow(): Unit = out.write(rowBuf)
+    def emitRow(): Unit = data.write(rowBuf)
   }
 
   /** Writes the full dta container frame — header, map, descriptors, strLs,
     * value labels, offset-map patch-back — around a data section produced by
-    * `data` (which returns the row count). The seam that lets executors
-    * pre-encode record bytes while the driver only frames and concatenates
-    * (reference parallel chunk encode, `src/stata/writer.rs:1287-1363`).
+    * `data` (which returns the row count). The sink's commit renders its
+    * parts' records in parallel and streams them through `sink.data` in
+    * part order (reference parallel chunk encode,
+    * `src/stata/writer.rs:1287-1363`).
     */
   def writeFramed(
       schema: StructType,
@@ -441,10 +443,10 @@ object DtaWriter {
     b
   }
 
-  private final class CountingOut(os: java.io.OutputStream) {
+  private final class CountingOut(os: java.io.OutputStream) extends java.io.OutputStream {
     var count: Long = 0L
-    def write(b: Int): Unit = { os.write(b); count += 1 }
-    def write(b: Array[Byte]): Unit = { os.write(b); count += b.length }
-    def close(): Unit = os.close()
+    override def write(b: Int): Unit = { os.write(b); count += 1 }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = { os.write(b, off, len); count += len }
+    override def close(): Unit = os.close()
   }
 }
