@@ -13,8 +13,11 @@ import org.apache.spark.sql.types.StructType
 /** Structured Streaming file source for readstat formats (SURVEY.md §2.9):
   * `spark.readStream.format("readstat").load(dir)` watches a directory and
   * emits each newly arrived `.dta`/`.sav`/`.sas7bdat` file as part of the
-  * next micro-batch, reusing the batch planner's row-range partitioning per
-  * file.
+  * next micro-batch. It plans from the load's [[ReadstatFileIndex]] like a
+  * batch scan: one parse per arriving file gives its schema, row ranges and
+  * decode context; the file must fit the relation's table under the same
+  * [[SchemaFit]] rule, and [[ReadstatReaderFactory]] conforms its rows.
+  * `schema` is the query's projection of the table.
   *
   * Offsets are indices into the discovery order (files sorted by
   * modification time then name at each poll, appended once). The discovery
@@ -30,17 +33,11 @@ import org.apache.spark.sql.types.StructType
   * file caught mid-write fails its metadata parse.
   */
 class ReadstatMicroBatchStream(
-    dir: String,
+    index: ReadstatFileIndex,
     schema: StructType,
-    opts: ReadstatOptions,
-    checkpointLocation: String,
-    tableSchema: StructType = null) extends MicroBatchStream with SupportsAdmissionControl {
+    checkpointLocation: String) extends MicroBatchStream with SupportsAdmissionControl {
 
-  /** Full table schema when the scan supplied it; the pruned projection
-    * otherwise (pre-r11 callers). Only the mergeSchema gate's new-column
-    * check needs the distinction.
-    */
-  private def fullSchema: StructType = if (tableSchema != null) tableSchema else schema
+  private def opts = index.opts
 
   private case class FilesOffset(n: Int) extends Offset {
     override def json(): String = n.toString
@@ -83,8 +80,12 @@ class ReadstatMicroBatchStream(
     require(fs.rename(tmp, logPath), s"readstat stream: cannot persist file log at $logPath")
   }
 
+  // each polled file as the latest listing saw it: the index parses a
+  // file again only when its (len, mtime) changed
+  private val stamps = mutable.HashMap[String, ReadstatIO.FileStamp]()
+
   private def poll(): Unit = {
-    val hp = new HPath(dir)
+    val hp = new HPath(index.paths.head)
     val fs = hp.getFileSystem(ReadstatIO.sessionConf)
     if (!fs.exists(hp)) return
     val status =
@@ -96,29 +97,32 @@ class ReadstatMicroBatchStream(
       // side is Compaction's tailing-reader contract: only epochs every
       // tail has already admitted AND committed may be folded (a replayed
       // uncommitted batch reopens its epoch parts by path)
-      .filter(st => st.isFile && hasKnownExtension(st.getPath.getName) &&
+      .filter(st => st.isFile && ReadstatOptions.formatOf(st.getPath.getName).isDefined &&
         !Compaction.isCompactionFile(st.getPath.getName))
       .sortBy(st => (st.getModificationTime, st.getPath.toString))
-      .map(_.getPath.toString)
+      .map(st => ReadstatIO.FileStamp(st.getPath.toString, st.getLen, st.getModificationTime))
+    files.foreach(f => stamps(f.path) = f)
     val before = discovered.size
-    files.foreach(discovered += _)
+    files.foreach(discovered += _.path)
     if (discovered.size != before) persistLog()
   }
 
-  private def hasKnownExtension(name: String): Boolean = {
-    val n = name.toLowerCase
-    n.endsWith(".dta") || n.endsWith(".sav") || n.endsWith(".zsav") ||
-      n.endsWith(".sas7bdat")
-  }
+  /** A discovered file's one parse (schema, ranges, decode context) from
+    * the relation's index; None when it is quarantined. A file not seen by
+    * this instance's polls (a replayed batch after a restart) is stamped
+    * on demand.
+    */
+  private def planned(p: String): Option[ReadstatFileIndex.PlannedFile] =
+    index.file(stamps.getOrElseUpdate(p, ReadstatIO.listFiles(Seq(p)).head))
 
   override def initialOffset(): Offset = FilesOffset(0)
 
   /** Floor for hold scans: every file below this index was already admitted
     * by the engine (a start offset it handed us, or a committed end), so
     * the no-arg offset surfaces need not re-probe it. Without the floor,
-    * `holdBounded(0, n)` schema-probed every discovered file per trigger
-    * until schemaCache warmed — O(discovered) driver work where the
-    * start-bounded form is O(new) (r12 ADVICE).
+    * `holdBounded(0, n)` walked every discovered file per trigger —
+    * O(discovered) driver work where the start-bounded form is O(new)
+    * (r12 ADVICE).
     */
   @volatile private var admittedFloor: Int = 0
   private def raiseFloor(n: Int): Unit = if (n > admittedFloor) admittedFloor = n
@@ -169,44 +173,39 @@ class ReadstatMicroBatchStream(
 
   override def deserializeOffset(json: String): Offset = FilesOffset(json.trim.toInt)
 
-  // decode contexts survive across batches — each file's metadata parses
-  // once per query, not once per micro-batch (r2 ADVICE #3)
-  private val ctxCache = mutable.HashMap[String, ReadstatFormats.FileContext]()
-  private val schemaCache = mutable.HashMap[String, StructType]()
-  @volatile private var streamNatural: Option[StructType] = None
-
-  /** Admission gate (r11): probe and pin every arriving file's schema
-    * BEFORE its rows can enter a batch. Before this gate, a corrupt upload
-    * killed a 24/7 intake query outright, and a schema-DRIFTED upload was
-    * worse — the per-file column plans are built from the file's own
-    * metadata under the stream's declared schema, so drifted types could
-    * decode into wrongly-typed rows (silent misread). Now: FAILFAST turns
-    * both into a named query failure at the drifted file; PERMISSIVE
-    * quarantines the file (skip + report) and the stream keeps running.
-    * The file stays in the durable discovery log either way — offsets must
-    * keep indexing the same files — it just plans as zero partitions.
+  /** The admission gate, asked by both [[admissible]] and [[widenHold]]:
+    * an arriving file's one parse, and the [[SchemaFit]] misfit of its
+    * schema against the relation's pinned table (None when it fits).
+    * Every arriving file is probed this way BEFORE its rows can enter a
+    * batch (r11). Before the gate, a corrupt upload killed a 24/7 intake
+    * query outright, and a schema-DRIFTED upload was worse — decoded under
+    * the stream's declared schema, drifted types could become wrongly-typed
+    * rows (silent misread). Now FAILFAST turns both into a named query
+    * failure at the file; PERMISSIVE quarantines it (skip + report) and
+    * the stream keeps running. The file stays in the durable discovery log
+    * either way — offsets must keep indexing the same files — it just
+    * plans as zero partitions.
     *
-    * With `mergeSchema=true` (r11 close-out #3) the gate WIDENS instead of
-    * quarantining where it can: an arrival is admissible when every column
-    * it shares with the declared schema widens INTO the declared type
-    * along the closed lattice (missing columns null-fill, the batch
-    * AligningReader discipline executor-side). A stream's output schema is
-    * fixed at query start — that is Spark's contract, not this source's —
-    * so an arrival with a NEW column or a WIDER type still quarantines or
-    * fails, now with a restart-to-re-merge hint (at restart the batch-side
-    * inference re-merges over everything present). Under PERMISSIVE that
-    * widenable class normally never reaches this gate: [[widenHold]] pins
-    * the offset before the file so it stays replayable; this branch
-    * remains the FAILFAST error and the safety net for a replayed batch
-    * whose file still does not fit.
+    * With `mergeSchema=true` (r11 close-out #3) an arrival fits when every
+    * column it has widens INTO the pinned type along the closed lattice
+    * (missing columns null-fill on the executor). A stream's output schema
+    * is fixed at query start — that is Spark's contract, not this source's
+    * — so an arrival with a NEW column or a WIDER type misfits, with a
+    * restart-to-re-merge hint (at restart the load re-merges over
+    * everything present). Under PERMISSIVE that widenable class normally
+    * never reaches [[admissible]]: [[widenHold]] pins the offset before the
+    * file so it stays replayable.
     */
+  private def gate(p: String): Option[(ReadstatFileIndex.PlannedFile, Option[IllegalArgumentException])] =
+    planned(p).map(f => f -> index.misfit(f, stream = true))
+
   // widenable refusals already hinted once (the record is re-created on a
   // restart only if the rebuilt query STILL cannot admit the file)
   private val holdReported = mutable.HashSet[String]()
 
   /** Widen-hold (PERMISSIVE + mergeSchema): an arrival whose schema does
-    * not fit the running query's declared schema but WOULD be admitted by
-    * a restart's re-merge (wider type on the closed lattice, or a new
+    * not fit the running query's pinned table but WOULD be admitted by a
+    * restart's re-merge (wider type on the closed lattice, or a new
     * column) must not pass through a batch at all — the batch would emit
     * zero rows for it, COMMIT, and the widen-restart could then never
     * replay the file (offsets resume after the committed batch; the r11h
@@ -218,25 +217,16 @@ class ReadstatMicroBatchStream(
     * pending, so the re-merged query replays it deterministically. Files
     * BEHIND a held file wait with it (discovery order is the offset
     * order) — bounded by the supervisor's poll, and the honest cost of
-    * never losing a good file. A corrupt file never holds (its probe
-    * fails → quarantine-and-skip at batch planning); a non-widenable
-    * drift never holds (its re-merge fails → same skip path); FAILFAST
-    * never holds (the gate throws at batch planning, failing the query).
-    * The probe is memoized per query instance, so fixing a held file
-    * in place still requires the restart the hint asks for.
+    * never losing a good file. A corrupt file never holds (its parse
+    * fails → quarantine-and-skip); a non-widenable drift never holds (its
+    * re-merge fails → skip at batch planning); FAILFAST never holds (the
+    * gate throws at batch planning, failing the query).
     */
   private def widenHold(p: String): Boolean =
-    opts.permissive && opts.mergeSchema && opts.streamWidenHold && {
-      val probed = scala.util.Try(schemaCache.getOrElseUpdate(
-        p, ReadstatFormats.forPath(p, opts).schema(p, opts))).toOption
-      probed.exists { s =>
-        val declared = schema.fields.map(f => f.name -> f.dataType).toMap
-        val known = fullSchema.fields.map(_.name).toSet
-        val misfit = s.fields.exists(f => declared.get(f.name).exists(t =>
-          !SchemaMerge.widen(f.dataType, t).contains(t))) ||
-          s.fields.exists(f => !known.contains(f.name))
-        misfit && scala.util.Try(
-          SchemaMerge.merge(Seq(("declared", fullSchema), (p, s)))).isSuccess && {
+    opts.permissive && opts.mergeSchema && opts.streamWidenHold && gate(p).exists {
+      case (f, Some(_)) =>
+        index.table.exists(t => scala.util.Try(
+          SchemaMerge.merge(Seq((t.from, t.natural), (p, f.plan.schema)))).isSuccess) && {
           if (!holdReported.contains(p)) {
             holdReported += p
             Quarantine.report(opts, p, "plan", new IllegalArgumentException(
@@ -247,102 +237,33 @@ class ReadstatMicroBatchStream(
           }
           true
         }
-      }
+      case _ => false
     }
 
-  private def admissible(p: String): Boolean =
-    Quarantine.guard(opts, p, "plan") {
-      val s = schemaCache.getOrElseUpdate(p, ReadstatFormats.forPath(p, opts).schema(p, opts))
-      if (opts.mergeSchema) {
-        // type fit is judged on the DECODED (projected) columns; new-column
-        // detection on the full table schema (see fullSchema)
-        val declared = schema.fields.map(f => f.name -> f.dataType).toMap
-        val known = fullSchema.fields.map(_.name).toSet
-        val misfits = s.fields.flatMap { f =>
-          declared.get(f.name) match {
-            case Some(t) if !SchemaMerge.widen(f.dataType, t).contains(t) =>
-              Some(s"${f.name}:${f.dataType.simpleString}->!${t.simpleString}")
-            case _ => None
-          }
-        }
-        val fresh = s.fields.map(_.name).filterNot(known.contains)
-        if (misfits.nonEmpty || fresh.nonEmpty)
-          throw new IllegalArgumentException(
-            s"readstat stream: newly arrived file $p does not fit the " +
-              s"stream's schema under mergeSchema (" +
-              (if (misfits.nonEmpty) s"non-widenable: ${misfits.mkString(", ")}" else "") +
-              (if (misfits.nonEmpty && fresh.nonEmpty) "; " else "") +
-              (if (fresh.nonEmpty) s"new columns: ${fresh.mkString(", ")}" else "") +
-              ") — a running stream's output schema is fixed; quarantine " +
-              "with mode=PERMISSIVE or restart the stream to re-merge")
-      } else streamNatural match {
-        case None => streamNatural = Some(s)
-        case Some(first) =>
-          val a = first.fields.map(f => (f.name, f.dataType)).toSeq
-          val b = s.fields.map(f => (f.name, f.dataType)).toSeq
-          if (a != b) {
-            val diff = (a.diff(b) ++ b.diff(a)).map { case (n, t) => s"$n:${t.simpleString}" }
-            throw new IllegalArgumentException(
-              s"readstat stream: schema drift in newly arrived file $p " +
-                s"(differing fields: ${diff.mkString(", ")}) — a drifted " +
-                "file would misread under the stream's pinned schema; " +
-                "quarantine it with mode=PERMISSIVE, restart the stream " +
-                "over the new schema, or admit narrower arrivals with " +
-                "option(\"mergeSchema\", \"true\")")
-          }
-      }
-    }.isDefined
+  /** The file's plan when the gate admits it; a misfit throws (FAILFAST)
+    * or is quarantined at stage "plan" (PERMISSIVE).
+    */
+  private def admissible(p: String): Option[ReadstatFileIndex.PlannedFile] =
+    gate(p).flatMap { case (f, misfit) =>
+      Quarantine.guard(opts, p, "plan")(misfit.foreach(e => throw e)).map(_ => f)
+    }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FilesOffset].n
     val e = end.asInstanceOf[FilesOffset].n
-    val batchFiles = discovered.toSeq.slice(s, e)
-    batchFiles.filter(admissible).flatMap { p =>
-      val fmt = ReadstatOptions.detectFormat(p, opts.format)
-      val mod = ReadstatFormats.forName(fmt)
-      // partition planning can still fail on a file whose header parsed
-      // but whose body metadata is broken — same quarantine contract
-      Quarantine.guard(opts, p, "plan")(mod.partitionRanges(p, opts))
-        .getOrElse(Seq.empty)
-        .collect { case (rs, rc) if rc > 0 => ReadstatInputPartition(p, fmt, rs, rc) }
+    discovered.toSeq.slice(s, e).flatMap(admissible).flatMap { f =>
+      f.plan.ranges.collect { case (rs, rc) if rc > 0 => ReadstatInputPartition(f.path, f.format, rs, rc) }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // context build failures quarantine like the batch path: a missing
-    // entry makes the file's partitions read empty under PERMISSIVE
-    // (ReadstatReaderFactory's guard) and fails the query under FAILFAST
-    val ctxs: Map[String, ReadstatFormats.FileContext] = discovered.toSeq.flatMap { p =>
-      Quarantine.guard(opts, p, "context")(
-        p -> ctxCache.getOrElseUpdate(p, ReadstatFormats.forPath(p, opts).fileContext(p, opts)))
-    }.toMap
+    // every discovered file's plan from the index (parsed once per query);
+    // the factory conforms each admitted file to the declared schema
+    // exactly like the batch path
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val bc = sc.broadcast(ctxs)
-    val bcConf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-    // the container's natural schema may differ from the declared one
-    // (inferSchema / user narrowing): route through CoercingReader exactly
-    // like the batch path (r2 ADVICE #4). The admission gate pinned it.
-    if (opts.mergeSchema) {
-      // per-file natural schemas for the factory's aligning branch — the
-      // admission gate guaranteed each fits INTO the declared schema, the
-      // executor-side AligningReader does the null-fill/widen (exactly the
-      // batch mergeSchema path)
-      val fileNats: Map[String, StructType] = discovered.toSeq.flatMap(p =>
-        Quarantine.guard(opts, p, "context")(
-          p -> schemaCache.getOrElseUpdate(p, ReadstatFormats.forPath(p, opts).schema(p, opts)))).toMap
-      new ReadstatReaderFactory(schema, schema, opts, bc, bcConf, Seq.empty,
-        fileNats = sc.broadcast(fileNats))
-    } else {
-      val natural = streamNatural
-        .orElse(discovered.headOption.flatMap(p =>
-          Quarantine.guard(opts, p, "context")(
-            ReadstatFormats.forPath(p, opts).schema(p, opts))))
-        .getOrElse(schema)
-      val naturalByName = natural.fields.map(f => f.name -> f).toMap
-      val naturalProjected = StructType(
-        schema.fields.map(f => naturalByName.getOrElse(f.name, f)))
-      new ReadstatReaderFactory(schema, naturalProjected, opts, bc, bcConf, Seq.empty)
-    }
+    val plans = discovered.toSeq.flatMap(planned).map(f => f.path -> f.plan).toMap
+    new ReadstatReaderFactory(schema, opts, sc.broadcast(plans),
+      sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration)))
   }
 
   override def commit(end: Offset): Unit =

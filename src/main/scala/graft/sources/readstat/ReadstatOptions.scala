@@ -149,13 +149,20 @@ object ReadstatOptions {
     // so no reorder machinery is needed — the option is a documented no-op.
   }
 
-  /** Format sniffing by extension (`detect_format` reference `src/lib.rs:383-394`). */
-  def detectFormat(path: String, opt: Option[String]): String = opt.getOrElse {
-    val p = path.toLowerCase
-    if (p.endsWith(".sas7bdat")) "sas7bdat"
-    else if (p.endsWith(".dta")) "dta"
-    else if (p.endsWith(".sav") || p.endsWith(".zsav")) "sav"
-    else throw new IllegalArgumentException(
-      s"cannot detect readstat format from path: $path (use option(\"format\", ...))")
+  /** The readstat file extensions and the format each names: the one
+    * list behind format sniffing and directory listings.
+    */
+  private val Extensions =
+    Seq(".sas7bdat" -> "sas7bdat", ".dta" -> "dta", ".sav" -> "sav", ".zsav" -> "sav")
+
+  /** The format a file name's extension names, if it is a readstat one. */
+  def formatOf(name: String): Option[String] = {
+    val n = name.toLowerCase
+    Extensions.collectFirst { case (ext, fmt) if n.endsWith(ext) => fmt }
   }
+
+  /** Format sniffing by extension (`detect_format` reference `src/lib.rs:383-394`). */
+  def detectFormat(path: String, opt: Option[String]): String = opt.orElse(formatOf(path)).getOrElse(
+    throw new IllegalArgumentException(
+      s"cannot detect readstat format from path: $path (use option(\"format\", ...))"))
 }

@@ -16,7 +16,7 @@ class DtaCompatMatrixSpec extends SparkSpec {
   private def haveCorpus = new java.io.File(s"$dir/stata-compat-118.dta").isFile
 
   test("all stata-compat versions decode to the same values") {
-    assume(haveCorpus)
+    assume(haveCorpus, s"needs the Stata compat corpus in $dir (absent)")
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.matches("stata-compat-(be-)?\\d+\\.dta"))
       .map(_.getPath).sorted

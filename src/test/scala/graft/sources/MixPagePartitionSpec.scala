@@ -17,7 +17,7 @@ class MixPagePartitionSpec extends SparkSpec {
   private def haveCorpus = new java.io.File(mixFile).isFile
 
   test("MIX-prefixed file plans multiple partitions when sized down") {
-    assume(haveCorpus)
+    assume(haveCorpus, s"needs the MIX-page file $mixFile (absent)")
     val opts = ReadstatOptions.from {
       val m = new java.util.HashMap[String, String]()
       m.put("maxPartitionBytes", (64 * 1024).toString)
@@ -36,7 +36,7 @@ class MixPagePartitionSpec extends SparkSpec {
   }
 
   test("partitioned read equals sequential read on a MIX file") {
-    assume(haveCorpus)
+    assume(haveCorpus, s"needs the MIX-page file $mixFile (absent)")
     val seq = spark.read.format("readstat")
       .load(mixFile)
     val par = spark.read.format("readstat")

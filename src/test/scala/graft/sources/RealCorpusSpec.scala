@@ -24,7 +24,7 @@ class RealCorpusSpec extends SparkSpec {
   private def haveCorpus: Boolean = corpusRoot.isDirectory
 
   test("all real-world corpus files: read fully, rows==metadata, cols==metadata") {
-    assume(haveCorpus)
+    assume(haveCorpus, s"needs the reference corpus under $corpusRoot (absent)")
     val files = CorpusCheck.corpusFiles()
     assert(files.size >= 500, s"expected the full corpus, found ${files.size} files")
     val failures = new ConcurrentLinkedQueue[CorpusCheck.Result]()
@@ -45,7 +45,7 @@ class RealCorpusSpec extends SparkSpec {
   }
 
   test("golden values: data_pandas/test1.sas7bdat (MIX-page row alignment)") {
-    assume(haveCorpus)
+    assume(haveCorpus, s"needs the reference corpus under $corpusRoot (absent)")
     val df = spark.read.format("readstat")
       .load("/root/reference/tests/sas/data/data_pandas/test1.sas7bdat")
     val rows = df.select("Column1", "Column3", "Column8").collect()
@@ -65,7 +65,7 @@ class RealCorpusSpec extends SparkSpec {
   }
 
   test("golden values: spss sample.sav (pyreadstat public fixture)") {
-    assume(haveCorpus)
+    assume(haveCorpus, s"needs the reference corpus under $corpusRoot (absent)")
     val df = spark.read.format("readstat")
       .load("/root/reference/tests/spss/data/sample.sav")
     val rows = df.collect()
@@ -81,7 +81,7 @@ class RealCorpusSpec extends SparkSpec {
   }
 
   test("regression locks: labelled/ordered/datetime sav decode") {
-    assume(haveCorpus)
+    assume(haveCorpus, s"needs the reference corpus under $corpusRoot (absent)")
     // value labels through real files written by SPSS/haven
     val ls = spark.read.format("readstat")
       .load("/root/reference/tests/spss/data/labelled-str.sav").collect()
@@ -98,7 +98,7 @@ class RealCorpusSpec extends SparkSpec {
   }
 
   test("encoding goldens: umlauts, big5, hebrews, tegulu VLS") {
-    assume(haveCorpus)
+    assume(haveCorpus, s"needs the reference corpus under $corpusRoot (absent)")
     val um = spark.read.format("readstat")
       .load("/root/reference/tests/spss/data/umlauts.sav").collect()
     assert(um.map(_.getString(0)).toSeq ==
