@@ -1157,7 +1157,7 @@ object DedupOps {
     val joined =
       if (nIds <= deltaBroadcastMaxIds) docs.join(broadcast(ids), "doc_id")
       else {
-        System.err.println(s"[graft] lshGeometryAuto: $nIds candidate ids " +
+        org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(s"[graft] lshGeometryAuto: $nIds candidate ids " +
           s"exceed broadcast bar $deltaBroadcastMaxIds — degrading to a shuffle join")
         docs.join(ids, "doc_id")
       }
@@ -1564,7 +1564,7 @@ object DedupOps {
     val filtered =
       if (nIds <= maxBroadcastIds) verifyDocs.join(broadcast(ids), "doc_id")
       else {
-        System.err.println(s"[graft] deltaDedup: $nIds candidate ids exceed " +
+        org.slf4j.LoggerFactory.getLogger("graft.dedup").warn(s"[graft] deltaDedup: $nIds candidate ids exceed " +
           s"broadcast bar $maxBroadcastIds — degrading to a shuffle join")
         verifyDocs.join(ids, "doc_id")
       }

@@ -241,7 +241,7 @@ object SimilarityOps {
     val p = 1.0 - math.acos(math.min(1.0, recallCos)) / math.Pi
     def recall(b: Int): Double = 1.0 - math.pow(1.0 - math.pow(p, b), L)
     if (sys.env.contains("SPARK_GRAFT_BAND_DEBUG"))
-      (b0 to bMax).foreach(bb => System.err.println(
+      (b0 to bMax).foreach(bb => org.slf4j.LoggerFactory.getLogger("graft.similarity.autoband").info(
         f"[autoband] b=$bb bhat/n=${bhat(bb) / math.max(n, 1L)}%.1f recall(.9)=${recall(bb)}%.3f"))
     var b = b0
     while (b < bMax && bhat(b) > budgetPerVec * n && recall(b + 1) >= recallFloor)

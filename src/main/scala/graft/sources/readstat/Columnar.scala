@@ -1,5 +1,7 @@
 package graft.sources.readstat
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types._
@@ -138,5 +140,31 @@ final class ReadstatColumnarReader(
   }
 
   override def get(): ColumnarBatch = batch
+  override def close(): Unit = cursor.close()
+}
+
+/** Generic row reader: one boxed decoder per projected column over a
+  * format cursor (struct columns, conformed reads and `columnar=false`).
+  */
+final class ReadstatRowReader(
+    cursor: RowCursor,
+    decoders: Array[(Array[Byte], Int) => Any])
+  extends PartitionReader[InternalRow] {
+
+  private val out = new GenericInternalRow(decoders.length)
+
+  override def next(): Boolean = {
+    if (!cursor.nextRow()) return false
+    val b = cursor.buf
+    val o = cursor.base
+    var i = 0
+    while (i < decoders.length) {
+      out.update(i, decoders(i)(b, o))
+      i += 1
+    }
+    true
+  }
+
+  override def get(): InternalRow = out
   override def close(): Unit = cursor.close()
 }

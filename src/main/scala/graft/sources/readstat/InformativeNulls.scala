@@ -1,6 +1,8 @@
 package graft.sources.readstat
 
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Informative nulls (SURVEY.md §2.2 P7; reference `src/lib.rs:62-115`):
   * user-defined missing codes (SAS `.A`–`.Z`/`._`, Stata `.a`–`.z`, SPSS
@@ -107,5 +109,74 @@ object InformativeNulls {
       (field.copy(dataType = structTypeFor(field.dataType)), RStruct))
     case Some(Merged) => Seq(
       (field.copy(dataType = StringType), RMerged))
+  }
+
+  /** A file's output columns in order: each source column expanded per
+    * the mode (a column is eligible when it can carry informative nulls
+    * and `informativeNullColumns` tracks it), after the collision check.
+    */
+  def fieldsWithRoles(
+      cols: Seq[ReadstatFormats.SourceColumn],
+      opts: ReadstatOptions): Seq[Output] = {
+    val eligible = cols.filter(c => c.informative && opts.inTracked(c.field.name)).map(_.field.name)
+    checkCollisions(cols.map(_.field.name), eligible, opts.inMode, opts.informativeNullSuffix)
+    val tracked = eligible.toSet
+    cols.flatMap { c =>
+      expand(c.field, tracked(c.field.name), opts.inMode, opts.informativeNullSuffix)
+        .map { case (f, role) => Output(f, role, c) }
+    }
+  }
+
+  /** One output column: its field, its role and the source column behind
+    * it.
+    */
+  final case class Output(field: StructField, role: Role, source: ReadstatFormats.SourceColumn) {
+
+    /** The boxed decoder of this column's value. */
+    def decoder: (Array[Byte], Int) => Any = role match {
+      case RValue => source.value
+      case RIndicator => source.indicator
+      case RStruct =>
+        val value = source.value
+        val indicator = source.indicator
+        (b, o) => new GenericInternalRow(Array[Any](value(b, o), indicator(b, o)))
+      case RMerged =>
+        val value = source.value
+        val indicator = source.indicator
+        val render = renderer(source.field)
+        (b, o) => {
+          val ind = indicator(b, o)
+          if (ind != null) ind
+          else {
+            val v = value(b, o)
+            if (v == null) null else render(v)
+          }
+        }
+    }
+
+    /** The columnar appender: the format's unboxed one for a plain value
+      * column that has it, else the boxed fallback over [[decoder]].
+      */
+    def appender: ColumnAppender = role match {
+      case RValue => source.appender.getOrElse(ColumnAppender.boxed(source.value, field.dataType))
+      case _ => ColumnAppender.boxed(decoder, field.dataType)
+    }
+  }
+
+  /** Merged mode's render of a decoded value by its Spark type, resolved
+    * once per column: the reference merges with a cast to String
+    * (`src/lib.rs:339-355`), so temporal columns render the converted
+    * value and numbers render like the label fallback.
+    */
+  private def renderer(field: StructField): Any => UTF8String = field.dataType match {
+    case DateType => v => UTF8String.fromString(renderDays(v.asInstanceOf[java.lang.Integer].intValue()))
+    case TimestampNTZType | TimestampType =>
+      v => UTF8String.fromString(renderMicros(v.asInstanceOf[java.lang.Long].longValue()))
+    case LongType if field.metadata.contains("logical_type") &&
+        field.metadata.getString("logical_type") == "time" =>
+      v => UTF8String.fromString(renderNanosOfDay(v.asInstanceOf[java.lang.Long].longValue()))
+    case StringType => v => v.asInstanceOf[UTF8String]
+    case _ => v => UTF8String.fromString(
+      stata.DtaRowDecoder.renderNumber(v.asInstanceOf[java.lang.Number].doubleValue()))
   }
 }

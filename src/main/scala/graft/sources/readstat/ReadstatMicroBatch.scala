@@ -248,21 +248,28 @@ class ReadstatMicroBatchStream(
       Quarantine.guard(opts, p, "plan")(misfit.foreach(e => throw e)).map(_ => f)
     }
 
+  // the plans of the files the last planInputPartitions admitted. Spark's
+  // MicroBatchScanExec plans a batch's partitions before it builds that
+  // batch's reader factory (DataSourceV2ScanExecBase evaluates
+  // inputPartitions first, for supportsColumnar and for the input RDD),
+  // so each factory ships its own batch's plans only
+  @volatile private var batchPlans: Map[String, ReadstatFormats.FilePlan] = Map.empty
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FilesOffset].n
     val e = end.asInstanceOf[FilesOffset].n
-    discovered.toSeq.slice(s, e).flatMap(admissible).flatMap { f =>
+    val files = discovered.toSeq.slice(s, e).flatMap(admissible)
+    batchPlans = files.map(f => f.path -> f.plan).toMap
+    files.flatMap { f =>
       f.plan.ranges.collect { case (rs, rc) if rc > 0 => ReadstatInputPartition(f.path, f.format, rs, rc) }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // every discovered file's plan from the index (parsed once per query);
     // the factory conforms each admitted file to the declared schema
     // exactly like the batch path
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val plans = discovered.toSeq.flatMap(planned).map(f => f.path -> f.plan).toMap
-    new ReadstatReaderFactory(schema, opts, sc.broadcast(plans),
+    new ReadstatReaderFactory(schema, opts, sc.broadcast(batchPlans),
       sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration)))
   }
 

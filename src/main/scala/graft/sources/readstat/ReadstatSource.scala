@@ -318,14 +318,15 @@ class ReadstatScan(
     * instead of defaulting to Long.MaxValue → sort-merge; at cluster scale
     * that is the difference between a broadcast and a full shuffle.
     */
-  override def estimateStatistics(): Statistics = {
-    val totalRows =
-      try plannedFiles.map(_.plan.ranges.map(_._2).sum).sum
-      catch { case _: Exception => -1L }
-    if (totalRows < 0) new Statistics {
+  override def estimateStatistics(): Statistics = plannedFiles match {
+    // planning failed: statistics are unknown, and planning rethrows the
+    // same error
+    case scala.util.Failure(_) => new Statistics {
       override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-    } else {
+    }
+    case scala.util.Success(files) =>
+      val totalRows = files.map(_.plan.ranges.map(_._2).sum).sum
       val afterOffset = math.max(0L, totalRows - offset)
       val n = limit.map(l => math.min(l, afterOffset)).getOrElse(afterOffset)
       // decoded-width estimate per projected row (defaultSize over-counts
@@ -335,7 +336,6 @@ class ReadstatScan(
         override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(n * rowBytes)
         override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(n)
       }
-    }
   }
   override def toBatch: Batch = this
   override def toMicroBatchStream(
@@ -347,18 +347,21 @@ class ReadstatScan(
   /** This scan's good files, quarantine applied: in PERMISSIVE a file
     * whose metadata parse fails is reported and dropped by the index, so
     * planInputPartitions / createReaderFactory / estimateStatistics all see
-    * one consistent good-file set; FAILFAST rethrows (CorruptFileSpec's
+    * one consistent good-file set; FAILFAST fails (CorruptFileSpec's
     * pinned default). A file added or rewritten since the load that does
     * not fit the relation's table fails here, on the driver, with the
-    * load's named [[SchemaFit]] error.
+    * load's named [[SchemaFit]] error. The outcome is kept either way, so
+    * a failing scan lists and parses once and every caller sees the same
+    * error.
     */
-  private lazy val plannedFiles: Seq[ReadstatFileIndex.PlannedFile] = index.plan().files
+  private lazy val plannedFiles: scala.util.Try[Seq[ReadstatFileIndex.PlannedFile]] =
+    scala.util.Try(index.plan().files)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val parts = scala.collection.mutable.ArrayBuffer[ReadstatInputPartition]()
     var skip = offset
     var remaining = limit.getOrElse(Long.MaxValue)
-    plannedFiles.foreach { f =>
+    plannedFiles.get.foreach { f =>
       val p = f.path
       val fmt = f.format
       if (remaining > 0) {
@@ -387,7 +390,7 @@ class ReadstatScan(
     // large strL/GSO table ships to each executor once instead of once per
     // task (SURVEY.md §7.4 risk 4).
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val bc = sc.broadcast(plannedFiles.map(f => f.path -> f.plan).toMap)
+    val bc = sc.broadcast(plannedFiles.get.map(f => f.path -> f.plan).toMap)
     // ship the session's Hadoop conf so S3A/HDFS credentials and tuning set
     // in Spark conf reach executor-side opens (r1 verdict "what's wrong" #1)
     val bcConf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
@@ -399,7 +402,7 @@ class ReadstatScan(
     // columns) sends the whole scan down the row path, where the aligning
     // layer works
     val columnarOk = opts.columnar && ColumnAppender.flatSchema(required) &&
-      plannedFiles.forall(f => ReadstatReaderFactory.exact(f.plan.schema, required))
+      plannedFiles.get.forall(f => ReadstatReaderFactory.exact(f.plan.schema, required))
     new ReadstatReaderFactory(required, opts, bc, bcConf, filters, columnarOk, rtHolder)
   }
 }
@@ -437,6 +440,9 @@ class ReadstatReaderFactory(
     columnarOk: Boolean = false,
     rt: RuntimeFilterHolder = new RuntimeFilterHolder)
   extends PartitionReaderFactory {
+
+  /** test hook: the files whose plans this factory ships */
+  private[readstat] def plannedPaths: Set[String] = files.value.keySet
 
   private def fileFilters(natural: StructType): Seq[org.apache.spark.sql.sources.Filter] = {
     val own = natural.fields.map(f => f.name -> f.dataType).toMap

@@ -49,6 +49,22 @@ object RowFilter {
     case _ => None
   }
 
+  /** A scan's decode-skip predicate over a row's bytes (`buf`, `base`),
+    * or null when there is no filter. It decodes only the columns the
+    * filters name, through `decoder`, the output column's own decoder: a
+    * filter on an informative-null indicator or merged column sees that
+    * column's value, not the raw one (which is null exactly where the
+    * indicator is set).
+    */
+  def predicate(
+      filters: Seq[Filter],
+      decoder: String => (Array[Byte], Int) => Any): (Array[Byte], Int) => Boolean =
+    if (filters.isEmpty) null
+    else {
+      val decoders = filters.flatMap(referenced).flatten.distinct.map(n => n -> decoder(n)).toMap
+      (buf, base) => filters.forall(f => keep(f, n => decoders(n)(buf, base)))
+    }
+
   /** Should the row be decoded? False only when [[eval]] is certain the
     * residual filter drops it.
     */

@@ -1,8 +1,5 @@
 package graft.sources.readstat.sas
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,8 +53,7 @@ object SasModule extends ReadstatFormats.FormatModule {
         if (memo) metaCache.put(key, m)
         m
       }
-    ReadstatFormats.FilePlan(
-      StructType(fieldsWithRoles(meta, opts).map(_._1)), ranges(meta, opts), SasContext(meta))
+    plan(SasContext(meta), ranges(meta, opts), opts)
   }
 
   def sparkField(c: Column): StructField = {
@@ -72,23 +68,6 @@ object SasModule extends ReadstatFormats.FormatModule {
       case KNumeric => DoubleType
     }
     StructField(c.name, dt, nullable = true, metadata = mb.build())
-  }
-
-  import graft.sources.readstat.InformativeNulls
-  import graft.sources.readstat.InformativeNulls._
-
-  def fieldsWithRoles(meta: Metadata, opts: ReadstatOptions): Seq[(StructField, Role, Column)] = {
-    val mode = opts.inMode
-    InformativeNulls.checkCollisions(
-      meta.columns.map(_.name).toSeq,
-      meta.columns.filter(c => !c.isChar && opts.inTracked(c.name)).map(_.name).toSeq,
-      mode, opts.informativeNullSuffix)
-    meta.columns.toSeq.flatMap { c =>
-      val f = sparkField(c)
-      val elig = !c.isChar && opts.inTracked(c.name)
-      InformativeNulls.expand(f, elig, mode, opts.informativeNullSuffix)
-        .map { case (fld, role) => (fld, role, c) }
-    }
   }
 
   /** Pack whole pages into partitions of ~maxPartitionBytes. Every cut is a
@@ -128,27 +107,24 @@ object SasModule extends ReadstatFormats.FormatModule {
     if (parts.isEmpty) Seq((0L, n)) else parts.toSeq
   }
 
-  override def reader(
-      part: ReadstatInputPartition,
+  override protected def columns(
       ctx: ReadstatFormats.FileContext,
-      required: StructType,
-      opts: ReadstatOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): PartitionReader[InternalRow] = {
+      opts: ReadstatOptions): Seq[ReadstatFormats.SourceColumn] = {
     val meta = ctx.asInstanceOf[SasContext].meta
-    val cursor = new SasRowCursor(part, meta, SasDecode.filterEval(meta, opts, filters))
-    new SasPartitionReader(cursor, SasDecode.rowPlans(meta, opts, required))
+    val le = meta.header.littleEndian
+    meta.columns.toSeq.map { c =>
+      ReadstatFormats.SourceColumn(sparkField(c), informative = !c.isChar,
+        SasDecode.decoderFor(c, meta, opts), (row, base) => SasDecode.indicatorFor(c, le, row, base),
+        Some(SasDecode.appender(c, meta, opts)))
+    }
   }
 
-  override def columnar(
+  override protected def cursor(
       part: ReadstatInputPartition,
       ctx: ReadstatFormats.FileContext,
-      required: StructType,
       opts: ReadstatOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Option[(RowCursor, Array[ColumnAppender])] = {
-    val meta = ctx.asInstanceOf[SasContext].meta
-    val cursor = new SasRowCursor(part, meta, SasDecode.filterEval(meta, opts, filters))
-    Some((cursor, SasDecode.appenders(meta, opts, required)))
-  }
+      keep: (Array[Byte], Int) => Boolean): RowCursor =
+    new SasRowCursor(part, ctx.asInstanceOf[SasContext].meta, keep)
 }
 
 /** Per-column decode: closures for the row path, unboxed vector appenders
@@ -157,7 +133,6 @@ object SasModule extends ReadstatFormats.FormatModule {
   */
 object SasDecode {
   import Sas._
-  import graft.sources.readstat.InformativeNulls._
 
   def missingDouble(bits: Long): Boolean =
     (bits & 0x7fffffffffffffffL) >= 0x7ff0000000000000L
@@ -249,126 +224,54 @@ object SasDecode {
   @inline private def datetimeMicros(d: Double): Long =
     ((d - EpochShiftDays * SecondsPerDay) * 1e6).toLong
 
-  final case class Plan(c: Column, decode: (Array[Byte], Int) => Any)
-
-  def rowPlans(meta: Metadata, opts: ReadstatOptions, required: StructType): Array[Plan] = {
-    val le = meta.header.littleEndian
-    val roles = SasModule.fieldsWithRoles(meta, opts).map(t => t._1.name -> t).toMap
-    required.fields.map { f =>
-      val (_, role, c) = roles.getOrElse(f.name,
-        throw new IllegalArgumentException(s"sas: no such column '${f.name}'"))
-      val valueDecode = decoderFor(c, meta, opts)
-      val decode: (Array[Byte], Int) => Any = role match {
-        case RValue => valueDecode
-        case RIndicator => (row, base) => indicatorFor(c, le, row, base)
-        case RStruct => (row, base) =>
-          new GenericInternalRow(
-            Array[Any](valueDecode(row, base), indicatorFor(c, le, row, base)))
-        case RMerged =>
-          // per-COLUMN render closure — the kind dispatch resolves once, not
-          // per value (r4 verdict #1). Temporal: render the converted value,
-          // like the reference's cast-to-String merge (lib.rs:339-355).
-          val render: Double => String = kindFor(c) match {
-            case KDate => d => graft.sources.readstat.InformativeNulls.renderDays(dateDays(d))
-            case KDateTime =>
-              d => graft.sources.readstat.InformativeNulls.renderMicros(datetimeMicros(d))
-            case KTime =>
-              d => graft.sources.readstat.InformativeNulls.renderNanosOfDay((d * 1e9).toLong)
-            case _ => d => graft.sources.readstat.stata.DtaRowDecoder.renderNumber(d)
-          }
-          (row, base) => {
-            val ind = indicatorFor(c, le, row, base)
-            if (ind != null) ind
-            else {
-              val d = decodeNumeric(row, base + c.offset, c.length, le)
-              if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) null
-              else UTF8String.fromString(render(d))
-            }
-          }
-      }
-      Plan(c, decode)
-    }
-  }
-
-  /** Unboxed vector appenders — numerics/dates write primitives straight
+  /** Unboxed vector appender — numerics/dates write primitives straight
     * into the vector; char cells copy their byte span without an
     * intermediate UTF8String where the charset allows.
     */
-  def appenders(meta: Metadata, opts: ReadstatOptions, required: StructType): Array[ColumnAppender] = {
+  def appender(c: Column, meta: Metadata, opts: ReadstatOptions): ColumnAppender = {
     val le = meta.header.littleEndian
     val cs = meta.charset
     val csUtf8 = cs == java.nio.charset.StandardCharsets.UTF_8
-    val roles = SasModule.fieldsWithRoles(meta, opts).map(t => t._1.name -> t).toMap
-    required.fields.map { f =>
-      val (fld, role, c) = roles.getOrElse(f.name,
-        throw new IllegalArgumentException(s"sas: no such column '${f.name}'"))
-      if (role != RValue) ColumnAppender.boxed(rowPlans(meta, opts, StructType(Seq(fld))).head.decode, fld.dataType)
-      else kindFor(c) match {
-        case KNumeric => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
-          val d = decodeNumeric(row, base + c.offset, c.length, le)
-          if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) vec.putNull(i)
-          else vec.putDouble(i, d)
-        }
-        case KDate => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
-          val d = decodeNumeric(row, base + c.offset, c.length, le)
-          if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) vec.putNull(i)
-          else vec.putInt(i, dateDays(d))
-        }
-        case KDateTime => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
-          val d = decodeNumeric(row, base + c.offset, c.length, le)
-          if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) vec.putNull(i)
-          else vec.putLong(i, datetimeMicros(d))
-        }
-        case KTime => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
-          val d = decodeNumeric(row, base + c.offset, c.length, le)
-          if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) vec.putNull(i)
-          else vec.putLong(i, (d * 1e9).toLong)
-        }
-        case KChar => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
-          val off = base + c.offset
-          val span = charSpan(row, off, c.length)
-          val end = span.toInt
-          val ascii = (span >>> 32) == 0
-          if (end == 0) {
-            if (opts.missingStringAsNull) vec.putNull(i)
-            else vec.putByteArray(i, Array.emptyByteArray, 0, 0)
-          } else if (ascii) vec.putByteArray(i, row, off, end)
-          else if (csUtf8 && UTF8String.fromBytes(row, off, end).isValid) {
-            vec.putByteArray(i, row, off, end)
-          } else {
-            val bytes = new String(row, off, end, cs)
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            vec.putByteArray(i, bytes, 0, bytes.length)
-          }
+    kindFor(c) match {
+      case KNumeric => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
+        val d = decodeNumeric(row, base + c.offset, c.length, le)
+        if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) vec.putNull(i)
+        else vec.putDouble(i, d)
+      }
+      case KDate => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
+        val d = decodeNumeric(row, base + c.offset, c.length, le)
+        if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) vec.putNull(i)
+        else vec.putInt(i, dateDays(d))
+      }
+      case KDateTime => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
+        val d = decodeNumeric(row, base + c.offset, c.length, le)
+        if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) vec.putNull(i)
+        else vec.putLong(i, datetimeMicros(d))
+      }
+      case KTime => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
+        val d = decodeNumeric(row, base + c.offset, c.length, le)
+        if (missingDouble(java.lang.Double.doubleToRawLongBits(d))) vec.putNull(i)
+        else vec.putLong(i, (d * 1e9).toLong)
+      }
+      case KChar => (row: Array[Byte], base: Int, vec: WritableColumnVector, i: Int) => {
+        val off = base + c.offset
+        val span = charSpan(row, off, c.length)
+        val end = span.toInt
+        val ascii = (span >>> 32) == 0
+        if (end == 0) {
+          if (opts.missingStringAsNull) vec.putNull(i)
+          else vec.putByteArray(i, Array.emptyByteArray, 0, 0)
+        } else if (ascii) vec.putByteArray(i, row, off, end)
+        else if (csUtf8 && UTF8String.fromBytes(row, off, end).isValid) {
+          vec.putByteArray(i, row, off, end)
+        } else {
+          val bytes = new String(row, off, end, cs)
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          vec.putByteArray(i, bytes, 0, bytes.length)
         }
       }
     }
   }
-
-  /** P4 EXT decode-skip on pushed filters (residual filters re-applied
-    * above the scan).
-    */
-  def filterEval(
-      meta: Metadata,
-      opts: ReadstatOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): (Array[Byte], Int) => Boolean =
-    if (filters.isEmpty) null
-    else {
-      import graft.sources.readstat.RowFilter
-      val roles = SasModule.fieldsWithRoles(meta, opts).map(t => t._1.name -> t).toMap
-      val names = filters.flatMap(RowFilter.referenced).flatten.distinct
-      // role-AWARE decode (r5 fix, same as sav): filters on informative-null
-      // indicator/merged columns must evaluate the rendered column, not the
-      // raw value — otherwise decode-skip drops every matching row
-      val fdec = names.map { n =>
-        val (fld, _, _) = roles(n)
-        n -> rowPlans(meta, opts, StructType(Seq(fld))).head.decode
-      }.toMap
-      (buf: Array[Byte], base: Int) => {
-        val value = (n: String) => fdec(n)(buf, base)
-        filters.forall(f => RowFilter.keep(f, value))
-      }
-    }
 }
 
 /** Physical row iteration for one partition: page loading, MIX/META/DATA
@@ -378,7 +281,7 @@ object SasDecode {
 final class SasRowCursor(
     part: ReadstatInputPartition,
     meta: Sas.Metadata,
-    filterEval: (Array[Byte], Int) => Boolean) extends RowCursor {
+    keep: (Array[Byte], Int) => Boolean) extends RowCursor {
   import Sas._
 
   private val h = meta.header
@@ -430,7 +333,7 @@ final class SasRowCursor(
       if (toSkip > 0) toSkip -= 1
       else {
         remaining -= 1
-        if (filterEval == null || filterEval(curBuf, curBase)) return true
+        if (keep == null || keep(curBuf, curBase)) return true
         if (remaining <= 0) return false
       }
     }
@@ -498,30 +401,4 @@ final class SasRowCursor(
   }
 
   override def close(): Unit = fsin.close()
-}
-
-/** Row-path facade: cursor + boxed per-column decode (used when the scan
-  * needs coercion or struct columns; the hot path is the columnar reader).
-  */
-class SasPartitionReader(
-    cursor: SasRowCursor,
-    plans: Array[SasDecode.Plan])
-  extends PartitionReader[InternalRow] {
-
-  private val out = new GenericInternalRow(plans.length)
-
-  override def next(): Boolean = {
-    if (!cursor.nextRow()) return false
-    val b = cursor.buf
-    val o = cursor.base
-    var i = 0
-    while (i < plans.length) {
-      out.update(i, plans(i).decode(b, o))
-      i += 1
-    }
-    true
-  }
-
-  override def get(): InternalRow = out
-  override def close(): Unit = cursor.close()
 }

@@ -2,9 +2,6 @@ package graft.sources.readstat.spss
 
 import java.io.{BufferedInputStream, FilterInputStream, InputStream}
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -53,9 +50,6 @@ object SavModule extends ReadstatFormats.FormatModule {
     StructField(v.name, dt, nullable = true, metadata = mb.build())
   }
 
-  import graft.sources.readstat.InformativeNulls
-  import graft.sources.readstat.InformativeNulls._
-
   /** Eligible for informative nulls: numerics with user-declared missings
     * possible, and strings with declared missing codes (reference policy:
     * "numeric + declared-missing strings for SPSS", `src/lib.rs:65`).
@@ -63,20 +57,6 @@ object SavModule extends ReadstatFormats.FormatModule {
   private def eligible(v: Variable): Boolean =
     (!v.isString && v.missingDoubles.nonEmpty) ||
       (v.isString && v.missingStrings.nonEmpty)
-
-  def fieldsWithRoles(meta: Metadata, opts: ReadstatOptions): Seq[(StructField, Role, Variable)] = {
-    val mode = opts.inMode
-    InformativeNulls.checkCollisions(
-      meta.variables.map(_.name).toSeq,
-      meta.variables.filter(v => eligible(v) && opts.inTracked(v.name)).map(_.name).toSeq,
-      mode, opts.informativeNullSuffix)
-    meta.variables.toSeq.flatMap { v =>
-      val f = sparkField(v, meta, opts)
-      val elig = eligible(v) && opts.inTracked(v.name)
-      InformativeNulls.expand(f, elig, mode, opts.informativeNullSuffix)
-        .map { case (fld, role) => (fld, role, v) }
-    }
-  }
 
   override def parse(
       file: ReadstatIO.FileStamp,
@@ -87,113 +67,48 @@ object SavModule extends ReadstatFormats.FormatModule {
     val ranges =
       if (meta.header.compression != 0) Seq((0L, n)) // sequential decode
       else ReadstatFormats.fixedWidthRanges(n, meta.recordLen, opts)
-    ReadstatFormats.FilePlan(
-      StructType(fieldsWithRoles(meta, opts).map(_._1)), ranges, SavContext(meta))
+    plan(SavContext(meta), ranges, opts)
   }
 
-  override def reader(
-      part: ReadstatInputPartition,
+  override protected def columns(
       ctx: ReadstatFormats.FileContext,
-      required: StructType,
-      opts: ReadstatOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): PartitionReader[InternalRow] = {
+      opts: ReadstatOptions): Seq[ReadstatFormats.SourceColumn] = {
     val meta = ctx.asInstanceOf[SavContext].meta
     val dec = new SavDecode(meta, opts)
-    val cursor = new SavRowCursor(part, meta, dec.filterEval(filters), opts.zsavLookahead)
-    new SavPartitionReader(cursor, dec.plans(required))
+    meta.variables.toSeq.map(v => dec.column(v, sparkField(v, meta, opts), eligible(v)))
   }
 
-  override def columnar(
+  override protected def cursor(
       part: ReadstatInputPartition,
       ctx: ReadstatFormats.FileContext,
-      required: StructType,
       opts: ReadstatOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Option[(RowCursor, Array[ColumnAppender])] = {
-    val meta = ctx.asInstanceOf[SavContext].meta
-    val dec = new SavDecode(meta, opts)
-    val cursor = new SavRowCursor(part, meta, dec.filterEval(filters), opts.zsavLookahead)
-    Some((cursor, dec.appenders(required)))
-  }
+      keep: (Array[Byte], Int) => Boolean): RowCursor =
+    new SavRowCursor(part, ctx.asInstanceOf[SavContext].meta, keep, opts.zsavLookahead)
 }
 
-object SavDecode {
-  final case class Plan(v: Sav.Variable, byteOff: Int, decode: Array[Byte] => Any)
-}
-
-/** Per-column decode for one file: row-path closures, columnar appenders
-  * and pushed-filter evaluation, all built from the same variable logic.
+/** Per-column decode for one file: boxed decoders, indicators and
+  * columnar appenders, all built from the same variable logic.
   */
 final class SavDecode(meta: Sav.Metadata, opts: ReadstatOptions) {
   import Sav._
-  import SavDecode.Plan
-  import graft.sources.readstat.InformativeNulls._
 
   private val h = meta.header
   private val le = h.littleEndian
   private val cs = meta.charset
 
-  /** Plans for projected columns only (P1). */
-  def plans(required: StructType): Array[Plan] = {
-    val roles = SavModule.fieldsWithRoles(meta, opts).map(t => t._1.name -> t).toMap
-    required.fields.map { f =>
-      val (_, role, v) = roles.getOrElse(f.name,
-        throw new IllegalArgumentException(s"sav: no such column '${f.name}'"))
-      val off = v.offsetSegments * 8
-      val valueDecode = decoderFor(v, off)
-      val decode: Array[Byte] => Any = role match {
-        case RValue => valueDecode
-        case RIndicator => row => indicatorFor(v, row, off)
-        case RStruct => row =>
-          new GenericInternalRow(
-            Array[Any](valueDecode(row), indicatorFor(v, row, off)))
-        case RMerged =>
-          // per-COLUMN render closure — the format-class dispatch resolves
-          // once, not per value (r4 verdict #1). Temporal: render the
-          // converted value, like the reference's cast-to-String merge
-          // (lib.rs:339-355).
-          val render: Double => String = formatClass(v.formatType) match {
-            case Some(FDate) => d => graft.sources.readstat.InformativeNulls
-              .renderDays(((d.toLong - SecShift) / 86400L).toInt)
-            case Some(FDateTime) => d => graft.sources.readstat.InformativeNulls
-              .renderMicros((d.toLong - SecShift) * 1000000L)
-            case Some(FTime) => d => graft.sources.readstat.InformativeNulls
-              .renderNanosOfDay(d.toLong * 1000000000L)
-            case None =>
-              d => graft.sources.readstat.stata.DtaRowDecoder.renderNumber(d)
-          }
-          row => {
-            val ind = indicatorFor(v, row, off)
-            if (ind != null) ind
-            else if (v.isString) valueDecode(row)
-            else {
-              val d = numericOrNull(v, row, off)
-              if (d == null) null
-              else UTF8String.fromString(render(d.doubleValue()))
-            }
-          }
-      }
-      Plan(v, off, decode)
-    }
-  }
-
-  /** Unboxed appenders: plain numerics and date/time classes write
-    * primitives straight into the vector; strings/labels/roles fall back
-    * to the boxed row decode.
+  /** `v` as a source column with its natural `field`. Unboxed appenders
+    * cover plain numerics and the date/time classes; strings and
+    * value-labeled numerics take the boxed fallback.
     */
-  def appenders(required: StructType): Array[ColumnAppender] = {
-    val roles = SavModule.fieldsWithRoles(meta, opts).map(t => t._1.name -> t).toMap
-    val rowPlans = plans(required)
-    required.fields.zipWithIndex.map { case (f, fi) =>
-      val (_, role, v) = roles(f.name)
-      val off = v.offsetSegments * 8
-      val labeled = !v.isString && opts.valueLabelsAsStrings &&
-        v.valueLabelSet.flatMap(meta.valueLabels.get).exists(_._1.nonEmpty)
-      val boxed = ColumnAppender.boxed(
-        { (b: Array[Byte], _: Int) => rowPlans(fi).decode(b) }, f.dataType)
-      if (role != RValue || v.isString || labeled) boxed
+  def column(v: Variable, field: StructField, informative: Boolean): ReadstatFormats.SourceColumn = {
+    val off = v.offsetSegments * 8
+    val labeled = !v.isString && opts.valueLabelsAsStrings &&
+      v.valueLabelSet.flatMap(meta.valueLabels.get).exists(_._1.nonEmpty)
+    val appender: Option[ColumnAppender] =
+      if (v.isString || labeled) None
       else {
         val fmt = formatClass(v.formatType)
-        (row: Array[Byte], base: Int, vec: WritableColumnVector, ri: Int) => {
+        Some((row: Array[Byte], base: Int, vec: WritableColumnVector, ri: Int) => {
           val bits = Bin.i64(row, base + off, le)
           if (bits == MissingDoubleBits || bits == LowestDoubleBits || bits == HighestDoubleBits)
             vec.putNull(ri)
@@ -207,34 +122,11 @@ final class SavDecode(meta: Sav.Metadata, opts: ReadstatOptions) {
               case Some(FTime) => vec.putLong(ri, d.toLong * 1000000000L)
             }
           }
-        }
+        })
       }
-    }
+    ReadstatFormats.SourceColumn(field, informative, decoderFor(v, off),
+      (row, base) => indicatorFor(v, row, base + off), appender)
   }
-
-  /** P4 EXT: decode-skip on pushed filters (residual filters re-applied
-    * above the scan).
-    */
-  def filterEval(filters: Seq[org.apache.spark.sql.sources.Filter]): Array[Byte] => Boolean =
-    if (filters.isEmpty) null
-    else {
-      import graft.sources.readstat.RowFilter
-      val roles = SavModule.fieldsWithRoles(meta, opts).map(t => t._1.name -> t).toMap
-      val names = filters.flatMap(RowFilter.referenced).flatten.distinct
-      // role-AWARE decode (r5 fix): a filter on an informative-null
-      // indicator/merged column must evaluate that column's rendered value,
-      // not the underlying raw value — the raw decoder yields null exactly
-      // where the indicator is non-null, so decode-skip dropped every
-      // matching row
-      val fdec = names.map { n =>
-        val (fld, _, _) = roles(n)
-        n -> plans(StructType(Seq(fld))).head.decode
-      }.toMap
-      (row: Array[Byte]) => {
-        val value = (n: String) => fdec(n)(row)
-        filters.forall(f => RowFilter.keep(f, value))
-      }
-    }
 
   /** User-declared-missing indicator (reference `missing_numeric_indicator`
     * `src/spss/data.rs:938-992`): discrete → label-or-number, range →
@@ -295,7 +187,7 @@ final class SavDecode(meta: Sav.Metadata, opts: ReadstatOptions) {
     java.lang.Double.valueOf(d)
   }
 
-  private def decoderFor(v: Variable, off: Int): Array[Byte] => Any = {
+  private def decoderFor(v: Variable, off: Int): (Array[Byte], Int) => Any = {
     if (v.isString) {
       val missSet = v.missingStrings.toSet
       val labels: Map[String, String] =
@@ -308,27 +200,28 @@ final class SavDecode(meta: Sav.Metadata, opts: ReadstatOptions) {
         // already valid UTF-8
         val csUtf8 = cs == java.nio.charset.StandardCharsets.UTF_8
         val n0 = math.min(v.stringLen, v.widthSegments * 8)
-        (row: Array[Byte]) => {
+        (row: Array[Byte], base: Int) => {
+          val o = base + off
           var ascii = true
           var i = 0
-          while (i < n0) { if (row(off + i) < 0) ascii = false; i += 1 }
+          while (i < n0) { if (row(o + i) < 0) ascii = false; i += 1 }
           if (ascii || csUtf8) {
             var end = n0
-            while (end > 0 && (row(off + end - 1) == ' ' || row(off + end - 1) == 0)) end -= 1
+            while (end > 0 && (row(o + end - 1) == ' ' || row(o + end - 1) == 0)) end -= 1
             if (end == 0) { if (opts.missingStringAsNull) null else UTF8String.fromString("") }
             else {
-              val s = UTF8String.fromBytes(java.util.Arrays.copyOfRange(row, off, off + end))
+              val s = UTF8String.fromBytes(java.util.Arrays.copyOfRange(row, o, o + end))
               // invalid bytes in a UTF-8 file: lossy java decode (U+FFFD)
               if (ascii || s.isValid) s
-              else UTF8String.fromString(new String(row, off, end, cs))
+              else UTF8String.fromString(new String(row, o, end, cs))
             }
           } else {
-            val s = extractString(v, row, off)
+            val s = extractString(v, row, o)
             if (s.isEmpty && opts.missingStringAsNull) null else UTF8String.fromString(s)
           }
         }
-      } else (row: Array[Byte]) => {
-        val s = extractString(v, row, off)
+      } else (row: Array[Byte], base: Int) => {
+        val s = extractString(v, row, base + off)
         if (s.isEmpty && opts.missingStringAsNull) null
         else if (missSet.contains(s)) null
         else if (labels.nonEmpty) UTF8String.fromString(labels.getOrElse(s, s))
@@ -340,8 +233,8 @@ final class SavDecode(meta: Sav.Metadata, opts: ReadstatOptions) {
           v.valueLabelSet.flatMap(meta.valueLabels.get).map(_._1).getOrElse(Map.empty)
         else Map.empty
       if (labels.nonEmpty) {
-        (row: Array[Byte]) => {
-          val d = numericOrNull(v, row, off)
+        (row: Array[Byte], base: Int) => {
+          val d = numericOrNull(v, row, base + off)
           if (d == null) null
           else {
             val bits = java.lang.Double.doubleToRawLongBits(d.doubleValue())
@@ -353,22 +246,22 @@ final class SavDecode(meta: Sav.Metadata, opts: ReadstatOptions) {
           }
         }
       } else formatClass(v.formatType) match {
-        case Some(FDate) => (row: Array[Byte]) => {
-          val d = numericOrNull(v, row, off)
+        case Some(FDate) => (row: Array[Byte], base: Int) => {
+          val d = numericOrNull(v, row, base + off)
           if (d == null) null
           else java.lang.Integer.valueOf(((d.doubleValue().toLong - SecShift) / 86400L).toInt)
         }
-        case Some(FDateTime) => (row: Array[Byte]) => {
-          val d = numericOrNull(v, row, off)
+        case Some(FDateTime) => (row: Array[Byte], base: Int) => {
+          val d = numericOrNull(v, row, base + off)
           if (d == null) null
           else java.lang.Long.valueOf((d.doubleValue().toLong - SecShift) * 1000000L)
         }
-        case Some(FTime) => (row: Array[Byte]) => {
-          val d = numericOrNull(v, row, off)
+        case Some(FTime) => (row: Array[Byte], base: Int) => {
+          val d = numericOrNull(v, row, base + off)
           if (d == null) null
           else java.lang.Long.valueOf(d.doubleValue().toLong * 1000000000L)
         }
-        case None => (row: Array[Byte]) => numericOrNull(v, row, off)
+        case None => (row: Array[Byte], base: Int) => numericOrNull(v, row, base + off)
       }
     }
   }
@@ -410,7 +303,7 @@ final class SavDecode(meta: Sav.Metadata, opts: ReadstatOptions) {
 final class SavRowCursor(
     part: ReadstatInputPartition,
     meta: Sav.Metadata,
-    filterEval: Array[Byte] => Boolean,
+    keep: (Array[Byte], Int) => Boolean,
     zsavLookahead: Option[Int] = None) extends RowCursor {
   import Sav._
 
@@ -491,7 +384,7 @@ final class SavRowCursor(
     while (remaining > 0) {
       if (!readRow()) return false
       remaining -= 1
-      if (filterEval == null || filterEval(rowBuf)) return true
+      if (keep == null || keep(rowBuf, 0)) return true
     }
     false
   }
@@ -525,29 +418,6 @@ final class SavRowCursor(
     // unconditionally or executors leak one fd per scanned partition
     if (fsin != null) try fsin.close() catch { case _: java.io.IOException => }
   }
-}
-
-/** Row-path facade over the cursor (coercion/struct scans). */
-class SavPartitionReader(
-    cursor: SavRowCursor,
-    plans: Array[SavDecode.Plan])
-  extends PartitionReader[InternalRow] {
-
-  private val out = new GenericInternalRow(plans.length)
-
-  override def next(): Boolean = {
-    if (!cursor.nextRow()) return false
-    val b = cursor.buf
-    var i = 0
-    while (i < plans.length) {
-      out.update(i, plans(i).decode(b))
-      i += 1
-    }
-    true
-  }
-
-  override def get(): InternalRow = out
-  override def close(): Unit = cursor.close()
 }
 
 /** The sav bytecode decompressor (compression 1): control bytes in groups of

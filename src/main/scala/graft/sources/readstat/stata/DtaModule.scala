@@ -1,12 +1,8 @@
 package graft.sources.readstat.stata
 
 import org.apache.hadoop.fs.FSDataInputStream
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.types.StructType
 
-import graft.sources.readstat.{ReadstatFormats, ReadstatIO, ReadstatInputPartition, ReadstatOptions}
+import graft.sources.readstat.{ReadstatFormats, ReadstatIO, ReadstatInputPartition, ReadstatOptions, RowCursor}
 
 /** Stata `.dta` format module: driver-side metadata/labels/strL parse,
   * row-range partition planning via O(1) byte seek
@@ -31,10 +27,8 @@ object DtaModule extends ReadstatFormats.FormatModule {
     try {
       val meta = withLabels(fsin, file,
         Dta.parseMetadata(ByteReader(ReadstatIO.buffered(fsin, file.len))))
-      ReadstatFormats.FilePlan(
-        DtaRowDecoder.buildSchema(meta, opts),
-        ReadstatFormats.fixedWidthRanges(meta.header.nobs, meta.recordLen, opts),
-        DtaContext(meta, loadStrls(fsin, file, meta, opts)))
+      plan(DtaContext(meta, loadStrls(fsin, file, meta, opts)),
+        ReadstatFormats.fixedWidthRanges(meta.header.nobs, meta.recordLen, opts), opts)
     } finally fsin.close()
   }
 
@@ -69,48 +63,19 @@ object DtaModule extends ReadstatFormats.FormatModule {
     }
   }
 
-  /** P4 EXT: decode only the filter columns first; skip the row when the
-    * pushed predicates fail (Spark re-applies every filter above the scan).
-    */
-  private def filterEval(
-      ctx: DtaContext,
-      opts: ReadstatOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): (Array[Byte], Int) => Boolean =
-    if (filters.isEmpty) null
-    else {
-      import graft.sources.readstat.RowFilter
-      val full = DtaRowDecoder.buildSchema(ctx.meta, opts)
-      val names = filters.flatMap(RowFilter.referenced).flatten.distinct
-      val fschema = StructType(names.flatMap(n => full.fields.find(_.name == n)))
-      val fplans = DtaRowDecoder.buildPlans(ctx.meta, opts, fschema, ctx.strls)
-      val idx = fschema.fieldNames.zipWithIndex.toMap
-      (row: Array[Byte], base: Int) => {
-        val value = (n: String) => fplans.cols(idx(n)).decode(row, base)
-        filters.forall(f => RowFilter.keep(f, value))
-      }
-    }
-
-  override def reader(
-      part: ReadstatInputPartition,
+  override protected def columns(
       ctx: ReadstatFormats.FileContext,
-      required: StructType,
-      opts: ReadstatOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): PartitionReader[InternalRow] = {
+      opts: ReadstatOptions): Seq[ReadstatFormats.SourceColumn] = {
     val c = ctx.asInstanceOf[DtaContext]
-    val cursor = new DtaRowCursor(part, c.meta, filterEval(c, opts, filters))
-    new DtaPartitionReader(cursor, DtaRowDecoder.buildPlans(c.meta, opts, required, c.strls))
+    DtaRowDecoder.columns(c.meta, opts, c.strls)
   }
 
-  override def columnar(
+  override protected def cursor(
       part: ReadstatInputPartition,
       ctx: ReadstatFormats.FileContext,
-      required: StructType,
       opts: ReadstatOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Option[(graft.sources.readstat.RowCursor, Array[graft.sources.readstat.ColumnAppender])] = {
-    val c = ctx.asInstanceOf[DtaContext]
-    val cursor = new DtaRowCursor(part, c.meta, filterEval(c, opts, filters))
-    Some((cursor, DtaRowDecoder.buildAppenders(c.meta, opts, required, c.strls)))
-  }
+      keep: (Array[Byte], Int) => Boolean): RowCursor =
+    new DtaRowCursor(part, ctx.asInstanceOf[DtaContext].meta, keep)
 }
 
 /** Physical record iteration: one seek, then CHUNKED reads — whole-record
@@ -121,7 +86,7 @@ object DtaModule extends ReadstatFormats.FormatModule {
 final class DtaRowCursor(
     part: ReadstatInputPartition,
     meta: Dta.Metadata,
-    filterEval: (Array[Byte], Int) => Boolean) extends graft.sources.readstat.RowCursor {
+    keep: (Array[Byte], Int) => Boolean) extends RowCursor {
 
   private val recordLen = meta.recordLen
   private val fsin = ReadstatIO.open(part.path)
@@ -131,7 +96,7 @@ final class DtaRowCursor(
     fsin.seek(dataStart + part.rowStart * recordLen.toLong)
   }
 
-  private val chunkRows = graft.sources.readstat.RowCursor.chunkRows(part.rowCount, recordLen)
+  private val chunkRows = RowCursor.chunkRows(part.rowCount, recordLen)
   private val chunk = new Array[Byte](chunkRows * recordLen)
   private var rowsInChunk = 0
   private var rowInChunk = 0
@@ -173,34 +138,10 @@ final class DtaRowCursor(
       curBase = rowInChunk * recordLen
       rowInChunk += 1
       remaining -= 1
-      if (filterEval == null || filterEval(chunk, curBase)) return true
+      if (keep == null || keep(chunk, curBase)) return true
     }
     false
   }
 
   override def close(): Unit = fsin.close()
-}
-
-/** Row-path facade over the cursor (coercion/struct scans). */
-class DtaPartitionReader(
-    cursor: DtaRowCursor,
-    plans: DtaRowDecoder.Plans)
-  extends PartitionReader[InternalRow] {
-
-  private val out = new GenericInternalRow(plans.cols.length)
-
-  override def next(): Boolean = {
-    if (!cursor.nextRow()) return false
-    val b = cursor.buf
-    val o = cursor.base
-    var i = 0
-    while (i < plans.cols.length) {
-      out.update(i, plans.cols(i).decode(b, o))
-      i += 1
-    }
-    true
-  }
-
-  override def get(): InternalRow = out
-  override def close(): Unit = cursor.close()
 }

@@ -3,7 +3,7 @@ package graft.sources.readstat.stata
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.readstat.ReadstatOptions
+import graft.sources.readstat.{ColumnAppender, ReadstatFormats, ReadstatOptions}
 
 /** Maps dta variables to Spark fields and decodes fixed-width record cells
   * into Catalyst values (SURVEY.md §1.3 Stata column).
@@ -17,14 +17,6 @@ import graft.sources.readstat.ReadstatOptions
   */
 object DtaRowDecoder {
   import Dta._
-
-  import graft.sources.readstat.InformativeNulls
-  import graft.sources.readstat.InformativeNulls._
-
-  /** One column's decode plan: byte offset within the record + a decoder. */
-  final case class ColPlan(field: StructField, offset: Int, decode: (Array[Byte], Int) => Any)
-
-  final case class Plans(schema: StructType, cols: Array[ColPlan])
 
   /** Tag decode: -1 = valid value, 0 = system missing, 1..26 = .a..z
     * (reference `src/stata/value.rs:140-278`).
@@ -92,43 +84,17 @@ object DtaRowDecoder {
     if (d == Math.rint(d) && !d.isInfinite && Math.abs(d) < 1e15) d.toLong.toString
     else d.toString
 
-  /** Full output field list with the role of each (value / indicator /
-    * struct / merged) and its backing variable.
+  /** The file's source columns, each decoding its cell at its byte offset
+    * within the record. Value-labeled numerics decode to their labels;
+    * unboxed appenders cover plain numerics, dates and fixed-width strings
+    * (labeled and strL columns take the boxed fallback).
     */
-  def fieldsWithRoles(meta: Metadata, opts: ReadstatOptions): Seq[(StructField, Role, Variable)] = {
-    val mode = opts.inMode
-    val expanded = meta.variables.toSeq.map { v =>
-      val labeled = opts.valueLabelsAsStrings && v.valueLabelName.exists(n =>
-        meta.valueLabels.get(n).exists(_.nonEmpty))
-      val f = sparkField(v, opts, labeled)
-      val numeric = v.varType match {
-        case TStr(_) | TStrL => false
-        case _ => true
-      }
-      val eligible = numeric && !labeled && meta.header.version >= 113 && opts.inTracked(v.name)
-      (v, f, eligible)
-    }
-    InformativeNulls.checkCollisions(
-      meta.variables.map(_.name).toSeq,
-      expanded.collect { case (v, _, true) => v.name },
-      mode, opts.informativeNullSuffix)
-    expanded.flatMap { case (v, f, eligible) =>
-      InformativeNulls.expand(f, eligible, mode, opts.informativeNullSuffix)
-        .map { case (fld, role) => (fld, role, v) }
-    }
-  }
-
-  def buildSchema(meta: Metadata, opts: ReadstatOptions): StructType =
-    StructType(fieldsWithRoles(meta, opts).map(_._1))
-
-  /** Build decode plans for the projected columns only (P1 pushdown: cells
-    * outside the projection are never parsed).
-    */
-  def buildPlans(
+  def columns(
       meta: Metadata,
       opts: ReadstatOptions,
-      required: StructType,
-      strls: Map[(Int, Long), String]): Plans = {
+      strls: Map[(Int, Long), String]): IndexedSeq[ReadstatFormats.SourceColumn] = {
+    import org.apache.spark.sql.execution.vectorized.WritableColumnVector
+
     val h = meta.header
     val le = h.littleEndian
     val rules = missingRules(h.version)
@@ -136,23 +102,9 @@ object DtaRowDecoder {
     val version = h.version
 
     // absolute byte offset of each variable within a record
-    val offsets = new Array[Int](meta.variables.length)
-    var acc = 0
-    var i = 0
-    while (i < meta.variables.length) {
-      offsets(i) = acc
-      acc += meta.variables(i).varType.width
-      i += 1
-    }
-    val byName = meta.variables.zipWithIndex.map { case (v, idx) => v.name -> idx }.toMap
-    val roles: Map[String, (StructField, Role, Variable)] =
-      fieldsWithRoles(meta, opts).map(t => t._1.name -> t).toMap
+    val offsets = meta.variables.toIndexedSeq.scanLeft(0)(_ + _.varType.width)
 
-    val plans = required.fields.map { f =>
-      val (_, role, v) = roles.getOrElse(f.name,
-        throw new IllegalArgumentException(s"dta: no such column '${f.name}'"))
-      val idx = byName(v.name)
-      val off = offsets(idx)
+    meta.variables.toIndexedSeq.zip(offsets).map { case (v, off) =>
       val labelMap: Map[Int, String] =
         if (opts.valueLabelsAsStrings)
           v.valueLabelName.flatMap(meta.valueLabels.get).getOrElse(Map.empty)
@@ -296,101 +248,10 @@ object DtaRowDecoder {
           }
         }
       }
-      val finalDecode: (Array[Byte], Int) => Any = role match {
-        case RValue => decode
-        case RIndicator => (b, base) => {
-          val k = tagOf(v.varType, b, base + off, le, rules)
-          if (k >= 1) org.apache.spark.unsafe.types.UTF8String.fromString(tagLabel(k)) else null
-        }
-        case RStruct => (b, base) => {
-          val k = tagOf(v.varType, b, base + off, le, rules)
-          val ind = if (k >= 1) org.apache.spark.unsafe.types.UTF8String.fromString(tagLabel(k)) else null
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](decode(b, base), ind))
-        }
-        case RMerged =>
-          // per-COLUMN render closure: the temporal-kind dispatch resolves
-          // once here, not per value (r4 verdict #1). Temporal columns
-          // render the CONVERTED value (the reference casts the decoded
-          // Date/Datetime series to String).
-          val render: (Array[Byte], Int) => String = kind match {
-            case Some(KDate) => (b, base) => {
-              val dv = decode(b, base)
-              if (dv == null) null
-              else graft.sources.readstat.InformativeNulls
-                .renderDays(dv.asInstanceOf[java.lang.Integer].intValue())
-            }
-            case Some(KDateTime) => (b, base) => {
-              val dv = decode(b, base)
-              if (dv == null) null
-              else graft.sources.readstat.InformativeNulls
-                .renderMicros(dv.asInstanceOf[java.lang.Long].longValue())
-            }
-            case Some(KTime(_)) => (b, base) => {
-              val dv = decode(b, base)
-              if (dv == null) null
-              else graft.sources.readstat.InformativeNulls
-                .renderNanosOfDay(dv.asInstanceOf[java.lang.Long].longValue())
-            }
-            case None => (b, base) => {
-              val d = numRaw(b, base + off)
-              if (d == null) null else renderNumber(d.doubleValue())
-            }
-          }
-          (b, base) => {
-            val k = tagOf(v.varType, b, base + off, le, rules)
-            if (k >= 1) org.apache.spark.unsafe.types.UTF8String.fromString(tagLabel(k))
-            else {
-              val s = render(b, base)
-              if (s == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(s)
-            }
-          }
+      val indicator: (Array[Byte], Int) => UTF8String = (b, base) => {
+        val k = tagOf(v.varType, b, base + off, le, rules)
+        if (k >= 1) UTF8String.fromString(tagLabel(k)) else null
       }
-      ColPlan(f, off, finalDecode)
-    }
-    Plans(required, plans)
-  }
-
-  /** Unboxed vector appenders for the columnar path. Hot shapes (plain
-    * numerics, dates, fixed-width strings as RValue) write primitives /
-    * byte spans straight into the vector; labeled, strL and
-    * informative-null columns fall back to the boxed row decode so the two
-    * paths cannot diverge.
-    */
-  def buildAppenders(
-      meta: Metadata,
-      opts: ReadstatOptions,
-      required: StructType,
-      strls: Map[(Int, Long), String]): Array[graft.sources.readstat.ColumnAppender] = {
-    import org.apache.spark.sql.execution.vectorized.WritableColumnVector
-    import graft.sources.readstat.ColumnAppender
-
-    val h = meta.header
-    val le = h.littleEndian
-    val rules = missingRules(h.version)
-    val cs = meta.charset
-    val csUtf8 = cs == java.nio.charset.StandardCharsets.UTF_8
-
-    val offsets = new Array[Int](meta.variables.length)
-    var acc = 0
-    var i = 0
-    while (i < meta.variables.length) {
-      offsets(i) = acc
-      acc += meta.variables(i).varType.width
-      i += 1
-    }
-    val byName = meta.variables.zipWithIndex.map { case (v, idx) => v.name -> idx }.toMap
-    val roles: Map[String, (StructField, Role, Variable)] =
-      fieldsWithRoles(meta, opts).map(t => t._1.name -> t).toMap
-    val fallbackPlans = buildPlans(meta, opts, required, strls)
-
-    required.fields.zipWithIndex.map { case (f, fi) =>
-      val (_, role, v) = roles(f.name)
-      val off = offsets(byName(v.name))
-      val labeled = opts.valueLabelsAsStrings && v.valueLabelName.exists(n =>
-        meta.valueLabels.get(n).exists(_.nonEmpty))
-      val kind = timeFormatKind(v.format, v.varType)
-      val boxed = ColumnAppender.boxed(fallbackPlans.cols(fi).decode, f.dataType)
 
       // missing predicate + raw double value, matching numRaw's semantics
       // exactly (.a-.z on float/double decode as NaN values, not null —
@@ -431,10 +292,9 @@ object DtaRowDecoder {
         case _ => Double.NaN
       }
 
-      if (role != RValue || labeled) boxed
-      else v.varType match {
+      val appender: Option[ColumnAppender] = if (labeled) None else v.varType match {
         case TStr(w) =>
-          (b: Array[Byte], base: Int, vec: WritableColumnVector, ri: Int) => {
+          Some((b: Array[Byte], base: Int, vec: WritableColumnVector, ri: Int) => {
             val o = base + off
             var n = 0
             var ascii = true
@@ -454,9 +314,9 @@ object DtaRowDecoder {
                 .getBytes(java.nio.charset.StandardCharsets.UTF_8)
               vec.putByteArray(ri, bytes, 0, bytes.length)
             }
-          }
-        case TStrL => boxed
-        case _ => kind match {
+          })
+        case TStrL => None
+        case _ => Some(kind match {
           case Some(KDate) =>
             (b: Array[Byte], base: Int, vec: WritableColumnVector, ri: Int) =>
               if (numMissing(b, base)) vec.putNull(ri)
@@ -503,10 +363,17 @@ object DtaRowDecoder {
                   else vec.putDouble(ri, Double.NaN)
                 } else vec.putDouble(ri, java.lang.Double.longBitsToDouble(bits))
               }
-            case _ => boxed
+            case _ => throw new IllegalStateException("unreachable")
           }
-        }
+        })
       }
+
+      val numeric = v.varType match {
+        case TStr(_) | TStrL => false
+        case _ => true
+      }
+      ReadstatFormats.SourceColumn(sparkField(v, opts, labeled),
+        informative = numeric && !labeled && version >= 113, decode, indicator, appender)
     }
   }
 }

@@ -131,4 +131,23 @@ class PlanOnceSpec extends SparkSpec {
     assert(df.agg(sum("x")).collect()(0).getDouble(0) === total)
     assert(reports.isEmpty, "later actions neither re-parse nor re-report the quarantined file")
   }
+
+  test("FAILFAST: a corrupt file added after load is parsed once by the failing action, with the same error") {
+    val d = dir("dta")
+    val df = spark.read.format("readstat").load(d)
+    assert(df.count() === Files20 * RowsPerFile)
+    val bad = Paths.get(d).resolve("zz-bad.dta")
+    Files.write(bad, Array.fill[Byte](4096)(0x5A))
+    def root(t: Throwable): Throwable = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last
+    val (direct, parseBytes) =
+      bytesReadBy(intercept[Exception](spark.read.format("readstat").load(bad.toString)))
+    assert(parseBytes > 0L)
+    // a join asks the scan for its statistics before it plans partitions
+    val joined = df.join(spark.range(3).select(col("id").cast("double").as("x")), "x")
+    val (failed, actionBytes) = bytesReadBy(intercept[Exception](joined.collect()))
+    assert(root(failed).getClass === root(direct).getClass)
+    assert(root(failed).getMessage === root(direct).getMessage)
+    assert(actionBytes === parseBytes,
+      s"the failing action read $actionBytes bytes; one parse of the corrupt file reads $parseBytes")
+  }
 }
