@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.util.Sessions
+
 import scala.jdk.CollectionConverters._
 
 object Bench {
@@ -77,40 +79,6 @@ object Bench {
 
   // ---------------------------------------------------------------- child
 
-  /** One resolution of the core count, shared by the query session, the
-    * embedded scan section AND the forked ScanBench child (r12 ADVICE: the
-    * fork path inherited ScanBench.main's own default of 32 while the
-    * SPARK_GRAFT_BENCH_FORK=0 embedded path ran ScanBench.run at Bench's
-    * default of 4 — with the env var unset the two modes measured 8× apart
-    * in parallelism, making scan numbers non-comparable across modes).
-    * The driver always sets SPARK_GRAFT_CPUS explicitly, so committed
-    * artifacts are unaffected; this pins local/dev runs to one config.
-    */
-  private def resolvedCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-
-
-  private def newSession(): SparkSession = {
-    val cpus = resolvedCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // allow shuffled-hash joins where the per-partition build side fits
-      // (guide §3.1/§9): sort-merge pays two sorts the hash join skips;
-      // scale-independent planner guidance, overridable via env for A/B
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      // events.parquet has TIMESTAMP(NANOS); read as nano longs (exact).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Per-query best-of-2 (same policy as ScanBench): round-level contention
     * inflates single-shot numbers, never deflates them — r2's q37 tripled
     * with an unchanged plan. Both runs are recorded for judgeability.
@@ -178,7 +146,7 @@ object Bench {
     val calPre = calibrate()
     val calParPre = calibratePar()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = newSession()
+    val spark = Sessions.start(Sessions.bench, "graft-bench")
     // warmup: absorb JVM/codegen/scan-cache startup so per-query numbers
     // measure the queries, not the first query's JIT
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
@@ -188,7 +156,7 @@ object Bench {
     // SPARK_GRAFT_BIGSCAN=0
     val scan =
       if (sys.env.get("SPARK_GRAFT_BIGSCAN").contains("0")) Map.empty[String, Double]
-      else try ScanBench.run(spark, resolvedCpus.toInt) catch { case _: Throwable => Map.empty[String, Double] }
+      else try ScanBench.run(spark, Sessions.cores) catch { case _: Throwable => Map.empty[String, Double] }
     val selected =
       if (args.nonEmpty) SparkEntry.queries.keys.toSeq.filter(args.contains)
       else SparkEntry.queries.keys.toSeq
@@ -236,7 +204,7 @@ object Bench {
     // captured tail always carries the total, the query count and the
     // failure count alongside the skew/calibration evidence.
     val nFailed = sorted.count(_._2 < 0)
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$qruns,"max_run_skew":${f"$maxSkew%.2f"},"max_run_skew_all":${f"$maxSkewAll%.2f"},$calKeys,"scan":$scanJson,"sf":"$sfDir","cpus":$resolvedCpus,"n_queries":${sorted.size},"n_failed":$nFailed,"total_sec":${f"$total%.3f"}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$qruns,"max_run_skew":${f"$maxSkew%.2f"},"max_run_skew_all":${f"$maxSkewAll%.2f"},$calKeys,"scan":$scanJson,"sf":"$sfDir","cpus":${Sessions.cores},"n_queries":${sorted.size},"n_failed":$nFailed,"total_sec":${f"$total%.3f"}}"""
   }
 
   /** Persist the full line to a file: BENCH_r04's captured stdout was
@@ -248,24 +216,24 @@ object Bench {
     * BENCH_LOCAL.json is reserved for full-suite sf0.1 runs, anything
     * else lands in a scale-suffixed side file.
     */
-  private def persist(line: String, sfDir: String): Unit = {
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    // the file is also keyed on the CORE COUNT (r17): the driver re-runs
-    // the bench at a lower core count to measure scaling, and that run
-    // used to overwrite the canonical 32-core window (r16's committed
-    // BENCH_LOCAL.json was silently the c8 window), which both destroyed
-    // the evidence trail and poisoned the per-query anomaly priors (a
-    // 32-core run judged against 8-core bests flags nothing; the next
-    // 8-core run judged against 32-core bests flags half the suite). The
-    // canonical driver config (sf0.1, 32 cores) keeps the historical
-    // plain name; anything else lands in a config-suffixed side file.
-    val out = if (sfName == "sf0.1" && resolvedCpus == "32") "BENCH_LOCAL.json"
-              else if (sfName == "sf0.1") s"BENCH_LOCAL_c$resolvedCpus.json"
-              else s"BENCH_LOCAL_$sfName.json"
+  private def persist(line: String, sfDir: String): Unit =
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get(out),
+      java.nio.file.Paths.get(artifactName(sfDir)),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Exception => () }
+
+  /** The local artifact of this (scale factor, cores) config. The file is
+    * keyed on the core count (r17): the driver re-runs the bench at a lower
+    * core count to measure scaling, and that run used to overwrite the
+    * canonical 32-core window and poison the per-query anomaly priors. The
+    * canonical driver config (sf0.1, 32 cores) keeps the historical plain
+    * name; anything else lands in a config-suffixed side file.
+    */
+  private def artifactName(sfDir: String): String = {
+    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
+    if (sfName == "sf0.1" && Sessions.cores == 32) "BENCH_LOCAL.json"
+    else if (sfName == "sf0.1") s"BENCH_LOCAL_c${Sessions.cores}.json"
+    else s"BENCH_LOCAL_$sfName.json"
   }
 
   // ----------------------------------------------------------- orchestrator
@@ -368,7 +336,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val groups = names.grouped(groupSize).toSeq
     val childEnv = Map("SPARK_GRAFT_BIGSCAN" -> "0",
-      "SPARK_GRAFT_CPUS" -> resolvedCpus)
+      "SPARK_GRAFT_CPUS" -> Sessions.cores.toString)
 
     // the scan section keeps its own fresh JVM (it always wanted one: the
     // r4 verdict's Bench-embedded scans inherited the query suite's heap);
@@ -376,7 +344,7 @@ object Bench {
     val scanJson =
       if (sys.env.get("SPARK_GRAFT_BIGSCAN").contains("0")) "{}"
       else forkJson("graft.ScanBench", Nil,
-        Map("SPARK_GRAFT_CPUS" -> resolvedCpus)).getOrElse {
+        Map("SPARK_GRAFT_CPUS" -> Sessions.cores.toString)).getOrElse {
         System.err.println("[bench] scan child failed — scan section empty")
         "{}"
       }
@@ -514,7 +482,7 @@ object Bench {
     // the artifact never loses coverage to a flaky child
     if (failed.nonEmpty) {
       System.err.println(s"[bench] in-process fallback for ${failed.size} queries")
-      val spark = newSession()
+      val spark = Sessions.start(Sessions.bench, "graft-bench")
       try SparkEntry.entry(spark).count() catch { case _: Throwable => }
       results ++= runGroup(spark, sfDir, failed.toSeq)
       spark.stop()
@@ -537,11 +505,7 @@ object Bench {
       // within one config — r16's c8 run overwrote the canonical file and
       // the next 32-core window would have judged itself against 8-core
       // bests (everything "fast", nothing flagged)
-      val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-      val ref = if (sfName == "sf0.1" && resolvedCpus == "32") "BENCH_LOCAL.json"
-                else if (sfName == "sf0.1") s"BENCH_LOCAL_c$resolvedCpus.json"
-                else s"BENCH_LOCAL_$sfName.json"
-      val p = java.nio.file.Paths.get(ref)
+      val p = java.nio.file.Paths.get(artifactName(sfDir))
       if (!java.nio.file.Files.exists(p)) Map.empty
       else {
         val node = om.readTree(java.nio.file.Files.readString(p)).get("queries")

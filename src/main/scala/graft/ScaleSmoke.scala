@@ -6,6 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.util.Sessions
+
 /** 10× dedup-chain scale smoke (r5 verdict #5): generates a synthetic
   * documents corpus 10× the sf0.1 fixture (same columns: doc_id, text,
   * lang, source, n_chars; ~45–60-word docs with planted near-duplicates),
@@ -234,37 +236,13 @@ object ScaleSmoke {
   private val domWallFloor = 5.0
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_SMOKE_DOCS", "50000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 4 reducer waves per core (r16): at shuffle.partitions = cores,
-      // every exchange-fed stage is ONE wave of long tasks — max_task ≈
-      // wall however even the work is, which is the shape the dominance
-      // gate exists to catch when it's STRUCTURAL. A real deployment runs
-      // many more reducers than cores (the brief's own sizing advice);
-      // the smoke emulates many-split SCANS via the 1 MB split config
-      // below, and this is the same emulation for the shuffle side. The
-      // bench keeps the driver-contract 32 — it measures sf0.1 latency,
-      // not scale shape.
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the 10× corpus is still only ~25 MB of parquet — at default split
-      // sizing Spark packs it into ONE input task, serializing the
-      // corpus-sized signature/shingle stages. A real 100 TB corpus has
-      // thousands of splits; emulate that shape so the smoke measures the
-      // operators' task spread, not small-file packing.
-      .config("spark.sql.files.maxPartitionBytes", (1L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (64 << 10).toString)
-      // likewise AQE's 64 MB advisory size would coalesce every shuffle of
-      // this corpus into ONE partition — a small-data artifact, not the
-      // 100 TB shape the smoke is probing
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (1L << 20).toString)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", (256 << 10).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // four reducer waves per core and 1 MB splits (r16, see
+    // `Sessions.smoke`): at shuffle.partitions = cores every exchange-fed
+    // stage is ONE wave of long tasks, so max_task ≈ wall however even the
+    // work is — the shape the dominance gate exists to catch only when it
+    // is structural
+    val spark = Sessions.start(Sessions.smoke, "graft-scalesmoke")
 
     val nSkewDocs = sys.env.getOrElse("SPARK_GRAFT_SKEW_DOCS", "10000").toInt
 
@@ -381,7 +359,7 @@ object ScaleSmoke {
     // full speed while 32-wide stage throughput drops 3–4×
     val calParPre = Bench.calibratePar()
     val out = new StringBuilder
-    out.append(s"""{"docs":$nDocs,"vecs":$nVecs,"skew_docs":$nSkewDocs,"hotsrc_docs":$nHotDocs,"cpus":$cpus""")
+    out.append(s"""{"docs":$nDocs,"vecs":$nVecs,"skew_docs":$nSkewDocs,"hotsrc_docs":$nHotDocs,"cpus":${Sessions.cores}""")
     out.append(f""","calibration_pre_sec":$calPre%.3f,"calibration_par_pre_sec":$calParPre%.3f""")
     var worstStraggler = 0.0
 

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Sessions
+
 /** Large-file scan benchmark (BASELINE.md sanity bar: ≥100 MB/s/core):
   * generates a ~1 GB-per-8-cores uncompressed `.dta` and `.sas7bdat` once
   * (cached in /tmp across runs), then times a full-column read and a
@@ -33,16 +35,10 @@ object ScanBench {
     * inherit the query suite's heap state and machine contention).
     */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.bench, "graft-scanbench")
     // optional section filter (`runMain graft.ScanBench media`): bisect one
     // section's throughput without paying the 1 GB scan generations
-    val out = run(spark, cpus.toInt, only = args.toSet)
+    val out = run(spark, Sessions.cores, only = args.toSet)
     println(out.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}"))

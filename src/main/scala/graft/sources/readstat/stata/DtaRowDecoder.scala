@@ -19,7 +19,8 @@ object DtaRowDecoder {
   import Dta._
 
   /** Tag decode: -1 = valid value, 0 = system missing, 1..26 = .a..z
-    * (reference `src/stata/value.rs:140-278`).
+    * (reference `src/stata/value.rs:140-278`). Float `.a`..`.z` sit at
+    * 0x7F000800 + k·0x800 and double ones at 0x7FE0010000000000 + k·2^40.
     */
   private def tagOf(vt: VarType, b: Array[Byte], o: Int, le: Boolean, rules: MissingRules): Int = {
     if (!rules.sentinelEnabled) return -1 // pre-113 files have no extended missings
@@ -37,14 +38,14 @@ object DtaRowDecoder {
         val bits = Bin.u32(b, o, le)
         if ((bits & 0x80000000L) != 0 || bits <= rules.maxFloatBits) -1
         else {
-          val k = ((bits - rules.missingFloatBits) / 0x80000L).toInt
+          val k = ((bits - rules.missingFloatBits) / 0x800L).toInt
           if (k >= 0 && k <= 26) k else 0
         }
       case TDouble =>
         val bits = Bin.u64(b, o, le)
         if (bits < 0 || java.lang.Long.compareUnsigned(bits, rules.maxDoubleBits) <= 0) -1
         else {
-          val k = bits - rules.missingDoubleBits
+          val k = (bits - rules.missingDoubleBits) >> 40
           if (k >= 0 && k <= 26) k.toInt else 0
         }
       case _ => -1

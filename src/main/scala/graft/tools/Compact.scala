@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.readstat.Compaction
+import graft.util.Sessions
 
 /** Sink-directory maintenance: `runMain graft.tools.Compact <dir>
   * [--keep N] [--target-mb M]` — fold a streaming sink's accumulated
@@ -22,13 +21,7 @@ object Compact {
     }
     val keep = flag("--keep", 1L).toInt
     val targetBytes = flag("--target-mb", 128L) << 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-compact")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.start(Sessions.bench, "graft-compact")
     try {
       Compaction.compact(spark, args(0), keep, targetBytes) match {
         case Some(r) => println(s"[compact] folded ${r.foldedEpochs} epochs + " +

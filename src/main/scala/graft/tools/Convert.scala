@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.Sessions
+
 /** Bulk lake conversion: `runMain graft.tools.Convert <in> <out> [--strict]`
   * — the capstone composition of the source layer's scale machinery, and
   * the first job a real migration runs: turn a directory tree of
@@ -25,13 +27,7 @@ object Convert {
     require(args.length >= 2,
       "usage: Convert <inputDirOrFile> <outputParquetDir> [--strict]")
     val strict = args.contains("--strict")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-convert")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.start(Sessions.bench, "graft-convert")
     try {
       val n = convert(spark, args(0), args(1), strict)
       println(s"[convert] wrote $n rows: ${args(0)} -> ${args(1)}" +

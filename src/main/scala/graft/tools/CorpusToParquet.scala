@@ -2,7 +2,7 @@ package graft.tools
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Dumps every corpus `.sas7bdat`/`.dta` through the DSv2 source to parquet
   * (raw codes, no value-label decode) so an INDEPENDENT parser (pandas
@@ -12,12 +12,7 @@ import org.apache.spark.sql.SparkSession
 object CorpusToParquet {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/corpus_parquet"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start(Sessions.bench, "graft-corpus-to-parquet")
     val files = CorpusCheck.corpusFiles().filter { f =>
       val n = f.getName.toLowerCase
       n.endsWith(".sas7bdat") || n.endsWith(".dta")

@@ -4,11 +4,12 @@ import java.io.File
 
 import scala.util.Random
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.sources.readstat.sas.SasFixtureWriter
 import graft.sources.readstat.stata.DtaWriter
+import graft.util.Sessions
 
 /** Writer validation against an INDEPENDENT reader: emits deterministic
   * fuzz .dta / .sas7bdat files (unicode, boundary doubles, strL-length
@@ -52,12 +53,7 @@ object FuzzFixtures {
     val filesDir = new File(outRoot, "files")
     val pqDir = new File(outRoot, "parquet")
     filesDir.mkdirs(); pqDir.mkdirs()
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start(Sessions.bench, "graft-fuzz-fixtures")
     import scala.jdk.CollectionConverters._
 
     for (seed <- 1 to 4; fmt <- Seq("dta", "sas")) {

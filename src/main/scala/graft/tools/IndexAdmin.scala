@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfPqIndexStore, SimilarityOps}
 import graft.streaming.IndexMaintenance
+import graft.util.Sessions
 
 /** IVF-PQ index-directory administration: the operator-facing face of the
   * q122→q133 lifecycle.
@@ -36,14 +36,7 @@ object IndexAdmin {
       val i = args.indexOf(name)
       if (i >= 0 && i + 1 < args.length) args(i + 1).toDouble else dflt
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-index-admin")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.bench, "graft-index-admin")
 
     /** the corpus in the audit/rebuild shape (the fixture embeddings
       * schema; production lakes point this at their vector table) */

@@ -1,11 +1,28 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
 
-/** Dumps `explain("formatted")` for the headline queries to `PLANS.md` — a
-  * committed artifact so plan-level claims (pushdown, broadcasts, codegen
-  * spans, no BNLJ/cartesian) are auditable without running anything.
-  * Regenerate after plan-affecting changes: `sbt "runMain graft.tools.PlanDump"`.
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.util.Sessions
+
+/** Formatted `explain` of graft queries under the shared engine config
+  * (`Sessions.test`: the bench's config on four cores, so the output does
+  * not depend on the machine), at sf0.001 unless `SPARK_GRAFT_SF_DIR` says
+  * otherwise. Plan shape (exchanges, join strategies, pushdown) does not
+  * change with scale for these queries; the bench carries the timings.
+  *
+  *   sbt "runMain graft.tools.PlanDump"
+  *     writes `PLANS.md`, the headline queries' plans, so plan-level claims
+  *     are auditable without running anything;
+  *   sbt "runMain graft.tools.PlanDump <tag> <suffix> <query...>"
+  *     writes `plans/<tag>/<query>_<suffix>.txt`, before/after evidence
+  *     for a plan-changing optimisation.
+  *
+  * Output is anchored at the repo root (the nearest ancestor of the cwd
+  * holding build.sbt). Building a query frame runs the operators' internal
+  * materializations, so each query executes once at the chosen scale.
   */
 object PlanDump {
 
@@ -48,43 +65,63 @@ object PlanDump {
     "q143_manifest_delta_dedup", "q144_bm25_topk",
     "q145_ivfpq_refined_search")
 
+  /** Nearest ancestor (cwd included) containing build.sbt, else the cwd. */
+  private def repoRoot: Path = {
+    val cwd = Paths.get("").toAbsolutePath
+    Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
+      .find(p => Files.exists(p.resolve("build.sbt"))).getOrElse(cwd)
+  }
+
+  private def header(sf: String) =
+    s"""# Headline query plans (formatted explain, $sf, local[4])
+      |
+      |Generated by `sbt "runMain graft.tools.PlanDump"` under the shared engine
+      |config (`graft.util.Sessions`, the bench's join planner) — regenerate
+      |after plan-affecting changes. Things to check: parquet scans show
+      |PushedFilters + pruned ReadSchema; small sides broadcast;
+      |WholeStageCodegen spans cover the hot projections (the native
+      |graft_* expressions participate); the only exchanges are the keyed
+      |shuffles each operator's scaladoc declares. These are the static
+      |plans: a shuffled join is a ShuffledHashJoin here where the planner
+      |sees one side three times smaller than the other, and AQE turns a
+      |SortMergeJoin into one at run time when every map-output partition
+      |of its build side fits the 64m local-map threshold.
+      |BroadcastNestedLoopJoin appears ONLY with a
+      |deliberately tiny broadcast build side — q27's range join, q37's
+      |3-row query set, q43/q123's k×dim centroid table, q48's scalar N,
+      |q108's 1-row (N, V) model scalars, q110's source-pair dim, q111's
+      |1-row candidate count, q122's saved centroid/codebook tables against
+      |the 3-row query side — the intended plan for non-equi/cross joins
+      |against small data; the outlawed shape (corpus-sized BNLJ or
+      |CartesianProduct in the pair pipelines) is pinned absent by
+      |PairPlanSpec and GraphOpsSpec.
+      |""".stripMargin
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = "/root/testdata/sf0.001"
-    val sb = new StringBuilder
-    sb.append("# Headline query plans (formatted explain, sf0.001, local[4])\n\n")
-    sb.append("Generated by `sbt \"runMain graft.tools.PlanDump\"` — regenerate after\n")
-    sb.append("plan-affecting changes. Things to check: parquet scans show\n")
-    sb.append("PushedFilters + pruned ReadSchema; small sides broadcast;\n")
-    sb.append("WholeStageCodegen spans cover the hot projections (the native\n")
-    sb.append("graft_* expressions participate); the only exchanges are the keyed\n")
-    sb.append("shuffles each operator's scaladoc declares. BroadcastNestedLoopJoin\n")
-    sb.append("appears ONLY with a deliberately tiny broadcast build side — q27's\n")
-    sb.append("range join, q37's 3-row query set, q43/q123's k×dim centroid\n")
-    sb.append("table, q48's scalar N, q108's 1-row (N, V) model scalars, q110's\n")
-    sb.append("source-pair dim, q111's 1-row candidate count, q122's saved\n")
-    sb.append("centroid/codebook tables against the 3-row query side — the\n")
-    sb.append("intended plan for non-equi/cross\n")
-    sb.append("joins against small data; the outlawed shape (corpus-sized BNLJ or\n")
-    sb.append("CartesianProduct in the pair pipelines) is pinned absent by\n")
-    sb.append("PairPlanSpec and GraphOpsSpec.\n")
-    for (q <- headline) {
+    require(args.isEmpty || args.length >= 3,
+      "usage: PlanDump | PlanDump <tag> <suffix> <query...>")
+    val spark = Sessions.start(Sessions.test, "graft-plandump")
+    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    def explain(q: String): String = {
       val df = graft.SparkEntry.queries(q)(spark, d)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $q\n\n```\n").append(plan).append("```\n")
+      val plan = df.queryExecution.explainString(FormattedMode)
       df.unpersist(blocking = false)
       spark.catalog.clearCache()
+      plan
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[plandump] wrote PLANS.md (${headline.size} queries)")
+    def write(p: Path, text: String): Unit = {
+      Files.createDirectories(p.getParent)
+      Files.write(p, text.getBytes(StandardCharsets.UTF_8))
+      println(s"[plandump] wrote $p")
+    }
+    if (args.isEmpty)
+      write(repoRoot.resolve("PLANS.md"), header(Paths.get(d).getFileName.toString) +
+        headline.map(q => s"\n## $q\n\n```\n${explain(q)}```\n").mkString)
+    else {
+      val (tag, suffix) = (args(0), args(1))
+      for (q <- args.drop(2))
+        write(repoRoot.resolve(s"plans/$tag/${q}_$suffix.txt"), explain(q))
+    }
     spark.stop()
   }
 }

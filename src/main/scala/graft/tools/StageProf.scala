@@ -3,7 +3,8 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+
+import graft.util.Sessions
 
 /** Per-stage attribution for one query at bench config (r16 optimization
   * evidence): one untimed warm run (codegen/JIT), then one measured run
@@ -18,15 +19,7 @@ object StageProf {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: StageProf <sfDir> <query...>")
     val (d, names) = (args(0), args.drop(1).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start(Sessions.bench, "graft-stageprof")
     for (q <- names) {
       val fn = graft.SparkEntry.queries(q)
       spark.catalog.clearCache()

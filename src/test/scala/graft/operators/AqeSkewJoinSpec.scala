@@ -6,7 +6,10 @@ import graft.SparkSpec
   * is the manual/deterministic path; this spec proves the planner's own
   * escape — AQE's OptimizeSkewedJoin — actually engages on a hot key,
   * splitting the oversized partition into parallel sub-joins at runtime
-  * (`skew=true` on the sort-merge join in the final adaptive plan). Same
+  * (`skew=true` on the shuffled join in the final adaptive plan). Under
+  * the shared engine config the hot join plans as a shuffled-hash join;
+  * with the build side over the local-map threshold it stays sort-merge,
+  * and the split must engage on both. Same
   * discipline as BucketedJoinSpec: the claim "at 100 TB, skewed keys take
   * salting or AQE skew-join" is asserted on an executed plan, not just
   * documented. Thresholds are scaled down to the test data (a hot
@@ -24,11 +27,12 @@ class AqeSkewJoinSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled")
+      "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")
     val old = keys.map(k => k -> conf.getOption(k)).toMap
     try {
       conf.set("spark.sql.adaptive.enabled", "true")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force a shuffled join
       conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256KB")
@@ -42,14 +46,23 @@ class AqeSkewJoinSpec extends SparkSpec {
         .toDF("k", "lv")
       val right = (0 to 200).map(i => (i.toLong, s"r$i")).toDF("k", "rv")
 
-      val joined = left.join(right, "k")
-      // execute THIS QueryExecution (count() would plan a separate query
-      // and leave this one un-executed, isFinalPlan=false)
-      assert(joined.collect().length == 110000)
-      // the FINAL adaptive plan (post-execution) must show the skew split
-      val finalPlan = joined.queryExecution.executedPlan.toString
-      assert(finalPlan.contains("skew=true"),
-        s"expected an AQE skew-split sort-merge join, got:\n$finalPlan")
+      def finalPlan(): String = {
+        val joined = left.join(right, "k")
+        // execute THIS QueryExecution (count() would plan a separate query
+        // and leave this one un-executed, isFinalPlan=false)
+        assert(joined.collect().length == 110000)
+        joined.queryExecution.executedPlan.toString
+      }
+      // the FINAL adaptive plan (post-execution) must show the skew split,
+      // on the shuffled-hash join the shared config plans here ...
+      val shj = finalPlan()
+      assert(shj.contains("ShuffledHashJoin(skew=true)"),
+        s"expected an AQE skew-split shuffled-hash join, got:\n$shj")
+      // ... and on the sort-merge join a build side over the threshold gets
+      conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
+      val smj = finalPlan()
+      assert(smj.contains("SortMergeJoin(skew=true)"),
+        s"expected an AQE skew-split sort-merge join, got:\n$smj")
 
       // control: with the skew optimization off, the SAME join executes
       // without a skew split — the pin above is the optimization engaging,

@@ -5,7 +5,8 @@ import graft.SparkSpec
 /** Plan-shape guards for the claims the scaladocs make: map-only operators
   * must not shuffle (their only exchange is the cosmetic output sort's
   * range partitioning), top-k must be TakeOrdered (per-partition heaps),
-  * and the grouped aggregate must shuffle exactly once.
+  * the grouped aggregate must shuffle exactly once, and scans push filters
+  * and prune columns. The committed `PLANS.md` shows the full plans.
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -175,5 +176,41 @@ class PlanShapeSpec extends SparkSpec {
       s"q108 re-ran the corpus trigram explode instead of reusing it:\n${p.take(1200)}")
     assert(!p.contains("rangepartitioning"),
       "q108 grew a corpus-sized global sort")
+  }
+
+  test("q02 pushes both filters into the parquet scan and reads only its columns") {
+    val scans = graft.SparkEntry.queries("q02_filter_project")(spark, d).queryExecution
+      .sparkPlan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size === 1)
+    val pushed = scans.head.metadata("PushedFilters")
+    assert(pushed.contains("GreaterThanOrEqual(l_shipdate") && pushed.contains("GreaterThan(l_discount"),
+      s"q02 filters not pushed: $pushed")
+    assert(scans.head.requiredSchema.fieldNames.toSet === Set("l_orderkey", "l_linenumber",
+      "l_quantity", "l_extendedprice", "l_discount", "l_shipdate"))
+  }
+
+  test("q03 and q06 broadcast their small sides") {
+    for (q <- Seq("q03_join3_topk", "q06_broadcast_join"))
+      assert(plan(q).contains("BroadcastHashJoin"), s"$q lost its broadcast join")
+  }
+
+  test("q09 top-k is TakeOrdered, not a global sort") {
+    val p = plan("q09_sort_topk")
+    assert(p.contains("TakeOrderedAndProject") && !p.contains("rangepartitioning"), p)
+  }
+
+  test("q01 aggregates partially before its shuffle") {
+    val p = plan("q01_agg_pricing")
+    assert(p.contains("functions=[partial_sum("), s"q01 lost its partial aggregate:\n$p")
+  }
+
+  test("a readstat projection scans only the projected column") {
+    val path = java.nio.file.Files.createTempDirectory("graft_plan").resolve("nation.dta").toString
+    graft.sources.readstat.stata.DtaWriter.write(spark.read.parquet(s"$d/nation.parquet")
+      .selectExpr("CAST(n_nationkey AS double) n_key", "n_name"), path)
+    val p = spark.read.format("readstat").load(path).select("n_name")
+      .queryExecution.executedPlan.toString
+    val scan = p.linesIterator.find(_.contains("BatchScan")).getOrElse(fail(s"no BatchScan:\n$p"))
+    assert(scan.contains("n_name") && !scan.contains("n_key"), scan)
   }
 }

@@ -57,6 +57,50 @@ class InformativeNullsSpec extends SparkSpec {
       Seq(Some("7"), Some(".b"), None))
   }
 
+  test("stata: .a/.b/.z in float and double columns match pandas' tags") {
+    // written through DtaWriter.writeRows; the committed copy is what
+    // pandas read back (src/test/resources/tagged_missing/generate.py)
+    val dir = java.nio.file.Paths.get(
+      getClass.getResource("/tagged_missing/expected.json").toURI).getParent
+    val path = tmp("tagged_fd.dta")
+    TaggedMissing.write(path)
+    assert(java.util.Arrays.equals(Files.readAllBytes(java.nio.file.Paths.get(path)),
+      Files.readAllBytes(dir.resolve("tagged.dta"))),
+      "writeRows no longer writes the committed tagged.dta")
+    val exp = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(dir.resolve("expected.json").toFile).get("rows")
+    // pandas' view per cell: a number, "." (system missing) or ".a"-".z"
+    val want = (0 until exp.size()).map(i => (0 until 2).map { c =>
+      val n = exp.get(i).get(c)
+      if (n.isNumber) Left(n.asDouble()) else Right(n.asText())
+    })
+    assert(want.flatten.collect { case Right(t) if t != "." => t }.distinct === Seq(".a", ".b", ".z"))
+
+    val sep = spark.read.format("readstat")
+      .option("informativeNulls", "separate").load(path)
+    assert(sep.columns.toSeq === Seq("f", "f_null", "d", "d_null"))
+    val sRows = sep.collect()
+    assert(sRows.length === want.size)
+    for ((r, w) <- sRows.zip(want); c <- 0 until 2) {
+      val (v, ind) = (Option(r.get(2 * c)).map(_.toString.toDouble), Option(r.getString(2 * c + 1)))
+      w(c) match {
+        case Left(x) => assert((v, ind) === (Some(x), None))
+        case Right(".") => assert((v, ind) === (None, None))
+        // the value column keeps NaN for a tag (reference parity)
+        case Right(tag) => assert(v.exists(_.isNaN) && ind === Some(tag), s"$r vs $tag")
+      }
+    }
+
+    val mg = spark.read.format("readstat")
+      .option("informativeNulls", "merged").load(path)
+    assert(mg.schema.map(_.dataType) === Seq(StringType, StringType))
+    for ((r, w) <- mg.collect().zip(want); c <- 0 until 2) w(c) match {
+      case Left(x) => assert(r.getString(c).toDouble === x)
+      case Right(".") => assert(r.getString(c) === null)
+      case Right(tag) => assert(r.getString(c) === tag)
+    }
+  }
+
   test("spss: declared discrete missings → null + indicator") {
     import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(StructField("code", DoubleType)))
@@ -188,5 +232,30 @@ class InformativeNullsSpec extends SparkSpec {
       .option("informativeNulls", "separate")
       .option("informativeNullColumns", "b").load(path)
     assert(back.columns.toSeq === Seq("a", "b", "b_null"))
+  }
+}
+
+/** The tagged-missing dta behind `src/test/resources/tagged_missing`: a
+  * float and a double column holding a value, Stata's `.a`, `.b` and `.z`
+  * (float 0x7F000000 + k·0x800, double 0x7FE0000000000000 + k·2^40) and
+  * the system missing. Regenerate the committed file and its pandas view
+  * with `sbt "Test/runMain graft.sources.TaggedMissing <dir>"`, then
+  * `python3 src/test/resources/tagged_missing/generate.py <dir>`.
+  */
+object TaggedMissing {
+  private def f(k: Int) = java.lang.Float.valueOf(java.lang.Float.intBitsToFloat(0x7F000000 + k * 0x800))
+  private def d(k: Int) = java.lang.Double.valueOf(java.lang.Double.longBitsToDouble(0x7FE0000000000000L + (k.toLong << 40)))
+
+  def write(path: String): Unit = {
+    val schema = StructType(Seq(StructField("f", FloatType), StructField("d", DoubleType)))
+    val rows = Seq(Row(1.5f, 2.25), Row(f(1), d(1)), Row(f(2), d(2)), Row(f(26), d(26)),
+      Row(null, null), Row(-3.0f, d(2)))
+    DtaWriter.writeRows(schema, rows.iterator, path, Map.empty)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val dir = java.nio.file.Paths.get(args.headOption.getOrElse("/tmp/tagged_missing"))
+    Files.createDirectories(dir)
+    write(dir.resolve("tagged.dta").toString)
   }
 }
