@@ -12,8 +12,8 @@ import org.apache.hadoop.fs.{Path => HPath}
   * half-uploaded container always exists, so PERMISSIVE skips-and-reports
   * at the FILE level instead: driver-side probe failures (header/metadata
   * parse, partition planning, decode-context build) drop the file from
-  * the plan; executor-side decode failures truncate that partition at its
-  * clean prefix. Every quarantine emits a Spark-log warning and, when
+  * the plan; executor-side open or decode failures end that file's range
+  * at its clean prefix. Every quarantine emits a Spark-log warning and, when
   * `badFilesPath` is set, one JSON record (`{"path":…,"stage":…,
   * "error":…}`) named by the path's digest — deterministic, so re-planning
   * the same scan overwrites rather than accumulates, and concurrent tasks
@@ -69,26 +69,32 @@ object Quarantine {
   }
 }
 
-/** Executor-side wrapper: a decode failure mid-partition in PERMISSIVE mode
-  * ends the partition at its clean prefix (rows already emitted stand —
-  * they were decoded intact) and reports the file; FAILFAST readers are
-  * never wrapped. Wraps both the row and columnar paths.
+/** Executor-side wrapper: in PERMISSIVE mode, a failure to open a file's
+  * range or to decode it ends the range at its clean prefix (rows already
+  * emitted stand — they were decoded intact) and reports the file;
+  * FAILFAST readers are never wrapped. `open` runs on the first `next()`,
+  * inside the guard, so a file that fails as its reader opens (a seek past
+  * a truncated end) is reported like one that fails mid-read. Wraps both
+  * the row and columnar paths.
   */
 private[readstat] final class PermissiveReader[T](
-    inner: org.apache.spark.sql.connector.read.PartitionReader[T],
+    open: => org.apache.spark.sql.connector.read.PartitionReader[T],
     opts: ReadstatOptions,
     path: String)
   extends org.apache.spark.sql.connector.read.PartitionReader[T] {
+  private var inner: org.apache.spark.sql.connector.read.PartitionReader[T] = _
   private var dead = false
   override def next(): Boolean =
     if (dead) false
-    else try inner.next()
-    catch {
+    else try {
+      if (inner == null) inner = open
+      inner.next()
+    } catch {
       case e: Exception =>
         dead = true
         Quarantine.report(opts, path, "read", e)
         false
     }
   override def get(): T = inner.get()
-  override def close(): Unit = inner.close()
+  override def close(): Unit = if (inner != null) inner.close()
 }

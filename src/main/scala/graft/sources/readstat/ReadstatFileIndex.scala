@@ -2,6 +2,9 @@ package graft.sources.readstat
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+
 /** Relation-scoped file index: one metadata parse per file per load.
   *
   * `ReadstatDataSource.inferSchema` builds it and `getTable` hands it to
@@ -76,14 +79,33 @@ final class ReadstatFileIndex(val paths: Seq[String], val opts: ReadstatOptions)
   private def parse(f: ReadstatIO.FileStamp, memo: Boolean): Entry =
     Entry(f, Quarantine.guard(opts, f.path, "metadata") {
       val fmt = ReadstatOptions.detectFormat(f.path, opts.format)
-      PlannedFile(f.path, fmt, ReadstatFormats.forName(fmt).parse(f, opts, memo))
+      PlannedFile(f.path, fmt, ReadstatFormats.forName(fmt).parse(f, opts, memo), f.len)
     })
 }
 
 object ReadstatFileIndex {
 
-  /** A plannable file: its format and its one parse. */
-  final case class PlannedFile(path: String, format: String, plan: ReadstatFormats.FilePlan)
+  /** A plannable file: its format, its one parse and its length as the
+    * listing stamped it (partition packing weighs its ranges by it).
+    */
+  final case class PlannedFile(path: String, format: String, plan: ReadstatFormats.FilePlan, len: Long) {
+    @transient private var shipped: Option[(java.lang.ref.WeakReference[SparkContext], Broadcast[ReadstatFormats.FilePlan])] = None
+
+    /** `plan` as a broadcast of `sc`, made on the first call and kept for
+      * as long as the index keeps this parse, so every action on the
+      * relation reuses it ([[Packing.shared]] decides which plans ship
+      * this way).
+      */
+    private[readstat] def sharedPlan(sc: SparkContext): Broadcast[ReadstatFormats.FilePlan] = synchronized {
+      shipped match {
+        case Some((ref, b)) if ref.get eq sc => b
+        case _ =>
+          val b = sc.broadcast(plan)
+          shipped = Some((new java.lang.ref.WeakReference(sc), b))
+          b
+      }
+    }
+  }
 
   /** `file` is None for a file quarantined at `stamp`. */
   private final case class Entry(stamp: ReadstatIO.FileStamp, file: Option[PlannedFile])

@@ -11,7 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
 object ReadstatFormats {
 
   /** Driver-built, task-serialized decode context for one file. */
-  trait FileContext extends Serializable
+  trait FileContext extends Serializable {
+    /** Approximate bytes of the context's bulk tables (a Stata strL/GSO
+      * table): what decides whether its plan rides in each task's
+      * partition or ships once per executor ([[Packing.shared]]).
+      */
+    def bulkBytes: Long = 0L
+  }
 
   /** Everything planning needs from one file, from one metadata parse: its
     * Spark schema, its (rowStart, rowCount) ranges (a single range for

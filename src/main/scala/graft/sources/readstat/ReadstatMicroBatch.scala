@@ -248,30 +248,30 @@ class ReadstatMicroBatchStream(
       Quarantine.guard(opts, p, "plan")(misfit.foreach(e => throw e)).map(_ => f)
     }
 
-  // the plans of the files the last planInputPartitions admitted. Spark's
+  // the files the last planInputPartitions admitted. Spark's
   // MicroBatchScanExec plans a batch's partitions before it builds that
   // batch's reader factory (DataSourceV2ScanExecBase evaluates
   // inputPartitions first, for supportsColumnar and for the input RDD),
-  // so each factory ships its own batch's plans only
-  @volatile private var batchPlans: Map[String, ReadstatFormats.FilePlan] = Map.empty
+  // so each factory covers its own batch's files only
+  @volatile private var batchFiles: Seq[ReadstatFileIndex.PlannedFile] = Nil
 
+  /** The admitted files' row ranges, packed like a batch scan's. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FilesOffset].n
     val e = end.asInstanceOf[FilesOffset].n
     val files = discovered.toSeq.slice(s, e).flatMap(admissible)
-    batchPlans = files.map(f => f.path -> f.plan).toMap
-    files.flatMap { f =>
-      f.plan.ranges.collect { case (rs, rc) if rc > 0 => ReadstatInputPartition(f.path, f.format, rs, rc) }
-    }.toArray
+    batchFiles = files
+    Packing.partitions(files, opts.maxPartitionBytes)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // the factory conforms each admitted file to the declared schema
-    // exactly like the batch path
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    new ReadstatReaderFactory(schema, opts, sc.broadcast(batchPlans),
-      sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration)))
-  }
+  /** Conforms each admitted file to the declared schema exactly like the
+    * batch path, and ships like it: the batch's plans in its partitions
+    * (a large one as its parse's broadcast), the Hadoop conf as the
+    * context's one broadcast.
+    */
+  override def createReaderFactory(): PartitionReaderFactory =
+    new ReadstatReaderFactory(schema, opts, batchFiles,
+      SerializableHadoopConf.current(org.apache.spark.sql.SparkSession.active.sparkContext))
 
   override def commit(end: Offset): Unit =
     raiseFloor(end.asInstanceOf[FilesOffset].n)

@@ -21,11 +21,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * pools — SURVEY.md §3.3): the driver parses header+metadata once per file
   * per load — `inferSchema` builds a [[ReadstatFileIndex]] and hands it to
   * `getTable` on this provider instance, and every action on the relation
-  * plans from it; `planInputPartitions` emits row-range partitions computed
-  * from the fixed record length (uncompressed formats seek in O(1)), or a
-  * single partition per file where decode state is sequential (compressed
-  * SAS/SPSS). Spark's scheduler replaces the reference's worker threads;
-  * multi-file loads give cluster-wide parallelism.
+  * plans from it. Each file yields row ranges computed from the fixed
+  * record length (uncompressed formats seek in O(1)), or a single range per
+  * file where decode state is sequential (compressed SAS/SPSS);
+  * `planInputPartitions` packs the ranges into partitions by Spark's own
+  * small-file rule ([[Packing]]), so a directory of small files runs about
+  * one task per core and one reader walks a partition's files in order.
+  * Spark's scheduler replaces the reference's worker threads; multi-file
+  * loads give cluster-wide parallelism.
+  *
+  * An action makes no broadcast of its own: each file's plan travels in
+  * the one packed partition that reads it, so a task deserializes only
+  * its own files' plans; a plan with a large strL/GSO table is instead
+  * one broadcast per parse of the file, shared by an executor's tasks;
+  * and the Hadoop conf is one broadcast per SparkContext
+  * ([[SerializableHadoopConf.current]]).
   */
 class ReadstatDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "readstat"
@@ -357,43 +367,33 @@ class ReadstatScan(
   private lazy val plannedFiles: scala.util.Try[Seq[ReadstatFileIndex.PlannedFile]] =
     scala.util.Try(index.plan().files)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val parts = scala.collection.mutable.ArrayBuffer[ReadstatInputPartition]()
-    var skip = offset
-    var remaining = limit.getOrElse(Long.MaxValue)
-    plannedFiles.get.foreach { f =>
-      val p = f.path
-      val fmt = f.format
-      if (remaining > 0) {
-        for ((start, count) <- f.plan.ranges if remaining > 0) {
-          // apply global offset/limit to this file's ranges
-          val afterSkip = math.min(skip, count)
-          val s = start + afterSkip
-          val c0 = count - afterSkip
-          skip -= afterSkip
-          if (c0 > 0) {
-            val c = math.min(c0, remaining)
-            remaining -= c
-            parts += ReadstatInputPartition(p, fmt, s, c)
-          }
-        }
-      }
-    }
-    parts.toArray
-  }
+  /** The good files' row ranges, offset and limit applied, packed about
+    * one task per core over small files ([[Packing]]).
+    */
+  override def planInputPartitions(): Array[InputPartition] =
+    Packing.partitions(plannedFiles.get, opts.maxPartitionBytes, offset, limit)
 
+  /** What a task needs, and how it travels:
+    *   - each file's plan (natural schema and decode context: metadata,
+    *     value labels, strL table, from the index's one parse; the moral
+    *     equivalent of the reference's Arc-shared SharedDecode,
+    *     `src/stata/data.rs:21-48`) rides in the packed partition that
+    *     reads the file ([[planInputPartitions]]). Spark deserializes a
+    *     partition once per task, so a task holds only its own files'
+    *     plans, and a small file's plan is shipped once;
+    *   - a plan whose context carries a large strL/GSO table would be
+    *     copied once per task into every partition that reads the file, so
+    *     it ships instead as a broadcast made once per parse of the file
+    *     and shared by every task of an executor (SURVEY.md §7.4 risk 4;
+    *     [[Packing.shared]]);
+    *   - the session's Hadoop conf, so S3A/HDFS credentials and tuning set
+    *     in Spark conf reach executor-side opens (r1 verdict "what's wrong"
+    *     #1), is broadcast once per SparkContext and again only when its
+    *     entries change ([[SerializableHadoopConf.current]]).
+    * The factory itself, which Spark serializes into every task of the
+    * stage, carries no plan, only the shared plans' broadcast handles.
+    */
   override def createReaderFactory(): PartitionReaderFactory = {
-    // Per-file plan (natural schema and decode context: metadata, value
-    // labels, strL table), built by the index's one parse and BROADCAST —
-    // the moral equivalent of the reference's Arc-shared SharedDecode
-    // (`src/stata/data.rs:21-48`). Broadcast (not task serialization) so a
-    // large strL/GSO table ships to each executor once instead of once per
-    // task (SURVEY.md §7.4 risk 4).
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val bc = sc.broadcast(plannedFiles.get.map(f => f.path -> f.plan).toMap)
-    // ship the session's Hadoop conf so S3A/HDFS credentials and tuning set
-    // in Spark conf reach executor-side opens (r1 verdict "what's wrong" #1)
-    val bcConf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
     // vectorized when every projected type fits a flat vector (struct
     // columns from informativeNulls=struct take the row path) and every
     // planned file decodes every required column at the required type.
@@ -403,7 +403,9 @@ class ReadstatScan(
     // layer works
     val columnarOk = opts.columnar && ColumnAppender.flatSchema(required) &&
       plannedFiles.get.forall(f => ReadstatReaderFactory.exact(f.plan.schema, required))
-    new ReadstatReaderFactory(required, opts, bc, bcConf, filters, columnarOk, rtHolder)
+    new ReadstatReaderFactory(required, opts, plannedFiles.get,
+      SerializableHadoopConf.current(org.apache.spark.sql.SparkSession.active.sparkContext),
+      filters, columnarOk, rtHolder)
   }
 }
 
@@ -421,7 +423,8 @@ private[readstat] final class RuntimeFilterHolder extends Serializable {
   *
   * Each file decodes its own natural columns — the ones it carries of the
   * required schema, at its own types, from the one parse the driver
-  * shipped (`files`: schema, ranges and decode context per path). When
+  * shipped (its plan: schema, ranges and decode context, carried by the
+  * packed partition or, when large, shared by broadcast). When
   * those differ from `required`, [[AligningReader]] null-fills the
   * columns the file lacks and widens or range-checked-narrows the rest;
   * [[SchemaFit]] has already checked on the driver that the file may be
@@ -434,15 +437,24 @@ private[readstat] final class RuntimeFilterHolder extends Serializable {
 class ReadstatReaderFactory(
     required: StructType,
     opts: ReadstatOptions,
-    files: org.apache.spark.broadcast.Broadcast[Map[String, ReadstatFormats.FilePlan]],
+    @transient files: Seq[ReadstatFileIndex.PlannedFile],
     conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
     filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
     columnarOk: Boolean = false,
     rt: RuntimeFilterHolder = new RuntimeFilterHolder)
   extends PartitionReaderFactory {
 
-  /** test hook: the files whose plans this factory ships */
-  private[readstat] def plannedPaths: Set[String] = files.value.keySet
+  // the plans too large to copy into each partition, by path
+  private val shared = Packing.sharedPlans(files)
+
+  /** test hook (driver side): the files whose plans this scan ships */
+  private[readstat] def plannedPaths: Set[String] = files.map(_.path).toSet
+
+  /** test hook: the shared plans' broadcasts by path */
+  private[readstat] def sharedPlans: Map[String, org.apache.spark.broadcast.Broadcast[ReadstatFormats.FilePlan]] = shared
+
+  /** test hook: the Hadoop conf broadcast this factory installs */
+  private[readstat] def hadoopConf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf] = conf
 
   private def fileFilters(natural: StructType): Seq[org.apache.spark.sql.sources.Filter] = {
     val own = natural.fields.map(f => f.name -> f.dataType).toMap
@@ -451,35 +463,43 @@ class ReadstatReaderFactory(
       own.get(n).exists(t => req.get(n).contains(t)))))
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    val p = partition.asInstanceOf[ReadstatInputPartition]
+  /** A packed partition's reader: `open` for each of its ranges in turn.
+    * PERMISSIVE: a failure to open or decode a file (truncated body, bad
+    * zlib block, a zsav trailer past the end) ends that file's range at its
+    * clean prefix and reports the file; the partition's next file still
+    * reads.
+    */
+  private def packed[T](partition: InputPartition)(
+      open: (ReadstatInputPartition, ReadstatFormats.FilePlan) => PartitionReader[T]): PartitionReader[T] = {
     ReadstatIO.setConf(conf.value.value) // executor-side install, before any open
-    val plan = files.value(p.path)
-    val decoded = ReadstatReaderFactory.decoded(plan.schema, required)
-    val inner = ReadstatFormats.forName(p.format)
-      .reader(p, plan.context, decoded, opts, fileFilters(plan.schema))
-    val conformed =
+    val part = partition.asInstanceOf[ReadstatPackedPartition]
+    def opened(p: ReadstatInputPartition) = open(p, part.plans.getOrElse(p.path, shared(p.path).value))
+    new PackedReader(part.ranges, p =>
+      if (opts.permissive) new PermissiveReader(opened(p), opts, p.path) else opened(p))
+  }
+
+  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    packed(partition) { (p, plan) =>
+      val decoded = ReadstatReaderFactory.decoded(plan.schema, required)
+      val inner = ReadstatFormats.forName(p.format)
+        .reader(p, plan.context, decoded, opts, fileFilters(plan.schema))
       if (ReadstatReaderFactory.exact(plan.schema, required)) inner
       else new AligningReader(inner, decoded, required)
-    // PERMISSIVE: a mid-read decode failure (truncated body, bad zlib
-    // block) ends this partition at its clean prefix and reports the file
-    if (opts.permissive) new PermissiveReader(conformed, opts, p.path) else conformed
-  }
+    }
 
   override def supportColumnarReads(partition: InputPartition): Boolean = columnarOk
 
   override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[ReadstatInputPartition]
-    ReadstatIO.setConf(conf.value.value)
-    val plan = files.value(p.path)
-    val (cursor, appenders) = ReadstatFormats.forName(p.format)
-      .columnar(p, plan.context, required, opts, fileFilters(plan.schema))
-      .getOrElse(throw new IllegalStateException(
-        s"readstat: columnar read not supported for format ${p.format}"))
-    val inner = new ReadstatColumnarReader(cursor, appenders, required)
-    if (opts.permissive) new PermissiveReader(inner, opts, p.path) else inner
-  }
+      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    packed(partition) { (p, plan) =>
+      val (cursor, appenders) = ReadstatFormats.forName(p.format)
+        .columnar(p, plan.context, required, opts, fileFilters(plan.schema))
+        .getOrElse(throw new IllegalStateException(
+          s"readstat: columnar read not supported for format ${p.format}"))
+      // a small file's range needs no full-size batch vectors
+      new ReadstatColumnarReader(cursor, appenders, required,
+        math.max(1L, math.min(4096L, p.rowCount)).toInt)
+    }
 }
 
 object ReadstatReaderFactory {
@@ -501,7 +521,12 @@ object ReadstatReaderFactory {
 }
 
 /** Java-serializable wrapper for a Hadoop Configuration (the stock class is
-  * not Serializable); shipped to executors via broadcast.
+  * not Serializable). Readstat reader factories carry the session's conf
+  * to executors this way, as a broadcast that [[SerializableHadoopConf.current]]
+  * makes once per SparkContext: Hadoop's `Configuration.write` gzips every
+  * property's source list, so a broadcast per action cost about 10 ms of
+  * driver time per action on a 4-core machine, and each broadcast
+  * allocates a 4 MB chunk.
   */
 final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
@@ -515,10 +540,44 @@ final class SerializableHadoopConf(@transient var value: Configuration) extends 
   }
 }
 
+object SerializableHadoopConf {
+
+  /** The SparkContext, the conf entries and the broadcast of the last call. */
+  private final case class Shipped(
+      sc: java.lang.ref.WeakReference[org.apache.spark.SparkContext],
+      entries: java.util.Map[String, String],
+      conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf])
+
+  private var last: Option[Shipped] = None
+
+  /** `sc`'s Hadoop conf as a broadcast: the one made before while `sc`
+    * and every conf entry are unchanged, else a new one. A broadcast holds
+    * a copy of the entries it was made for, so a later
+    * `hadoopConfiguration.set` reaches tasks through the next call's new
+    * broadcast, and never changes an earlier one (local mode hands tasks
+    * the broadcast object itself).
+    */
+  def current(sc: org.apache.spark.SparkContext): org.apache.spark.broadcast.Broadcast[SerializableHadoopConf] =
+    synchronized {
+      val entries = new java.util.HashMap[String, String]()
+      sc.hadoopConfiguration.iterator().forEachRemaining(e => entries.put(e.getKey, e.getValue))
+      last match {
+        case Some(s) if (s.sc.get eq sc) && s.entries == entries => s.conf
+        case _ =>
+          val copy = new Configuration(false)
+          entries.forEach((k, v) => copy.set(k, v))
+          val b = sc.broadcast(new SerializableHadoopConf(copy))
+          last = Some(Shipped(new java.lang.ref.WeakReference(sc), entries, b))
+          b
+      }
+    }
+}
+
 /** Shared IO helpers: Hadoop FileSystem so any DFS-backed path works.
   *
   * The effective Configuration is, in order: the conf installed by the scan's
-  * reader factory (executor side, broadcast from the driver session), else
+  * reader factory (executor side, the driver session's conf as
+  * [[SerializableHadoopConf.current]] broadcast it), else
   * the active SparkSession's `sparkContext.hadoopConfiguration` (driver
   * side), else a fresh default — so credentials/tuning set via
   * `spark.hadoop.*` reach every open on both sides.

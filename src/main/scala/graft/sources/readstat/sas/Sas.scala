@@ -337,16 +337,15 @@ object Sas {
     * metadata subheaders from compressed-data extraction —
     * reference `src/sas/data.rs:573-613`).
     */
-  def isMetadataSignature(page: Array[Byte], off: Int): Boolean = {
-    val s0 = sig4Of(page, off)
-    val known = Set(0xF7F7F7F7, 0xF6F6F6F6, 0xFDFFFFFF, 0xFFFFFFFD, 0xFFFFFFFF,
-      0xFCFFFFFF, 0xFFFFFFFC, 0xFEFBFFFF, 0xFFFFFBFE, 0xFEFFFFFF, 0xFFFFFFFE,
-      0x00FCFFFF, 0xFFFFFC00)
-    if (known.contains(s0)) true
-    else if (s0 == 0x00000000 && off + 8 <= page.length) {
-      val s1 = sig4Of(page, off + 4)
-      Set(0xF7F7F7F7, 0xF6F6F6F6, 0xFDFFFFFF, 0xFCFFFFFF, 0xFEFBFFFF, 0xFEFFFFFF).contains(s1)
-    } else false
+  def isMetadataSignature(page: Array[Byte], off: Int): Boolean = sig4Of(page, off) match {
+    case 0xF7F7F7F7 | 0xF6F6F6F6 | 0xFDFFFFFF | 0xFFFFFFFD | 0xFFFFFFFF |
+        0xFCFFFFFF | 0xFFFFFFFC | 0xFEFBFFFF | 0xFFFFFBFE | 0xFEFFFFFF | 0xFFFFFFFE |
+        0x00FCFFFF | 0xFFFFFC00 => true
+    case 0x00000000 if off + 8 <= page.length => sig4Of(page, off + 4) match {
+      case 0xF7F7F7F7 | 0xF6F6F6F6 | 0xFDFFFFFF | 0xFCFFFFFF | 0xFEFBFFFF | 0xFEFFFFFF => true
+      case _ => false
+    }
+    case _ => false
   }
 
   /** Scan metadata pages; mirrors the reference's MetadataBuilder. */

@@ -312,7 +312,8 @@ final class SasRowCursor(
     val run = if (meta.seekable)
       meta.pageRuns.find(r => part.rowStart >= r.rowStart && part.rowStart < r.endRow)
     else None
-    run match {
+    // a cursor that fails to open is never closed by its caller
+    try run match {
       case Some(r) =>
         val pageIdx = r.firstPage + (part.rowStart - r.rowStart) / r.rowsPerPage
         fsin.seek(h.headerLength.toLong + pageIdx * h.pageLength)
@@ -320,7 +321,7 @@ final class SasRowCursor(
       case None =>
         fsin.seek(h.headerLength.toLong)
         toSkip = part.rowStart
-    }
+    } catch { case e: Throwable => fsin.close(); throw e }
   }
 
   override def buf: Array[Byte] = curBuf

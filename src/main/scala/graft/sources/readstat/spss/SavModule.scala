@@ -1,6 +1,6 @@
 package graft.sources.readstat.spss
 
-import java.io.{BufferedInputStream, FilterInputStream, InputStream}
+import java.io.{FilterInputStream, InputStream}
 
 import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
@@ -327,14 +327,18 @@ final class SavRowCursor(
 
   locally {
     fsin = ReadstatIO.open(part.path)
-    h.compression match {
+    // a cursor that fails to open (a zsav cut before its trailer) is never
+    // closed by its caller
+    try h.compression match {
       case 0 =>
         fsin.seek(meta.dataOffset + part.rowStart * recordLen.toLong)
         chunkRows = RowCursor.chunkRows(part.rowCount, recordLen)
         chunk = new Array[Byte](chunkRows * recordLen)
       case 1 =>
         fsin.seek(meta.dataOffset)
-        in = new BufferedInputStream(fsin, RowCursor.ChunkBytes)
+        // the bytecode of n rows is at most 9/8 of their raw bytes: one
+        // command byte per 8-byte cell
+        in = ReadstatIO.buffered(fsin, (part.rowStart + part.rowCount) * recordLen.toLong * 9 / 8)
         decompressor = new SavByteCode(le, h.bias)
         skipRows = part.rowStart
       case 2 =>
@@ -364,12 +368,12 @@ final class SavRowCursor(
           expectUofs = uofs + usize
           (Bin.i64(e, 8, le), usize, Bin.i32(e, 20, le))
         }.toIndexedSeq
-        in = new LookaheadZlibStream(part.path, entries,
+        in = new LookaheadZlibStream(fsin, entries,
           zsavLookahead.getOrElse(LookaheadZlibStream.defaultLookahead))
         decompressor = new SavByteCode(le, h.bias)
         skipRows = part.rowStart
       case c => throw new UnsupportedOperationException(s"sav compression $c")
-    }
+    } catch { case e: Throwable => close(); throw e }
   }
 
   override def buf: Array[Byte] = rowBuf
@@ -413,9 +417,9 @@ final class SavRowCursor(
 
   override def close(): Unit = {
     if (in != null) in.close()
-    // compression 0 reads fsin directly; the zsav path abandons it after
-    // the ztrailer parse (LookaheadZlibStream opens its own handle) — close
-    // unconditionally or executors leak one fd per scanned partition
+    // compression 0 reads fsin directly and the zsav blocks are positioned
+    // reads of it — close unconditionally or executors leak one fd per
+    // scanned partition
     if (fsin != null) try fsin.close() catch { case _: java.io.IOException => }
   }
 }
@@ -485,21 +489,23 @@ final class SavByteCode(le: Boolean, bias: Double) {
   * `lookahead` blocks are inflated ahead on a shared executor-local pool
   * while the decoder drains the current one. (The reference inflates
   * strictly sequentially — `/root/reference/src/spss/data.rs:1687-1761` —
-  * leaving cores idle on a large single zsav file.)
+  * leaving cores idle on a large single zsav file.) A file of one block
+  * has nothing to overlap, so its block is fetched and inflated on the
+  * calling thread.
   *
-  * Each pool task fetches its block with a Hadoop POSITIONED read
-  * (`readFully(position, ...)` — thread-safe by the PositionedReadable
-  * contract, implemented by every Hadoop FS stream) and then inflates, so
-  * on object-store-backed clusters the block fetches parallelize along
-  * with the inflate instead of serializing on the consumer thread. Memory
-  * bound: ≤ lookahead inflated blocks (+ their compressed inputs) in
-  * flight, ~4 MB each at the SPSS default block size.
+  * Each block is fetched with a Hadoop POSITIONED read of the cursor's
+  * open stream `fsin` (`readFully(position, ...)` — thread-safe by the
+  * PositionedReadable contract, implemented by every Hadoop FS stream)
+  * and then inflated, so on object-store-backed clusters the block fetches
+  * parallelize along with the inflate instead of serializing on the
+  * consumer thread. The caller owns and closes `fsin`. Memory bound:
+  * ≤ lookahead inflated blocks (+ their compressed inputs) in flight,
+  * ~4 MB each at the SPSS default block size.
   */
 final class LookaheadZlibStream(
-    path: String,
+    fsin: org.apache.hadoop.fs.FSDataInputStream,
     blocks: IndexedSeq[(Long, Int, Int)], // (compressed_ofs, uncompressed_size, compressed_size)
     lookahead: Int = LookaheadZlibStream.defaultLookahead) extends InputStream {
-  private val fsin = ReadstatIO.open(path)
   private var nextIdx = 0
   private val pending = new java.util.ArrayDeque[java.util.concurrent.Future[Array[Byte]]]()
   private var cur: Array[Byte] = _
@@ -515,7 +521,7 @@ final class LookaheadZlibStream(
       // ztrailer always records real sizes; fail loudly if it doesn't
       require(usize > 0 || csize == 0,
         s"zsav: ztrailer block ${nextIdx - 1} declares 0 uncompressed bytes for $csize compressed")
-      pending.addLast(LookaheadZlibStream.pool.submit(
+      val fetch = new java.util.concurrent.FutureTask[Array[Byte]](
         new java.util.concurrent.Callable[Array[Byte]] {
           override def call(): Array[Byte] = {
             val compressed = new Array[Byte](csize)
@@ -526,7 +532,9 @@ final class LookaheadZlibStream(
             }
             LookaheadZlibStream.inflate(compressed, usize)
           }
-        }))
+        })
+      if (blocks.length == 1) fetch.run() else LookaheadZlibStream.pool.execute(fetch)
+      pending.addLast(fetch)
     }
   }
 
@@ -555,10 +563,8 @@ final class LookaheadZlibStream(
     n
   }
 
-  override def close(): Unit = {
+  override def close(): Unit =
     while (!pending.isEmpty) pending.removeFirst().cancel(true)
-    fsin.close()
-  }
 }
 
 object LookaheadZlibStream {

@@ -14,7 +14,9 @@ object DtaModule extends ReadstatFormats.FormatModule {
 
   final case class DtaContext(
       meta: Metadata,
-      strls: Map[(Int, Long), String]) extends ReadstatFormats.FileContext
+      strls: Map[(Int, Long), String]) extends ReadstatFormats.FileContext {
+    @transient override lazy val bulkBytes: Long = strls.valuesIterator.map(_.length.toLong).sum
+  }
 
   /** One open: the metadata from the head of the file, then seeks to the
     * value labels and the strL table.
@@ -93,7 +95,9 @@ final class DtaRowCursor(
   locally {
     val dataStart = meta.dataOffset +
       (if (meta.header.version >= 117) "<data>".length else 0)
-    fsin.seek(dataStart + part.rowStart * recordLen.toLong)
+    // a cursor that fails to open is never closed by its caller
+    try fsin.seek(dataStart + part.rowStart * recordLen.toLong)
+    catch { case e: Throwable => fsin.close(); throw e }
   }
 
   private val chunkRows = RowCursor.chunkRows(part.rowCount, recordLen)
