@@ -22,7 +22,9 @@ import org.apache.spark.broadcast.Broadcast
   * every later listing and arrival is held to it.
   *
   * The index holds each file's decode context (SAS/SPSS metadata, Stata
-  * value labels and strL table) for as long as the relation lives.
+  * value labels and strL table) for as long as the relation lives. It is
+  * the only place a parse is kept: a new load builds a new index and parses
+  * every file again.
   */
 final class ReadstatFileIndex(val paths: Seq[String], val opts: ReadstatOptions) {
   import ReadstatFileIndex._
@@ -38,11 +40,8 @@ final class ReadstatFileIndex(val paths: Seq[String], val opts: ReadstatOptions)
     */
   def plan(): Listing = {
     val listed = ReadstatIO.listFiles(paths)
-    // a listing of more files than the SAS memo holds would only evict its
-    // own entries (and every other load's) before any reuse
-    val memo = listed.lengthCompare(sas.SasModule.MemoEntries) <= 0
     val known = listed.map(f => f -> Option(entries.get(f.path)).filter(_.stamp == f))
-    val fresh = ReadstatIO.parMap(known.collect { case (f, None) => f })(f => f.path -> parse(f, memo)).toMap
+    val fresh = ReadstatIO.parMap(known.collect { case (f, None) => f })(f => f.path -> parse(f)).toMap
     entries.putAll(fresh.asJava)
     // files gone from the listing leave the index
     entries.keySet.retainAll(new java.util.HashSet[String](listed.map(_.path).asJava))
@@ -56,7 +55,7 @@ final class ReadstatFileIndex(val paths: Seq[String], val opts: ReadstatOptions)
     * it at this (len, mtime); None when it is quarantined.
     */
   def file(f: ReadstatIO.FileStamp): Option[PlannedFile] =
-    entries.compute(f.path, (_, e) => if (e != null && e.stamp == f) e else parse(f, memo = true)).file
+    entries.compute(f.path, (_, e) => if (e != null && e.stamp == f) e else parse(f)).file
 
   /** The table the index pinned, if a plannable file has been seen. */
   def table: Option[SchemaFit.Table] = pinned
@@ -76,10 +75,10 @@ final class ReadstatFileIndex(val paths: Seq[String], val opts: ReadstatOptions)
     pinned
   }
 
-  private def parse(f: ReadstatIO.FileStamp, memo: Boolean): Entry =
+  private def parse(f: ReadstatIO.FileStamp): Entry =
     Entry(f, Quarantine.guard(opts, f.path, "metadata") {
       val fmt = ReadstatOptions.detectFormat(f.path, opts.format)
-      PlannedFile(f.path, fmt, ReadstatFormats.forName(fmt).parse(f, opts, memo), f.len)
+      PlannedFile(f.path, fmt, ReadstatFormats.forName(fmt).parse(f, opts), f.len)
     })
 }
 

@@ -62,10 +62,10 @@ object ReadstatFormats {
     */
   trait FormatModule {
     /** Parses `file`'s metadata with one open and a read buffer no larger
-      * than the file. `memo = false` leaves a format's between-loads memo
-      * (SAS only) untouched.
+      * than the file. Every call parses: the relation's
+      * [[ReadstatFileIndex]] is the one place a parse is kept.
       */
-    def parse(file: ReadstatIO.FileStamp, opts: ReadstatOptions, memo: Boolean = true): FilePlan
+    def parse(file: ReadstatIO.FileStamp, opts: ReadstatOptions): FilePlan
 
     /** The file's source columns, in file order. */
     protected def columns(ctx: FileContext, opts: ReadstatOptions): Seq[SourceColumn]

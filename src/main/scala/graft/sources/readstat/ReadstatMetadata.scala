@@ -30,9 +30,10 @@ object ReadstatMetadata {
     import spark.implicits._
     val fmt = ReadstatOptions.detectFormat(path, format)
     val opts = ReadstatOptions.from(new java.util.HashMap[String, String]())
+    val file = ReadstatIO.stamp(path)
     val rows: Seq[ColumnMeta] = fmt match {
       case "dta" =>
-        val in = new java.io.BufferedInputStream(ReadstatIO.open(path), 1 << 20)
+        val in = ReadstatIO.buffered(ReadstatIO.open(path), file.len)
         val meta = try stata.Dta.parseMetadata(stata.Dta.ByteReader(in)) finally in.close()
         meta.variables.zipWithIndex.map { case (v, i) =>
           ColumnMeta(path, s"dta v${meta.header.version}", meta.header.nobs, "none",
@@ -43,8 +44,7 @@ object ReadstatMetadata {
             meta.sortedBy.indexOf(i + 1) + 1)
         }.toSeq
       case "sav" | "zsav" =>
-        val meta = spss.Sav.parseMetadata(
-          () => new java.io.BufferedInputStream(ReadstatIO.open(path), 1 << 20))
+        val meta = spss.SavModule.parseMeta(file)
         meta.variables.zipWithIndex.map { case (v, i) =>
           ColumnMeta(path, if (meta.header.zsav) "zsav" else "sav", meta.header.rowCount,
             meta.header.compression match {
@@ -56,8 +56,7 @@ object ReadstatMetadata {
             s"fmt${v.formatType}", "", v.valueLabelSet.getOrElse(""), 0)
         }.toSeq
       case "sas7bdat" =>
-        val in = new java.io.BufferedInputStream(ReadstatIO.open(path), 1 << 20)
-        val meta = try sas.Sas.parseMetadata(in) finally in.close()
+        val meta = sas.SasModule.parseMeta(file)
         meta.columns.zipWithIndex.map { case (c, i) =>
           ColumnMeta(path,
             s"sas7bdat ${if (meta.header.bit64) "64" else "32"}-bit",

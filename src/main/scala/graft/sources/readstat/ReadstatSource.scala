@@ -229,39 +229,23 @@ class ReadstatScanBuilder(index: ReadstatFileIndex, full: StructType)
     else new ReadstatScan(index, full, required, limit, offset, skipFilters.toSeq)
 }
 
-/** Complete COUNT(*) pushdown: the row count comes from the per-file
-  * metadata in the relation's index, emitted as a single row.
+/** Complete COUNT(*) pushdown: one row holding the row total of the
+  * relation's index. Spark plans this local scan as a `LocalTableScanExec`
+  * under the pushdown's renaming projection, which still runs as one
+  * single-task job.
   */
-class ReadstatCountScan(index: ReadstatFileIndex, nCols: Int)
-  extends Scan with Batch {
+class ReadstatCountScan(index: ReadstatFileIndex, nCols: Int) extends LocalScan {
 
   override def readSchema(): StructType = StructType(
     (0 until nCols).map(i => org.apache.spark.sql.types.StructField(
       s"count_star_$i", org.apache.spark.sql.types.LongType, nullable = false)))
-  override def toBatch: Batch = this
   override def description(): String =
     s"readstat metadata COUNT(*) pushdown ${index.paths.mkString(",")}"
 
-  // Spark calls planInputPartitions more than once: list once per scan
-  private lazy val total: Long = index.plan().files.map(_.plan.ranges.map(_._2).sum).sum
-
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(CountPartition(total, nCols))
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-        val p = partition.asInstanceOf[CountPartition]
-        new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
-          private var emitted = false
-          override def next(): Boolean = if (emitted) false else { emitted = true; true }
-          override def get(): org.apache.spark.sql.catalyst.InternalRow =
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array.fill[Any](p.nCols)(p.total))
-          override def close(): Unit = ()
-        }
-      }
-    }
+  override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val total = index.plan().files.map(_.plan.ranges.map(_._2).sum).sum
+    Array(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array.fill[Any](nCols)(total)))
+  }
 }
 
 final case class ReadstatInputPartition(
@@ -270,9 +254,7 @@ final case class ReadstatInputPartition(
     rowStart: Long,
     rowCount: Long) extends InputPartition
 
-private[readstat] final case class CountPartition(total: Long, nCols: Int) extends InputPartition
-
-/** One action's scan. It lists its paths once (memoized, so Spark's
+/** One action's scan. It lists its paths once (a lazy value, so Spark's
   * repeated planning calls share it) and takes each file's schema, row
   * ranges and decode context from the relation's [[ReadstatFileIndex]]:
   * files added or rewritten since the load are seen, and only those are

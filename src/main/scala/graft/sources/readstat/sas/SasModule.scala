@@ -14,45 +14,26 @@ import graft.sources.readstat.{ColumnAppender, ReadstatFormats, ReadstatIO, Read
   * uncompressed AND compressed files (each RLE/RDC row is an independent
   * subheader, so page boundaries are decode boundaries too). Files whose
   * index doesn't account for every row fall back to one sequential scan.
+  *
+  * The module keeps no state: like every format's, its parse is kept only
+  * by the relation's [[graft.sources.readstat.ReadstatFileIndex]].
   */
 object SasModule extends ReadstatFormats.FormatModule {
   import Sas._
 
   final case class SasContext(meta: Metadata) extends ReadstatFormats.FileContext
 
-  /** Entries the between-loads memo holds; a listing of more SAS files
-    * than this bypasses it.
-    */
-  val MemoEntries = 4096
-
   /** The metadata walk reads every page (AMD metadata can trail the data,
-    * same as the reference `src/sas/metadata.rs:38-88`) — ~1 GB of driver
-    * IO for a 1 GB file. A load's file index parses each file once; this
-    * memo keeps the result between loads (a re-read of the same file, a
-    * streaming batch, the per-path wrappers), keyed by the listing's
-    * (path, size, mtime) with LRU eviction; entries are a few KB.
+    * same as the reference `src/sas/metadata.rs:38-88`): about 1 GB of
+    * driver IO for a 1 GB file.
     */
-  private val metaCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), Metadata](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), Metadata]): Boolean = size() > MemoEntries
-      })
+  private[graft] def parseMeta(file: ReadstatIO.FileStamp): Metadata = {
+    val in = ReadstatIO.buffered(ReadstatIO.open(file.path), file.len)
+    try Sas.parseMetadata(in) finally in.close()
+  }
 
-  override def parse(
-      file: ReadstatIO.FileStamp,
-      opts: ReadstatOptions,
-      memo: Boolean): ReadstatFormats.FilePlan = {
-    val key = (file.path, file.len, file.mtime)
-    val cached = if (memo) metaCache.get(key) else null
-    val meta =
-      if (cached != null) cached
-      else {
-        val in = ReadstatIO.buffered(ReadstatIO.open(file.path), file.len)
-        val m = try Sas.parseMetadata(in) finally in.close()
-        if (memo) metaCache.put(key, m)
-        m
-      }
+  override def parse(file: ReadstatIO.FileStamp, opts: ReadstatOptions): ReadstatFormats.FilePlan = {
+    val meta = parseMeta(file)
     plan(SasContext(meta), ranges(meta, opts), opts)
   }
 

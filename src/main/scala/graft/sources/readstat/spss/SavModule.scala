@@ -24,7 +24,7 @@ object SavModule extends ReadstatFormats.FormatModule {
   /** One open for both of `Sav.parseMetadata`'s passes: each pass seeks
     * back to the start and reads through its own buffer.
     */
-  private def parseMeta(file: ReadstatIO.FileStamp): Metadata = {
+  private[graft] def parseMeta(file: ReadstatIO.FileStamp): Metadata = {
     val fsin = ReadstatIO.open(file.path)
     try Sav.parseMetadata { () =>
       fsin.seek(0L)
@@ -58,10 +58,7 @@ object SavModule extends ReadstatFormats.FormatModule {
     (!v.isString && v.missingDoubles.nonEmpty) ||
       (v.isString && v.missingStrings.nonEmpty)
 
-  override def parse(
-      file: ReadstatIO.FileStamp,
-      opts: ReadstatOptions,
-      memo: Boolean): ReadstatFormats.FilePlan = {
+  override def parse(file: ReadstatIO.FileStamp, opts: ReadstatOptions): ReadstatFormats.FilePlan = {
     val meta = parseMeta(file)
     val n = math.max(0L, meta.header.rowCount)
     val ranges =

@@ -21,10 +21,7 @@ object DtaModule extends ReadstatFormats.FormatModule {
   /** One open: the metadata from the head of the file, then seeks to the
     * value labels and the strL table.
     */
-  override def parse(
-      file: ReadstatIO.FileStamp,
-      opts: ReadstatOptions,
-      memo: Boolean): ReadstatFormats.FilePlan = {
+  override def parse(file: ReadstatIO.FileStamp, opts: ReadstatOptions): ReadstatFormats.FilePlan = {
     val fsin = ReadstatIO.open(file.path)
     try {
       val meta = withLabels(fsin, file,

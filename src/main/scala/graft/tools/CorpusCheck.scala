@@ -4,8 +4,6 @@ import java.io.File
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.types.StructType
-
 import graft.sources.readstat.{ReadstatFormats, ReadstatIO, ReadstatInputPartition, ReadstatOptions}
 import graft.sources.readstat.{sas, spss, stata}
 
@@ -36,18 +34,17 @@ object CorpusCheck {
 
   /** (rowCount, columnCount) straight from the format's metadata parse. */
   def expected(path: String): (Long, Int) = {
+    val file = ReadstatIO.stamp(path)
     ReadstatOptions.detectFormat(path, None) match {
       case "dta" =>
-        val in = new java.io.BufferedInputStream(ReadstatIO.open(path), 1 << 20)
+        val in = ReadstatIO.buffered(ReadstatIO.open(path), file.len)
         val meta = try stata.Dta.parseMetadata(stata.Dta.ByteReader(in)) finally in.close()
         (meta.header.nobs, meta.variables.length)
       case "sav" | "zsav" =>
-        val meta = spss.Sav.parseMetadata(
-          () => new java.io.BufferedInputStream(ReadstatIO.open(path), 1 << 20))
+        val meta = spss.SavModule.parseMeta(file)
         (meta.header.rowCount.toLong, meta.variables.length)
       case "sas7bdat" =>
-        val in = new java.io.BufferedInputStream(ReadstatIO.open(path), 1 << 20)
-        val meta = try sas.Sas.parseMetadata(in) finally in.close()
+        val meta = sas.SasModule.parseMeta(file)
         (meta.rowCount, meta.columns.length)
     }
   }
@@ -56,13 +53,12 @@ object CorpusCheck {
       path: String,
       fmt: String,
       mod: ReadstatFormats.FormatModule,
-      schema: StructType,
+      plan: ReadstatFormats.FilePlan,
       opts: ReadstatOptions,
       ranges: Seq[(Long, Long)]): Long = {
-    val ctx = mod.fileContext(path, opts)
     var total = 0L
     for ((start, count) <- ranges if count > 0) {
-      val r = mod.reader(ReadstatInputPartition(path, fmt, start, count), ctx, schema, opts)
+      val r = mod.reader(ReadstatInputPartition(path, fmt, start, count), plan.context, plan.schema, opts)
       try {
         while (r.next()) { r.get(); total += 1 }
       } finally r.close()
@@ -78,14 +74,14 @@ object CorpusCheck {
       val (expRows0, expCols) = expected(path)
       // zero-variable files are metadata-only: no row storage to read
       val expRows = if (expCols == 0) 0L else expRows0
-      val schema = mod.schema(path, opts)
-      val ranges = mod.partitionRanges(path, opts)
-      val total = countRows(path, fmt, mod, schema, opts, ranges)
+      val plan = mod.parse(ReadstatIO.stamp(path), opts)
+      val schema = plan.schema
+      val total = countRows(path, fmt, mod, plan, opts, plan.ranges)
 
       // offset path: re-read the second half through an explicit row range
       val half = expRows / 2
       val tail =
-        if (expRows > 1) countRows(path, fmt, mod, schema, opts, Seq((half, expRows - half)))
+        if (expRows > 1) countRows(path, fmt, mod, plan, opts, Seq((half, expRows - half)))
         else expRows - half
       val rowsOk = expRows < 0 || (total == expRows && tail == expRows - half)
       val colsOk = schema.length == expCols

@@ -103,6 +103,20 @@ class CompressAndMetadataSpec extends SparkSpec {
     assert(got(1)(2) === "string")
   }
 
+  test("metadata probe reads sav, zsav and sas7bdat files") {
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(
+      StructField("x", DoubleType), StructField("s", StringType)))
+    val df = spark.createDataFrame(Seq(Row(1.0, "a"), Row(2.0, "b"), Row(3.0, "c")).asJava, schema)
+    Seq("sav" -> "sav", "zsav" -> "zsav", "sas7bdat" -> "sas7bdat 64-bit").foreach { case (ext, format) =>
+      val path = tmp(s"meta.$ext")
+      df.coalesce(1).write.format("readstat").mode("overwrite").save(path)
+      val got = ReadstatMetadata.describe(spark, path).orderBy("column_index")
+        .select("column_name", "spark_type", "row_count", "format").collect().map(_.toSeq)
+      assert(got.toSeq === Seq(Seq("x", "double", 3L, format), Seq("s", "string", 3L, format)), ext)
+    }
+  }
+
   test("dta sortlist round-trips and surfaces in the metadata probe (O3)") {
     import org.apache.spark.sql.functions._
     val df = spark.range(50).select(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.sources.readstat.sas.{SasFixtureWriter, SasModule}
+import graft.sources.readstat.sas.SasFixtureWriter
 import graft.sources.readstat.stata.DtaWriter
 
 /** The plan-once contract: a load lists its files and parses each file's
@@ -75,7 +75,7 @@ class PlanOnceSpec extends SparkSpec {
     }
   }
 
-  test("a SAS directory past the metadata memo: load parses each file once, count() reads nothing") {
+  test("a 4,200-file SAS directory: load reads each file once, count() reads nothing") {
     val root = Files.createTempDirectory("graft_planonce_overcap")
     val templates = (0 until 4).map { k =>
       val t = root.resolve(s"template-$k.sas7bdat")
@@ -84,7 +84,6 @@ class PlanOnceSpec extends SparkSpec {
     }
     val d = Files.createDirectories(root.resolve("many"))
     val nFiles = 4200
-    assert(nFiles > SasModule.MemoEntries)
     (0 until nFiles).foreach { k =>
       Files.createLink(d.resolve(f"part-$k%05d.sas7bdat"), templates(k % templates.size))
     }
@@ -105,6 +104,26 @@ class PlanOnceSpec extends SparkSpec {
     DtaWriter.write(frame(1000), victim)
     assert(df.count() === expected)
     assert(df.agg(count(lit(1))).collect()(0).getLong(0) === expected)
+  }
+
+  test("a new load of a SAS file rewritten with the same length and mtime reads its new metadata") {
+    val p = Files.createTempDirectory("graft_planonce_sas").resolve("t.sas7bdat")
+    def write(name: String, from: Int): Unit =
+      frame(RowsPerFile, from).select(col("x").as(name)).write.format("readstat")
+        .option("format", "sas7bdat").mode("overwrite").save(p.toString)
+    def load(): DataFrame = spark.read.format("readstat").load(p.toString)
+    write("x", 0)
+    val first = load()
+    assert(first.columns.toSeq === Seq("x"))
+    assert(first.collect().map(_.getDouble(0)).toSeq === (0 until RowsPerFile).map(_.toDouble))
+    val (len, mtime) = (Files.size(p), Files.getLastModifiedTime(p))
+    write("y", 1000)
+    Files.setLastModifiedTime(p, mtime)
+    assert(Files.size(p) === len)
+    assert(Files.getLastModifiedTime(p) === mtime)
+    val second = load()
+    assert(second.columns.toSeq === Seq("y"))
+    assert(second.collect().map(_.getDouble(0)).toSeq === (1000 until 1000 + RowsPerFile).map(_.toDouble))
   }
 
   test("a file added after load appears in the next count()") {
