@@ -10,7 +10,10 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Executor spill: every input partition encodes its rows ON THE EXECUTOR
   * into a staging part file of final-format cell bytes (sentinels, epoch
   * shifts — everything except string padding, which needs the global max
-  * width), and reports its row count and string widths.
+  * width), and reports its row count and string widths. The format's
+  * `spillEncoders` write each cell through the [[Spill]] codec, whose
+  * unsynchronized 64 KB buffer the commit reads back; a string cell is
+  * copied once from the row and returns its byte length for the width.
   *
   * Driver commit (model: the reference's parallel chunk encode,
   * `src/stata/writer.rs:1287-1363`): the single container is assembled in
@@ -23,11 +26,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * pages, and for zsav cutting 0x3FF000-byte zlib blocks whose 1 MB chunks
   * deflate in parallel. The output bytes do not depend on the partitioning
   * (zsav excepted: the chunking shifts its deflate output by ~0.01%) or on
-  * thread timing. On a 4-core VM, the commit of a 100k-row, 8-partition
-  * frame (last task end → `save()` returning; medians of 5) takes 0.04 s
-  * for dta, 0.05 s for bytecode sav, 0.06 s for RLE sas7bdat and 0.21 s
-  * for zsav, against 0.08, 0.13, 0.27 and 0.40 s when one thread
-  * re-encoded every part.
+  * thread timing. perfbench's `write.commit_s` times this commit (last
+  * task end → `save()` returning) for its four single-container writes.
   *
   * Directory and streaming mode have one part per task, which renders
   * straight into its container on the executor. The container file is
@@ -115,28 +115,16 @@ class ReadstatPartWriter(partPath: String, pid: Int, schema: StructType, format:
     case "sas7bdat" => sas.SasFixtureWriter.spillEncoders(schema)
     case _ => spss.SavWriter.spillEncoders(schema)
   }
-  private val stringIdx: Array[Int] =
-    schema.fields.zipWithIndex.collect { case (f, i) if f.dataType == StringType => i }
-  private val widths = Array.fill(schema.fields.length)(-1)
-  stringIdx.foreach(widths(_) = 0)
+  private val widths = schema.fields.map(f => if (f.dataType == StringType) 0 else -1)
 
-  private val out = new java.io.DataOutputStream(
-    new java.io.BufferedOutputStream(ReadstatWriteSupport.create(partPath), 1 << 20))
+  private val out = new Spill.Out(ReadstatWriteSupport.create(partPath))
   private var nRows = 0L
 
   override def write(record: InternalRow): Unit = {
-    var s = 0
-    while (s < stringIdx.length) {
-      val i = stringIdx(s)
-      if (!record.isNullAt(i)) {
-        val n = record.getUTF8String(i).numBytes()
-        if (n > widths(i)) widths(i) = n
-      }
-      s += 1
-    }
     var c = 0
     while (c < encoders.length) {
-      encoders(c)(record, out)
+      val n = encoders(c)(record, out)
+      if (n > widths(c)) widths(c) = n
       c += 1
     }
     nRows += 1
@@ -378,9 +366,7 @@ object ReadstatWriteSupport {
     if (fs.exists(hp)) fs.delete(hp, true)
   }
 
-  private def partStream(m: ReadstatPartMsg): java.io.DataInputStream =
-    new java.io.DataInputStream(
-      new java.io.BufferedInputStream(ReadstatIO.open(m.partPath), 1 << 20))
+  private def partStream(m: ReadstatPartMsg): Spill.In = new Spill.In(ReadstatIO.open(m.partPath))
 
   /** A daemon pool for commit renders and zsav deflates. */
   private[readstat] def commitPool(threads: Int): java.util.concurrent.ExecutorService = {
@@ -405,7 +391,7 @@ object ReadstatWriteSupport {
     * the segment bytes (strL blobs, bytecode fragments, a row count).
     */
   private def renderParts[R](parts: Seq[ReadstatPartMsg], threads: Int, direct: java.io.OutputStream)(
-      render: (Int, java.io.DataInputStream, java.io.OutputStream) => R)(
+      render: (Int, Spill.In, java.io.OutputStream) => R)(
       stitch: (R, java.io.InputStream) => Unit): Unit = {
     def rendered(p: Int, out: java.io.OutputStream): R = {
       val in = partStream(parts(p))
@@ -548,7 +534,7 @@ object ReadstatWriteSupport {
               in.readFully(buf, 0, len)
               sink.stringCell(specs(i), buf, len)
             } else {
-              sink.numericBits(java.lang.Long.reverseBytes(in.readLong()))
+              sink.numericBits(in.readLE64())
             }
             i += 1
           }
@@ -570,7 +556,7 @@ object ReadstatWriteSupport {
     * space-padded.
     */
   private def readSasRow(
-      in: java.io.DataInputStream, cols: Array[sas.SasFixtureWriter.Col], rowBuf: Array[Byte]): Unit = {
+      in: Spill.In, cols: Array[sas.SasFixtureWriter.Col], rowBuf: Array[Byte]): Unit = {
     var off = 0
     var i = 0
     while (i < cols.length) {
@@ -634,7 +620,7 @@ object ReadstatWriteSupport {
     val cols = SasFixtureWriter.colsFor(schema, widths)
     val rowLength = cols.map(_.length).sum
     val nRows = parts.map(_.rows).sum
-    def records(p: Int, in: java.io.DataInputStream)(emit: (Array[Byte], Int) => Unit): Unit = {
+    def records(p: Int, in: Spill.In)(emit: (Array[Byte], Int) => Unit): Unit = {
       val rowBuf = new Array[Byte](math.max(rowLength, 1))
       var r = 0L
       while (r < parts(p).rows) {
@@ -652,12 +638,12 @@ object ReadstatWriteSupport {
         val in = partStream(parts.head)
         try records(0, in)(emit) finally in.close()
       } else renderParts(parts, threads, null) { (p, in, out) =>
-        val d = new java.io.DataOutputStream(out)
-        records(p, in) { (b, n) => d.writeInt(n); d.write(b, 0, n) }
+        val d = new Spill.Out(out)
+        records(p, in) { (b, n) => d.int(n); d.bytes(b, 0, n) }
         d.flush()
         parts(p).rows
       } { (rows, seg) =>
-        SasFixtureWriter.packRecords(new java.io.DataInputStream(seg), rows, emit)
+        SasFixtureWriter.packRecords(new Spill.In(seg), rows, emit)
       }
     }
     nRows

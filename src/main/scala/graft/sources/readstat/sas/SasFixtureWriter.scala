@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, max, octet_length}
 import org.apache.spark.sql.types._
 
+import graft.sources.readstat.Spill
+
 /** Minimal `.sas7bdat` writer — 64-bit little-endian, uncompressed DATA
   * pages or RLE-compressed rows in META-page subheaders.
   *
@@ -67,8 +69,7 @@ object SasFixtureWriter {
         val enc = fixedRowEncoder(schema, cols)
         val rowBuf = new Array[Byte](math.max(rowLength, 1))
         val partPath = s"$stagingDir/part-$pid"
-        val out = new java.io.DataOutputStream(new BufferedOutputStream(
-          ReadstatWriteSupport.create(partPath), 1 << 20))
+        val out = new Spill.Out(ReadstatWriteSupport.create(partPath))
         var n = 0L
         try {
           while (it.hasNext) {
@@ -76,8 +77,8 @@ object SasFixtureWriter {
             val comp = if (rdc) RdcEncode.encode(rowBuf) else RleEncode.encode(rowBuf)
             // expansion fallback: raw row bytes (reader treats len==rowLength as raw)
             val c = if (comp.length < rowLength) comp else rowBuf
-            out.writeInt(c.length)
-            out.write(c, 0, c.length)
+            out.int(c.length)
+            out.bytes(c, 0, c.length)
             n += 1
           }
         } finally out.close()
@@ -86,8 +87,7 @@ object SasFixtureWriter {
       val nRows = parts.map(_._2).sum
       writeCompressedFramed(schema, widths, path, nRows, rdc = rdc) { emit =>
         parts.foreach { case (_, rows, partPath) =>
-          val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-            graft.sources.readstat.ReadstatIO.open(partPath), 1 << 20))
+          val in = new Spill.In(graft.sources.readstat.ReadstatIO.open(partPath))
           try packRecords(in, rows, emit) finally in.close()
         }
       }
@@ -100,7 +100,7 @@ object SasFixtureWriter {
     * compressed distributed write and the sink's commit.
     */
   private[readstat] def packRecords(
-      in: java.io.DataInputStream, rows: Long, emit: (Array[Byte], Int) => Unit): Unit = {
+      in: Spill.In, rows: Long, emit: (Array[Byte], Int) => Unit): Unit = {
     var r = 0L
     var buf = new Array[Byte](256)
     while (r < rows) {
@@ -291,31 +291,20 @@ object SasFixtureWriter {
 
   /** Executor-side spill encoders for the distributed sink: numerics spill
     * as FINAL 8-byte LE double bits (SAS NaN-class missing, 1960 epochs
-    * applied); strings as i32 length (−1 = null) + UTF-8 bytes — space
-    * padding happens at assembly, where the global width is known.
+    * applied); strings as [[Spill.string]] cells — space padding happens at
+    * assembly, where the global width is known.
     */
-  private[readstat] def spillEncoders(
-      schema: StructType): Array[(org.apache.spark.sql.catalyst.InternalRow, java.io.DataOutputStream) => Unit] = {
+  private[readstat] def spillEncoders(schema: StructType): Array[Spill.Cell] = {
     val MissingBits = 0x7ff0000000000001L // NaN class → missing
-    def le64(o: java.io.DataOutputStream, v: Long): Unit = {
-      var i = 0
-      while (i < 8) { o.write(((v >> (8 * i)) & 0xff).toInt); i += 1 }
-    }
     schema.fields.zipWithIndex.map { case (f, i) =>
       val isTime = f.metadata.contains("logical_type") &&
         f.metadata.getString("logical_type") == "time"
-      def num(get: org.apache.spark.sql.catalyst.InternalRow => Double) =
-        (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le64(o, if (r.isNullAt(i)) MissingBits
-          else java.lang.Double.doubleToRawLongBits(get(r)))
+      def num(get: org.apache.spark.sql.catalyst.InternalRow => Double): Spill.Cell = (r, o) => {
+        o.le64(if (r.isNullAt(i)) MissingBits else java.lang.Double.doubleToRawLongBits(get(r)))
+        -1
+      }
       f.dataType match {
-        case StringType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          if (r.isNullAt(i)) o.writeInt(-1)
-          else {
-            val b = r.getUTF8String(i).getBytes
-            o.writeInt(b.length)
-            o.write(b)
-          }
+        case StringType => Spill.string(i)
         case DateType => num(r => (r.getInt(i).toLong + Sas.EpochShiftDays).toDouble)
         case TimestampNTZType | TimestampType =>
           num(r => r.getLong(i) / 1e6 + (Sas.EpochShiftDays * Sas.SecondsPerDay).toDouble)

@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import graft.sources.readstat.Spill
+
 /** SPSS `.sav` writer (S9 in SURVEY.md §2.1): header, variable records with
   * continuations, numeric value labels, long-variable-name record, encoding
   * record (UTF-8), and data at compression 0 (raw) or 1 (bytecode).
@@ -21,30 +23,19 @@ object SavWriter {
 
   /** Executor-side spill encoders for the distributed sink: numerics spill
     * as FINAL little-endian f64 bits (sysmis for null, epoch shifts done);
-    * strings as i32 length (−1 = null) + UTF-8 bytes — the driver assembler
-    * does segment layout/padding, which needs global widths.
+    * strings as [[Spill.string]] cells — the driver assembler does segment
+    * layout/padding, which needs global widths.
     */
-  private[readstat] def spillEncoders(
-      schema: StructType): Array[(org.apache.spark.sql.catalyst.InternalRow, java.io.DataOutputStream) => Unit] = {
-    def le64(o: java.io.DataOutputStream, v: Long): Unit = {
-      var i = 0
-      while (i < 8) { o.write(((v >> (8 * i)) & 0xff).toInt); i += 1 }
-    }
+  private[readstat] def spillEncoders(schema: StructType): Array[Spill.Cell] =
     schema.fields.zipWithIndex.map { case (f, i) =>
       val isTime = f.metadata.contains("logical_type") &&
         f.metadata.getString("logical_type") == "time"
-      def num(get: org.apache.spark.sql.catalyst.InternalRow => Double) =
-        (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le64(o, if (r.isNullAt(i)) Sav.MissingDoubleBits
-          else java.lang.Double.doubleToLongBits(get(r)))
+      def num(get: org.apache.spark.sql.catalyst.InternalRow => Double): Spill.Cell = (r, o) => {
+        o.le64(if (r.isNullAt(i)) Sav.MissingDoubleBits else java.lang.Double.doubleToLongBits(get(r)))
+        -1
+      }
       f.dataType match {
-        case StringType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          if (r.isNullAt(i)) o.writeInt(-1)
-          else {
-            val b = r.getUTF8String(i).getBytes
-            o.writeInt(b.length)
-            o.write(b)
-          }
+        case StringType => Spill.string(i)
         case DateType => num(r => (r.getInt(i).toLong * 86400L + Sav.SecShift).toDouble)
         case TimestampNTZType | TimestampType =>
           // whole seconds: the sav datetime epoch math is second-granular
@@ -61,7 +52,6 @@ object SavWriter {
           s"readstat sink: unsupported type $dt for ${f.name}")
       }
     }
-  }
 
   private[readstat] def buildSpecs(schema: StructType, widths: Map[String, Int]): Array[Spec] = {
     val used = scala.collection.mutable.Set[String]()

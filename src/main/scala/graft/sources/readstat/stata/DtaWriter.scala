@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, max, octet_length}
 import org.apache.spark.sql.types._
 
+import graft.sources.readstat.Spill
+
 /** Stata `.dta` v118 writer (S8 in SURVEY.md §2.1; v119 when >32,767 vars).
   *
   * Single-file sink: Spark writes are funneled through one stream (the dta
@@ -378,57 +380,50 @@ object DtaWriter {
     }
   }
 
-  /** Executor-side spill encoders for the distributed sink: each closure
-    * writes one cell of an InternalRow as FINAL dta bytes (sentinels, epoch
-    * shifts — everything except string padding, which needs global widths).
-    * Strings spill as i32 length (−1 = null) + UTF-8 bytes; the driver
-    * assembler pads/strL-refs them while framing.
+  /** Executor-side spill encoders for the distributed sink: each cell
+    * spills as FINAL dta bytes (sentinels, epoch shifts — everything except
+    * string padding, which needs global widths). Strings spill as
+    * [[Spill.string]] cells; the driver assembler pads/strL-refs them while
+    * framing.
     */
-  private[readstat] def spillEncoders(
-      schema: StructType): Array[(org.apache.spark.sql.catalyst.InternalRow, java.io.DataOutputStream) => Unit] = {
-    def le16(o: java.io.DataOutputStream, v: Int): Unit = { o.write(v & 0xff); o.write((v >> 8) & 0xff) }
-    def le32(o: java.io.DataOutputStream, v: Int): Unit = { var i = 0; while (i < 4) { o.write((v >> (8 * i)) & 0xff); i += 1 } }
-    def le64(o: java.io.DataOutputStream, v: Long): Unit = { var i = 0; while (i < 8) { o.write(((v >> (8 * i)) & 0xff).toInt); i += 1 } }
+  private[readstat] def spillEncoders(schema: StructType): Array[Spill.Cell] =
     schema.fields.zipWithIndex.map { case (f, i) =>
       val isTime = f.metadata.contains("logical_type") &&
         f.metadata.getString("logical_type") == "time"
-      f.dataType match {
-        case BooleanType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          o.write(if (r.isNullAt(i)) MissI8.toInt else if (r.getBoolean(i)) 1 else 0)
-        case ByteType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          o.write(if (r.isNullAt(i)) MissI8.toInt else r.getByte(i).toInt)
-        case ShortType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le16(o, if (r.isNullAt(i)) MissI16.toInt else r.getShort(i).toInt)
-        case IntegerType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le32(o, if (r.isNullAt(i)) MissI32 else r.getInt(i))
-        case DateType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le32(o, if (r.isNullAt(i)) MissI32 else (r.getInt(i) + Dta.EpochShiftDays).toInt)
-        case FloatType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le32(o, if (r.isNullAt(i)) MissF32Bits else java.lang.Float.floatToIntBits(r.getFloat(i)))
-        case LongType if isTime => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le64(o, if (r.isNullAt(i)) MissF64Bits
-          else java.lang.Double.doubleToLongBits((r.getLong(i) / 1000000L).toDouble))
-        case LongType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le64(o, if (r.isNullAt(i)) MissF64Bits
-          else java.lang.Double.doubleToLongBits(r.getLong(i).toDouble))
-        case TimestampNTZType | TimestampType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le64(o, if (r.isNullAt(i)) MissF64Bits
-          else java.lang.Double.doubleToLongBits((r.getLong(i) / 1000L + Dta.EpochShiftMs).toDouble))
-        case DoubleType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          le64(o, if (r.isNullAt(i)) MissF64Bits
-          else java.lang.Double.doubleToLongBits(r.getDouble(i)))
-        case StringType => (r: org.apache.spark.sql.catalyst.InternalRow, o: java.io.DataOutputStream) =>
-          if (r.isNullAt(i)) o.writeInt(-1)
-          else {
-            val b = r.getUTF8String(i).getBytes
-            o.writeInt(b.length)
-            o.write(b)
-          }
+      val cell: Spill.Cell = f.dataType match {
+        case BooleanType => (r, o) => {
+          o.byte(if (r.isNullAt(i)) MissI8.toInt else if (r.getBoolean(i)) 1 else 0); -1
+        }
+        case ByteType => (r, o) => { o.byte(if (r.isNullAt(i)) MissI8.toInt else r.getByte(i).toInt); -1 }
+        case ShortType => (r, o) => { o.le16(if (r.isNullAt(i)) MissI16.toInt else r.getShort(i).toInt); -1 }
+        case IntegerType => (r, o) => { o.le32(if (r.isNullAt(i)) MissI32 else r.getInt(i)); -1 }
+        case DateType => (r, o) => {
+          o.le32(if (r.isNullAt(i)) MissI32 else (r.getInt(i) + Dta.EpochShiftDays).toInt); -1
+        }
+        case FloatType => (r, o) => {
+          o.le32(if (r.isNullAt(i)) MissF32Bits else java.lang.Float.floatToIntBits(r.getFloat(i))); -1
+        }
+        case LongType if isTime => (r, o) => {
+          o.le64(if (r.isNullAt(i)) MissF64Bits
+          else java.lang.Double.doubleToLongBits((r.getLong(i) / 1000000L).toDouble)); -1
+        }
+        case LongType => (r, o) => {
+          o.le64(if (r.isNullAt(i)) MissF64Bits
+          else java.lang.Double.doubleToLongBits(r.getLong(i).toDouble)); -1
+        }
+        case TimestampNTZType | TimestampType => (r, o) => {
+          o.le64(if (r.isNullAt(i)) MissF64Bits
+          else java.lang.Double.doubleToLongBits((r.getLong(i) / 1000L + Dta.EpochShiftMs).toDouble)); -1
+        }
+        case DoubleType => (r, o) => {
+          o.le64(if (r.isNullAt(i)) MissF64Bits else java.lang.Double.doubleToLongBits(r.getDouble(i))); -1
+        }
+        case StringType => Spill.string(i)
         case dt => throw new IllegalArgumentException(
           s"readstat sink: unsupported type $dt for ${f.name}")
       }
+      cell
     }
-  }
 
   private def fixed(b: Array[Byte], len: Int): Array[Byte] = {
     val out = new Array[Byte](len)
