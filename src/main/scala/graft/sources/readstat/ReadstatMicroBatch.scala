@@ -85,22 +85,17 @@ class ReadstatMicroBatchStream(
   private val stamps = mutable.HashMap[String, ReadstatIO.FileStamp]()
 
   private def poll(): Unit = {
-    val hp = new HPath(index.paths.head)
-    val fs = hp.getFileSystem(ReadstatIO.sessionConf)
-    if (!fs.exists(hp)) return
-    val status =
-      if (fs.getFileStatus(hp).isDirectory) fs.listStatus(hp).toSeq
-      else Seq(fs.getFileStatus(hp))
-    val files = status
+    val files = ReadstatIO.entries(index.paths.head).toSeq.flatMap(_.files)
       // compaction rewrites (compact-* containers/markers) are OLD rows the
       // tail already emitted — admitting them would duplicate. The flip
       // side is Compaction's tailing-reader contract: only epochs every
       // tail has already admitted AND committed may be folded (a replayed
       // uncommitted batch reopens its epoch parts by path)
-      .filter(st => st.isFile && ReadstatOptions.formatOf(st.getPath.getName).isDefined &&
-        !Compaction.isCompactionFile(st.getPath.getName))
-      .sortBy(st => (st.getModificationTime, st.getPath.toString))
-      .map(st => ReadstatIO.FileStamp(st.getPath.toString, st.getLen, st.getModificationTime))
+      .filter { f =>
+        val n = ReadstatIO.name(f.path)
+        ReadstatOptions.formatOf(n).isDefined && !Compaction.isCompactionFile(n)
+      }
+      .sortBy(f => (f.mtime, f.path))
     files.foreach(f => stamps(f.path) = f)
     val before = discovered.size
     files.foreach(discovered += _.path)

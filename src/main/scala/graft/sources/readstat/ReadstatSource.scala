@@ -5,7 +5,6 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -67,9 +66,7 @@ class ReadstatDataSource extends TableProvider with DataSourceRegister {
     val ps = paths(options)
     // a not-yet-existing path means this is a write: the schema comes from
     // the query via LogicalWriteInfo instead
-    val hp = new HPath(ps.head)
-    val fs = hp.getFileSystem(ReadstatIO.sessionConf)
-    if (!fs.exists(hp)) return new StructType()
+    if (!ReadstatIO.exists(ps.head)) return new StructType()
 
     // directories (batch loads and the streaming source) resolve to their
     // contained readstat files. PERMISSIVE (r10 verdict #1): a container
@@ -553,100 +550,4 @@ object SerializableHadoopConf {
           b
       }
     }
-}
-
-/** Shared IO helpers: Hadoop FileSystem so any DFS-backed path works.
-  *
-  * The effective Configuration is, in order: the conf installed by the scan's
-  * reader factory (executor side, the driver session's conf as
-  * [[SerializableHadoopConf.current]] broadcast it), else
-  * the active SparkSession's `sparkContext.hadoopConfiguration` (driver
-  * side), else a fresh default — so credentials/tuning set via
-  * `spark.hadoop.*` reach every open on both sides.
-  */
-object ReadstatIO {
-  // per-thread install: DSv2 readers create and consume on the task thread,
-  // so a thread-local cannot race across concurrent queries with different
-  // Hadoop confs the way a process-global did (r2 ADVICE #2); every reader
-  // factory re-installs before its first open, so pooled task threads never
-  // act on a stale conf
-  private val installed = new ThreadLocal[Configuration]()
-
-  def setConf(c: Configuration): Unit = installed.set(c)
-
-  def sessionConf: Configuration = {
-    val c = installed.get()
-    if (c != null) c
-    else org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
-  }
-
-  def open(path: String): org.apache.hadoop.fs.FSDataInputStream = {
-    val hp = new HPath(path)
-    hp.getFileSystem(sessionConf).open(hp)
-  }
-
-  def status(path: String): org.apache.hadoop.fs.FileStatus = {
-    val hp = new HPath(path)
-    hp.getFileSystem(sessionConf).getFileStatus(hp)
-  }
-
-  /** A file as one listing saw it: path, length and modification time.
-    * Planning keys its per-file work by it.
-    */
-  final case class FileStamp(path: String, len: Long, mtime: Long)
-
-  def stamp(path: String): FileStamp = {
-    val st = status(path)
-    FileStamp(path, st.getLen, st.getModificationTime)
-  }
-
-  /** `in` behind a read buffer of `min(bytesLeft, 1 MB)`: parsing a small
-    * file's metadata must not allocate and fill a 1 MB buffer.
-    */
-  def buffered(in: java.io.InputStream, bytesLeft: Long): java.io.BufferedInputStream =
-    new java.io.BufferedInputStream(in, math.max(1L, math.min(bytesLeft, 1L << 20)).toInt)
-
-  /** Driver-side concurrent map over files (metadata parses are IO-bound
-    * and independent); preserves input order.
-    */
-  def parMap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    if (xs.lengthCompare(2) < 0) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, math.max(2, xs.length)))
-      try {
-        val futures = xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
-          def call(): B = f(x)
-        }))
-        futures.map(_.get())
-      } finally pool.shutdown()
-    }
-
-  /** One listing of `ps`: a directory resolves to its contained readstat
-    * files (sorted by name), a plain path to itself. A missing plain path
-    * keeps the stamp (-1, -1), so its parse fails like any unreadable
-    * file's.
-    */
-  def listFiles(ps: Seq[String]): Seq[FileStamp] = ps.flatMap { p =>
-    val hp = new HPath(p)
-    val fs = hp.getFileSystem(sessionConf)
-    val st = try Some(fs.getFileStatus(hp)) catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case Some(dir) if dir.isDirectory =>
-        val files = fs.listStatus(hp).toSeq.filter(_.isFile)
-        // compaction-aware (r11): compacted containers count only once their
-        // marker is committed; epoch parts covered by an active marker are
-        // retired garbage (see Compaction's atomic-swap contract)
-        val keep = Compaction.filterNames(files.map(_.getPath.getName))
-        files
-          .filter(f => keep(f.getPath.getName) && ReadstatOptions.formatOf(f.getPath.getName).isDefined)
-          .map(f => FileStamp(f.getPath.toString, f.getLen, f.getModificationTime))
-          .sortBy(_.path)
-      case Some(file) => Seq(FileStamp(p, file.getLen, file.getModificationTime))
-      case None => Seq(FileStamp(p, -1L, -1L))
-    }
-  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.sources.readstat.sas.SasFixtureWriter
+import graft.sources.readstat.sas.{Sas, SasFixtureWriter}
 import graft.sources.readstat.stata.DtaWriter
 
 /** The plan-once contract: a load lists its files and parses each file's
@@ -88,7 +88,13 @@ class PlanOnceSpec extends SparkSpec {
       Files.createLink(d.resolve(f"part-$k%05d.sas7bdat"), templates(k % templates.size))
     }
     val dirBytes = (0 until nFiles).map(k => Files.size(templates(k % templates.size))).sum
+    // every file's header is read and counted, and no file twice
+    val headerBytes = templates.map { t =>
+      val in = Files.newInputStream(t)
+      try Sas.parseHeader(in).headerLength.toLong finally in.close()
+    }.min * nFiles
     val (df, loadBytes) = bytesReadBy(spark.read.format("readstat").load(d.toString))
+    assert(loadBytes >= headerBytes, s"load read $loadBytes bytes; $nFiles SAS headers are $headerBytes")
     assert(loadBytes <= dirBytes, s"load read $loadBytes bytes of a $dirBytes-byte directory")
     val (n, countBytes) = bytesReadBy(df.count())
     assert(n === 2L * nFiles)
