@@ -241,6 +241,107 @@ class ParallelCommitSpec extends SparkSpec {
     df.unpersist()
   }
 
+  /** What `frame()` lacks: byte, short, float, timestamp and time-of-day
+    * cells, a value-labelled column, Stata's tagged float and double
+    * missings and SAS NaN-payload missings, multi-byte strings.
+    */
+  private val extraSchema = StructType(Seq(
+    StructField("i8", ByteType),
+    StructField("i16", ShortType),
+    StructField("f", FloatType),
+    StructField("ts", TimestampType),
+    StructField("t", LongType, nullable = true,
+      new MetadataBuilder().putString("logical_type", "time").build()),
+    StructField("x", DoubleType),
+    StructField("lab", IntegerType),
+    StructField("s", StringType)))
+
+  private def extraRows: Seq[Row] = (0 until 300).map { i =>
+    val x: java.lang.Double = i % 10 match {
+      case 1 => java.lang.Double.longBitsToDouble(0x7FE0000000000000L + ((i % 26 + 1).toLong << 40))
+      case 2 => java.lang.Double.longBitsToDouble(0x7ff0000000000000L | ((0xFF ^ ('A' + i % 26)).toLong << 40))
+      case 3 => null
+      case _ => i * 1.25 - 40
+    }
+    Row(
+      if (i % 13 == 5) null else java.lang.Byte.valueOf((i % 150 - 50).toByte),
+      if (i % 11 == 4) null else java.lang.Short.valueOf((i * 97 % 30000 - 15000).toShort),
+      if (i % 9 == 2) null
+      else if (i % 9 == 5) java.lang.Float.valueOf(java.lang.Float.intBitsToFloat(0x7F000000 + (i % 26 + 1) * 0x800))
+      else java.lang.Float.valueOf(i * 0.5f - 7),
+      if (i % 8 == 3) null else new java.sql.Timestamp(1500000000000L + i * 3600123L),
+      if (i % 7 == 6) null else java.lang.Long.valueOf((i % 24) * 3600000000000L + i * 1000000L),
+      x,
+      if (i % 6 == 0) null else Integer.valueOf(i % 4),
+      if (i % 5 == 1) null else "äö€" * (i % 4) + s"r$i")
+  }
+
+  private val dtaLabels = Map("lab" -> Map(1 -> "one", 2 -> "zwei ü", 3 -> "three"))
+  private val savLabels = dtaLabels.map { case (c, m) => c -> m.map { case (k, v) => k.toDouble -> v } }
+
+  private def labelsOption: Map[String, String] = Map("valueLabels" ->
+    """{"lab":{"1":"one","2":"zwei ü","3":"three"}}""")
+
+  /** Max UTF-8 byte width per string column, at least 1, as the sink's. */
+  private def widthsOf(schema: StructType, rows: Seq[Row]): Map[String, Int] =
+    schema.fields.zipWithIndex.collect { case (f, i) if f.dataType == StringType =>
+      f.name -> rows.iterator.map(r =>
+        if (r.isNullAt(i)) 0 else r.getString(i).getBytes("UTF-8").length).foldLeft(1)(math.max)
+    }.toMap
+
+  test("the local Row writers write the bytes of a one-partition sink write") {
+    import scala.jdk.CollectionConverters._
+    import graft.sources.readstat.{sas, spss, stata}
+    val dir = tmpDir()
+    val framed = frame().cache()
+    val cases = Seq(
+      ("frame", framed, framed.collect().toSeq, false),
+      // a local relation: Rows shipped through `parallelize` are Java-serialized,
+      // which turns every NaN payload into the canonical NaN
+      ("extra", spark.createDataFrame(extraRows.asJava, extraSchema), extraRows, true))
+    for ((name, df, rows, labelled) <- cases) {
+      val sch = df.schema
+      val w = widthsOf(sch, rows)
+      val opts = if (labelled) labelsOption else Map.empty[String, String]
+      val dl = if (labelled) dtaLabels else Map.empty[String, Map[Int, String]]
+      val sl = if (labelled) savLabels else Map.empty[String, Map[Double, String]]
+      def local(file: String)(f: String => Long): Array[Byte] = {
+        val p = dir.resolve(s"$name-local-$file")
+        assert(f(p.toString) === rows.length.toLong, s"$name $file rows")
+        Files.readAllBytes(p)
+      }
+      val pairs = Seq(
+        ("dta", "t.dta", Map.empty[String, String],
+          local("t.dta")(p => stata.DtaWriter.writeRows(sch, rows.iterator, p, w, dl))),
+        ("sav", "t.sav", Map.empty[String, String],
+          local("t.sav")(p => spss.SavWriter.writeRows(sch, rows.iterator, p, w, compress = false, sl))),
+        ("savbc", "bc.sav", Map("compression" -> "bytecode"),
+          local("bc.sav")(p => spss.SavWriter.writeRows(sch, rows.iterator, p, w, compress = true, sl))),
+        ("zsav", "t.zsav", Map.empty[String, String],
+          local("t.zsav")(p => spss.SavWriter.writeRows(sch, rows.iterator, p, w, compress = false, sl,
+            zsav = true))),
+        ("sas", "t.sas7bdat", Map.empty[String, String],
+          local("t.sas7bdat")(p =>
+            sas.SasFixtureWriter.writeRowsStreaming(sch, rows.iterator, p, w, rows.length.toLong))))
+      for ((label, file, fmtOpts, localBytes) <- pairs) {
+        // sas7bdat and sav carry no dta labels; the sav ones take the same JSON
+        val sinkOpts = if (label == "sas") fmtOpts else fmtOpts ++ opts
+        val sinkBytes = write(df.coalesce(1), dir.resolve(s"$name-sink-$file"), sinkOpts)
+        assert(localBytes.length === sinkBytes.length, s"$name $label length")
+        val at = localBytes.indices.find(i => localBytes(i) != sinkBytes(i))
+        assert(at.isEmpty, s"$name $label: first differing byte at ${at.getOrElse(-1)}")
+      }
+      // SasFixtureWriter.write's RLE/RDC output equals the sink's compression option
+      for (c <- Seq("rle", "rdc")) {
+        val a = dir.resolve(s"$name-fixture-$c.sas7bdat")
+        sas.SasFixtureWriter.write(df, a.toString, rle = c == "rle", rdc = c == "rdc")
+        val b = write(df, dir.resolve(s"$name-sink-$c.sas7bdat"), Map("compression" -> c))
+        assert(java.util.Arrays.equals(Files.readAllBytes(a), b), s"$name $c: fixture writer differs")
+      }
+    }
+    framed.unpersist()
+  }
+
   test("a zsav block of one chunk is byte-identical to DeflaterOutputStream's") {
     val zsav = tmpDir().resolve("small.zsav")
     write(frame(), zsav, Map.empty)
