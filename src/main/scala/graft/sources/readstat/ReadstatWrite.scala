@@ -440,51 +440,13 @@ object ReadstatWriteSupport {
       valueLabels: Map[String, Map[Int, String]],
       variableLabels: Map[String, String]): Long = {
     import stata.DtaWriter
-    import stata.DtaWriter.{KStr, KStrL}
     val specs = schema.fields.map(f =>
       DtaWriter.specFor(f, widths.getOrElse(f.name, 1)))
     val rowsBefore = parts.scanLeft(0L)(_ + _.rows)
     DtaWriter.writeFramed(schema, specs, path, valueLabels, variableLabels) { sink =>
-      val vBytes = if (sink.version >= 119) 3 else 2
       renderParts(parts, threads, sink.data) { (p, in, out) =>
-        val strls = scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Byte])]()
-        val rowBuf = new Array[Byte](sink.recordLen)
-        var r = 0L
-        while (r < parts(p).rows) {
-          java.util.Arrays.fill(rowBuf, 0.toByte)
-          var off = 0
-          var i = 0
-          while (i < specs.length) {
-            specs(i).kind match {
-              case KStr(w) =>
-                val len = in.readInt()
-                if (len > 0) {
-                  require(len <= w, s"string too long for str$w: ${specs(i).name}")
-                  in.readFully(rowBuf, off, len)
-                }
-              case KStrL =>
-                val len = in.readInt()
-                if (len >= 0) {
-                  val blob = new Array[Byte](len)
-                  in.readFully(blob)
-                  val v = i + 1
-                  val o = rowsBefore(p) + r + 1
-                  strls += ((v, o, blob))
-                  // v118: v(2)+o(6); v119: v(3)+o(5) — both little-endian
-                  var k = 0
-                  while (k < vBytes) { rowBuf(off + k) = ((v >> (8 * k)) & 0xff).toByte; k += 1 }
-                  k = 0
-                  while (k < 8 - vBytes) { rowBuf(off + vBytes + k) = ((o >> (8 * k)) & 0xff).toByte; k += 1 }
-                }
-              case k =>
-                in.readFully(rowBuf, off, k.width)
-            }
-            off += specs(i).kind.width
-            i += 1
-          }
-          out.write(rowBuf)
-          r += 1
-        }
+        val strls: DtaWriter.StrLs = scala.collection.mutable.ArrayBuffer()
+        DtaWriter.renderRows(in, parts(p).rows, rowsBefore(p), specs, sink.version, out, strls)
         strls
       } { (strls, seg) =>
         seg.transferTo(sink.data)
@@ -523,23 +485,7 @@ object ReadstatWriteSupport {
       val stitched = new SavWriter.SavCellSink(data, compress)
       renderParts(parts, threads, data) { (p, in, out) =>
         val sink = new SavWriter.SavCellSink(out, compress, ((rowsBefore(p) * caseSize) % 8).toInt)
-        var buf = new Array[Byte](256)
-        var r = 0L
-        while (r < parts(p).rows) {
-          var i = 0
-          while (i < specs.length) {
-            if (specs(i).isString) {
-              val len = math.max(0, in.readInt())
-              if (len > buf.length) buf = new Array[Byte](len)
-              in.readFully(buf, 0, len)
-              sink.stringCell(specs(i), buf, len)
-            } else {
-              sink.numericBits(in.readLE64())
-            }
-            i += 1
-          }
-          r += 1
-        }
+        sink.renderRows(in, parts(p).rows, specs)
         sink.fragments()
       } { case ((head, tail), seg) =>
         stitched.merge(head)
@@ -548,31 +494,6 @@ object ReadstatWriteSupport {
       }
       stitched.finish()
       rowsBefore.last
-    }
-  }
-
-  /** One spilled sas row into `rowBuf` at the global widths: numeric cells
-    * verbatim (8-byte bits, epochs/missing done on the executors), strings
-    * space-padded.
-    */
-  private def readSasRow(
-      in: Spill.In, cols: Array[sas.SasFixtureWriter.Col], rowBuf: Array[Byte]): Unit = {
-    var off = 0
-    var i = 0
-    while (i < cols.length) {
-      val c = cols(i)
-      if (c.isChar) {
-        java.util.Arrays.fill(rowBuf, off, off + c.length, ' '.toByte)
-        val len = in.readInt()
-        if (len > 0) {
-          require(len <= c.length, s"string too long for ${c.name}")
-          in.readFully(rowBuf, off, len)
-        }
-      } else {
-        in.readFully(rowBuf, off, 8)
-      }
-      off += c.length
-      i += 1
     }
   }
 
@@ -588,16 +509,9 @@ object ReadstatWriteSupport {
       threads: Int): Long = {
     import sas.SasFixtureWriter
     val cols = SasFixtureWriter.colsFor(schema, widths)
-    val rowLength = cols.map(_.length).sum
     SasFixtureWriter.writeFramedStreaming(schema, widths, path, parts.map(_.rows).sum) { data =>
       renderParts(parts, threads, data) { (p, in, out) =>
-        val rowBuf = new Array[Byte](rowLength)
-        var r = 0L
-        while (r < parts(p).rows) {
-          readSasRow(in, cols, rowBuf)
-          out.write(rowBuf)
-          r += 1
-        }
+        SasFixtureWriter.renderRows(in, parts(p).rows, cols)(out.write)
       } { (_, seg) => seg.transferTo(data) }
     }
   }
@@ -605,9 +519,8 @@ object ReadstatWriteSupport {
   /** RLE/RDC sas7bdat from spill parts: each row is rebuilt at the global
     * widths and compressed by its part's render; segments hold the
     * `[i32 len][record]` subheader records that the packer streams into
-    * META pages — O(page) memory at any row count. (The sink's spill is
-    * varlen, so compression happens at commit; `SasFixtureWriter.write(df,
-    * path, rle/rdc)` is the path where executors compress.)
+    * META pages — O(page) memory at any row count. The spill is varlen, so
+    * compression happens at commit, where the global widths are known.
     */
   private[readstat] def assembleSasCompressed(
       schema: StructType,
@@ -620,17 +533,12 @@ object ReadstatWriteSupport {
     val cols = SasFixtureWriter.colsFor(schema, widths)
     val rowLength = cols.map(_.length).sum
     val nRows = parts.map(_.rows).sum
-    def records(p: Int, in: Spill.In)(emit: (Array[Byte], Int) => Unit): Unit = {
-      val rowBuf = new Array[Byte](math.max(rowLength, 1))
-      var r = 0L
-      while (r < parts(p).rows) {
-        readSasRow(in, cols, rowBuf)
-        val comp = if (rdc) RdcEncode.encode(rowBuf) else RleEncode.encode(rowBuf)
+    def records(p: Int, in: Spill.In)(emit: (Array[Byte], Int) => Unit): Unit =
+      SasFixtureWriter.renderRows(in, parts(p).rows, cols) { row =>
+        val comp = if (rdc) RdcEncode.encode(row) else RleEncode.encode(row)
         if (comp.length < rowLength) emit(comp, comp.length)
-        else emit(rowBuf, rowLength) // reader treats len==rowLength as raw
-        r += 1
+        else emit(row, rowLength) // reader treats len==rowLength as raw
       }
-    }
     SasFixtureWriter.writeCompressedFramed(schema, widths, path, nRows, rdc) { emit =>
       // one part packs its records directly, so renderParts needs no
       // direct stream here

@@ -1,9 +1,13 @@
 package graft.sources.readstat
 
-import java.io.{EOFException, InputStream, OutputStream}
+import java.io.{BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, EOFException,
+  File, FileOutputStream, IOException, InputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,6 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Both ends buffer in a plain array that one thread owns, so a cell costs
   * a bounds check and a store, not a monitor per byte as through
   * `DataOutputStream` over `BufferedOutputStream`.
+  *
+  * The local Row writers use the same cells: [[encodeRows]] spills each
+  * chunk of rows into memory and hands it to the format's row renderer,
+  * the one the commit runs over a part. The object also holds the
+  * writers' little-endian helpers and their [[writeFile]].
   */
 private[readstat] object Spill {
 
@@ -35,6 +44,77 @@ private[readstat] object Spill {
   /** The string cell of column `i`, the same in every format. */
   def string(i: Int): Cell = (r, o) =>
     if (r.isNullAt(i)) { o.int(-1); -1 } else o.utf8(r.getUTF8String(i))
+
+  /** Rows per in-memory chunk of [[encodeRows]]; a chunk also ends once
+    * it holds `ChunkBytes`, so its buffer stays at 1 MB (no 2 MB humongous
+    * array with the bench's 4 MB G1 regions).
+    */
+  val ChunkRows: Int = 4096
+  private val ChunkBytes = (1 << 20) - BufferBytes
+
+  /** Encodes up to `limit` rows of `rows` for a local writer: each `Row`
+    * goes through Spark's lenient Row serializer (`java.sql.Date` or
+    * `LocalDate`, `Timestamp` or `Instant`) and the format's `encoders`
+    * into an in-memory chunk, and `render(in, rows, firstRow)` turns each
+    * chunk into file bytes. Returns the number of rows encoded.
+    */
+  def encodeRows(schema: StructType, rows: Iterator[Row], encoders: Array[Cell],
+      limit: Long = Long.MaxValue)(render: (In, Int, Long) => Unit): Long = {
+    val toInternal = ExpressionEncoder(schema, true).createSerializer()
+    val chunk = new Chunk
+    val out = new Out(chunk)
+    var total = 0L
+    var n = 0
+    def renderChunk(): Unit = if (n > 0) {
+      out.flush()
+      render(chunk.in, n, total - n)
+      chunk.reset()
+      n = 0
+    }
+    while (total < limit && rows.hasNext) {
+      val r = toInternal(rows.next())
+      var c = 0
+      while (c < encoders.length) { encoders(c)(r, out); c += 1 }
+      n += 1
+      total += 1
+      if (n == ChunkRows || chunk.filled >= ChunkBytes) renderChunk()
+    }
+    renderChunk()
+    total
+  }
+
+  /** An in-memory chunk; `filled` reads its size without `size()`'s lock. */
+  private final class Chunk extends ByteArrayOutputStream(BufferBytes) {
+    def filled: Int = count
+    def in: In = new In(new ByteArrayInputStream(buf, 0, count))
+  }
+
+  /** `v`'s low `n` bytes, little-endian, into `b` at `off`. */
+  def putLE(b: Array[Byte], off: Int, v: Long, n: Int): Unit = {
+    var k = 0
+    while (k < n) { b(off + k) = (v >>> (8 * k)).toByte; k += 1 }
+  }
+
+  /** `v`'s low `n` bytes, little-endian. */
+  def le(v: Long, n: Int): Array[Byte] = { val b = new Array[Byte](n); putLE(b, 0, v, n); b }
+
+  /** Runs `body` on a buffered stream over a new file at `path` and closes
+    * it; `body` may close it earlier to patch the file in place. When
+    * `body` throws, the stream is closed and the partial file deleted.
+    */
+  def writeFile[T](path: String)(body: OutputStream => T): T = {
+    val os = new BufferedOutputStream(new FileOutputStream(path), 1 << 20)
+    var done = false
+    try {
+      val r = body(os)
+      os.close()
+      done = true
+      r
+    } finally if (!done) {
+      try os.close() catch { case _: IOException => () }
+      new File(path).delete()
+    }
+  }
 
   final class Out(os: OutputStream) {
     private val buf = new Array[Byte](BufferBytes)

@@ -1,16 +1,14 @@
 package graft.sources.readstat.sas
 
-import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, max, octet_length}
 import org.apache.spark.sql.types._
 
 import graft.sources.readstat.Spill
 
 /** Minimal `.sas7bdat` writer — 64-bit little-endian, uncompressed DATA
-  * pages or RLE-compressed rows in META-page subheaders.
+  * pages or RLE/RDC-compressed rows in META-page subheaders.
   *
   * The reference has no sas7bdat writer either (its "SAS sink" emits
   * CSV+script, S10); this exists because our test strategy (SURVEY.md §5,
@@ -20,84 +18,29 @@ import graft.sources.readstat.Spill
   *
   * Types: numerics → 8-byte doubles (DATE/DATETIME/TIME via format strings),
   * strings → fixed-width space-padded bytes.
+  *
+  * One cell encoder ([[spillEncoders]]) and one row renderer
+  * ([[renderRows]]) serve both writers: the readstat sink's commit renders
+  * its spill parts with them ([[write]] is a sink write, compressed ones
+  * included), and [[writeRowsStreaming]] renders in-memory chunks of local
+  * rows.
   */
 object SasFixtureWriter {
 
   private[readstat] final case class Col(
       name: String, dataType: DataType, isChar: Boolean, length: Int, fmt: String)
 
-  def write(df: DataFrame, path: String, rle: Boolean = false, rdc: Boolean = false): Unit = {
-    if (!rle && !rdc) {
-      // uncompressed goes through the distributed DSv2 sink: executors
-      // encode part buffers in parallel, the driver frames the pages
-      df.write.format("readstat").mode("overwrite").option("format", "sas7bdat").save(path)
-      return
-    }
-    // compressed: two-phase distributed write. Compressed row bytes depend
-    // on the GLOBAL max string widths (fixed-layout rows are what gets
-    // RLE/RDC'd), so phase 1 is a width aggregate; phase 2 has every
-    // partition encode AND compress its rows into a subheader-record part
-    // file (rows are independent subheaders — the same fact the read-side
-    // page partitioner exploits), and the driver only streams part bytes
-    // into META pages: per-row driver work is a length read + arraycopy.
-    val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name)
-    val widths: Map[String, Int] =
-      if (strCols.isEmpty) Map.empty
-      else {
-        val aggs = strCols.map(c => max(octet_length(col(c))).as(c))
-        val r = df.select(aggs.toIndexedSeq: _*).collect()(0)
-        strCols.zipWithIndex.map { case (c, i) =>
-          c -> (if (r.isNullAt(i)) 1 else math.max(1, r.getInt(i)))
-        }.toMap
-      }
-    writeCompressedDistributed(df, path, widths, rdc = rdc)
-  }
-
-  /** Phase 2 of the compressed write: executors encode+compress, driver
-    * frames. Part files hold `[i32 len][bytes]` subheader records in final
-    * on-page form.
+  /** Writes `df` through the readstat sink: uncompressed, or with RLE or
+    * RDC row compression (RDC when both are set).
     */
-  private[readstat] def writeCompressedDistributed(
-      df: DataFrame, path: String, widths: Map[String, Int], rdc: Boolean): Long = {
-    import graft.sources.readstat.ReadstatWriteSupport
-    val schema = df.schema
-    val stagingDir = path + ".spill-parts"
-    try {
-      val parts = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        val cols = colsFor(schema, widths)
-        val rowLength = cols.map(_.length).sum
-        val enc = fixedRowEncoder(schema, cols)
-        val rowBuf = new Array[Byte](math.max(rowLength, 1))
-        val partPath = s"$stagingDir/part-$pid"
-        val out = new Spill.Out(ReadstatWriteSupport.create(partPath))
-        var n = 0L
-        try {
-          while (it.hasNext) {
-            enc(it.next(), rowBuf)
-            val comp = if (rdc) RdcEncode.encode(rowBuf) else RleEncode.encode(rowBuf)
-            // expansion fallback: raw row bytes (reader treats len==rowLength as raw)
-            val c = if (comp.length < rowLength) comp else rowBuf
-            out.int(c.length)
-            out.bytes(c, 0, c.length)
-            n += 1
-          }
-        } finally out.close()
-        Iterator((pid, n, partPath))
-      }.collect().sortBy(_._1)
-      val nRows = parts.map(_._2).sum
-      writeCompressedFramed(schema, widths, path, nRows, rdc = rdc) { emit =>
-        parts.foreach { case (_, rows, partPath) =>
-          val in = new Spill.In(graft.sources.readstat.ReadstatIO.open(partPath))
-          try packRecords(in, rows, emit) finally in.close()
-        }
-      }
-      nRows
-    } finally ReadstatWriteSupport.deleteDir(stagingDir)
+  def write(df: DataFrame, path: String, rle: Boolean = false, rdc: Boolean = false): Unit = {
+    val w = df.write.format("readstat").mode("overwrite").option("format", "sas7bdat")
+    (if (rdc) w.option("compression", "rdc") else if (rle) w.option("compression", "rle") else w)
+      .save(path)
   }
 
   /** Streams `rows` `[i32 len][bytes]` subheader records from `in` into
-    * `emit` — the packer loop for record part files, shared by the
-    * compressed distributed write and the sink's commit.
+    * `emit`: the sink commit's stitch of rendered compressed parts.
     */
   private[readstat] def packRecords(
       in: Spill.In, rows: Long, emit: (Array[Byte], Int) => Unit): Unit = {
@@ -127,23 +70,18 @@ object SasFixtureWriter {
     val rowLength = cols.map(_.length).sum
     val pageLength = math.max(8192, Integer.highestOneBit(rowLength + 512) * 2)
     val headerLen = 1024
-    val raf = new java.io.RandomAccessFile(path, "rw")
-    try {
-      raf.setLength(0)
-      val os = new BufferedOutputStream(new java.io.FileOutputStream(raf.getFD), 1 << 20)
+    Spill.writeFile(path) { os =>
       os.write(buildHeader(headerLen, pageLength, 0)) // page count patched below
       val packer = new SubheaderPagePacker(os, pageLength)
       dictSubheaders(cols, rowLength, nRows, rle = !rdc, rdc = rdc)
         .foreach(s => packer.add(s, 0, s.length, comp = 0, typ = 0))
       body((bytes, len) => packer.add(bytes, 0, len, comp = 4, typ = 1))
       packer.finish()
-      os.flush()
+      os.close()
       // patch the page count (u32 at 204 + align1)
-      raf.seek(204 + 4)
-      val n = packer.nPages
-      raf.write(Array[Byte]((n & 0xff).toByte, ((n >> 8) & 0xff).toByte,
-        ((n >> 16) & 0xff).toByte, ((n >> 24) & 0xff).toByte))
-    } finally raf.close()
+      val raf = new java.io.RandomAccessFile(path, "rw")
+      try { raf.seek(204 + 4); raf.write(Spill.le(packer.nPages, 4)) } finally raf.close()
+    }
   }
 
   /** Packs subheaders into META pages streamed to `os`: pointer table grows
@@ -167,8 +105,8 @@ object SasFixtureWriter {
       }
       top -= len
       System.arraycopy(bytes, off, page, top, len)
-      putU64(page, ptrOff, top.toLong)
-      putU64(page, ptrOff + 8, len.toLong)
+      Spill.putLE(page, ptrOff, top, 8)
+      Spill.putLE(page, ptrOff + 8, len, 8)
       page(ptrOff + 16) = comp.toByte
       page(ptrOff + 17) = typ.toByte
       ptrOff += ptrSize
@@ -177,9 +115,9 @@ object SasFixtureWriter {
 
     private def flush(): Unit = {
       if (count == 0) return
-      putU16(page, bitOffset, 0) // META
-      putU16(page, bitOffset + 2, count)
-      putU16(page, bitOffset + 4, count)
+      Spill.putLE(page, bitOffset, 0, 2) // META
+      Spill.putLE(page, bitOffset + 2, count, 2)
+      Spill.putLE(page, bitOffset + 4, count, 2)
       os.write(page)
       nPages += 1
       java.util.Arrays.fill(page, 0.toByte)
@@ -206,9 +144,10 @@ object SasFixtureWriter {
       }
     }
 
-  /** Streaming uncompressed writer for a KNOWN row count: pages go straight
-    * to disk, O(page) memory — for large generated files (the in-memory
-    * `writeRows` buffers everything, which is fine only at fixture scale).
+  /** Uncompressed writer of exactly `nRows` local rows: they go through
+    * the sink's encoders and renderer a chunk at a time, and pages go
+    * straight to disk — O(chunk) memory at any row count. An iterator with
+    * fewer or more rows than `nRows` fails the write.
     */
   def writeRowsStreaming(
       schema: StructType,
@@ -217,15 +156,41 @@ object SasFixtureWriter {
       stringWidths: Map[String, Int],
       nRows: Long): Long = {
     val cols = colsFor(schema, stringWidths)
-    val rowBuf = new Array[Byte](cols.map(_.length).sum)
     writeFramedStreaming(schema, stringWidths, path, nRows) { out =>
-      var written = 0L
-      while (written < nRows) {
-        require(rows.hasNext, s"sas fixture: iterator ended at $written of $nRows")
-        encodeRowAt(cols, rows.next(), rowBuf, 0)
-        out.write(rowBuf)
-        written += 1
+      val n = Spill.encodeRows(schema, rows, spillEncoders(schema), nRows) { (in, k, _) =>
+        renderRows(in, k, cols)(out.write)
       }
+      require(n == nRows, s"sas fixture: iterator ended at $n of $nRows")
+      require(!rows.hasNext, s"sas fixture: iterator has more than $nRows rows")
+    }
+  }
+
+  /** Renders `rows` spilled rows from `in` at the columns' widths into one
+    * reused buffer handed to `row`: numeric cells verbatim (8-byte bits,
+    * epochs and missings applied by the encoders), strings space-padded.
+    */
+  private[readstat] def renderRows(in: Spill.In, rows: Long, cols: Array[Col])(
+      row: Array[Byte] => Unit): Unit = {
+    val rowBuf = new Array[Byte](cols.map(_.length).sum)
+    var r = 0L
+    while (r < rows) {
+      var off = 0
+      var i = 0
+      while (i < cols.length) {
+        val c = cols(i)
+        if (c.isChar) {
+          java.util.Arrays.fill(rowBuf, off, off + c.length, ' '.toByte)
+          val len = in.readInt()
+          if (len > 0) {
+            require(len <= c.length, s"string too long for ${c.name}")
+            in.readFully(rowBuf, off, len)
+          }
+        } else in.readFully(rowBuf, off, 8)
+        off += c.length
+        i += 1
+      }
+      row(rowBuf)
+      r += 1
     }
   }
 
@@ -251,17 +216,16 @@ object SasFixtureWriter {
     val nDataPages = ((nRows + rowsPerPage - 1) / rowsPerPage).toInt
     val pageRows = rowsPerPage * rowLength
 
-    val os = new BufferedOutputStream(new FileOutputStream(path), 1 << 20)
-    try {
+    Spill.writeFile(path) { os =>
       os.write(buildHeader(headerLen, pageLength, metaPages.length + nDataPages))
       metaPages.foreach(os.write)
       val page = new Array[Byte](pageLength)
       var fill = 0 // row bytes in the current page
       var total = 0L
       def emitPage(): Unit = {
-        putU16(page, bitOffset, 256) // DATA
-        putU16(page, bitOffset + 2, fill / rowLength)
-        putU16(page, bitOffset + 4, 0)
+        Spill.putLE(page, bitOffset, 256, 2) // DATA
+        Spill.putLE(page, bitOffset + 2, fill / rowLength, 2)
+        Spill.putLE(page, bitOffset + 4, 0, 2)
         os.write(page)
         java.util.Arrays.fill(page, 0.toByte)
         fill = 0
@@ -286,7 +250,7 @@ object SasFixtureWriter {
         s"sas writer: ${total / rowLength} rows written, $nRows declared")
       if (fill > 0) emitPage()
       nRows
-    } finally os.close()
+    }
   }
 
   /** Executor-side spill encoders for the distributed sink: numerics spill
@@ -322,122 +286,6 @@ object SasFixtureWriter {
     }
   }
 
-  /** InternalRow → final fixed-layout row bytes (the unit RLE/RDC compresses):
-    * numerics as 8-byte LE double bits with SAS NaN-class missing and 1960
-    * epochs (same conversions as `spillEncoders`), strings space-padded to
-    * the global width. Executor-side hot path — built once per partition.
-    */
-  private[readstat] def fixedRowEncoder(
-      schema: StructType,
-      cols: Array[Col]): (org.apache.spark.sql.catalyst.InternalRow, Array[Byte]) => Unit = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    val MissingBits = 0x7ff0000000000001L // NaN class → missing
-    val offs = cols.scanLeft(0)(_ + _.length)
-    val fns: Array[(InternalRow, Array[Byte]) => Unit] =
-      schema.fields.zipWithIndex.map { case (f, i) =>
-        val off = offs(i)
-        val width = cols(i).length
-        val isTime = f.metadata.contains("logical_type") &&
-          f.metadata.getString("logical_type") == "time"
-        def putBits(buf: Array[Byte], bits: Long): Unit = {
-          var k = 0
-          while (k < 8) { buf(off + k) = ((bits >> (8 * k)) & 0xff).toByte; k += 1 }
-        }
-        def num(get: InternalRow => Double): (InternalRow, Array[Byte]) => Unit =
-          (r, buf) => putBits(buf, if (r.isNullAt(i)) MissingBits
-          else java.lang.Double.doubleToRawLongBits(get(r)))
-        f.dataType match {
-          case StringType => (r: InternalRow, buf: Array[Byte]) => {
-            java.util.Arrays.fill(buf, off, off + width, ' '.toByte)
-            if (!r.isNullAt(i)) {
-              val b = r.getUTF8String(i).getBytes
-              require(b.length <= width, s"string too long for ${f.name}")
-              System.arraycopy(b, 0, buf, off, b.length)
-            }
-          }
-          case DateType => num(r => (r.getInt(i).toLong + Sas.EpochShiftDays).toDouble)
-          case TimestampNTZType | TimestampType =>
-            num(r => r.getLong(i) / 1e6 + (Sas.EpochShiftDays * Sas.SecondsPerDay).toDouble)
-          case LongType if isTime => num(r => r.getLong(i) / 1e9)
-          case ByteType => num(r => r.getByte(i).toDouble)
-          case ShortType => num(r => r.getShort(i).toDouble)
-          case IntegerType => num(r => r.getInt(i).toDouble)
-          case LongType => num(r => r.getLong(i).toDouble)
-          case FloatType => num(r => r.getFloat(i).toDouble)
-          case DoubleType => num(r => r.getDouble(i))
-          case BooleanType => num(r => if (r.getBoolean(i)) 1.0 else 0.0)
-          case dt => throw new IllegalArgumentException(
-            s"sas writer: unsupported type $dt for ${f.name}")
-        }
-      }
-    (r, buf) => {
-      var i = 0
-      while (i < fns.length) { fns(i)(r, buf); i += 1 }
-    }
-  }
-
-  /** encodeRow variant writing at an offset into a larger (page) buffer. */
-  private def encodeRowAt(cols: Array[Col], row: Row, buf: Array[Byte], base: Int): Unit = {
-    var off = base
-    cols.zipWithIndex.foreach { case (c, i) =>
-      if (c.isChar) {
-        java.util.Arrays.fill(buf, off, off + c.length, ' '.toByte)
-        if (!row.isNullAt(i)) {
-          val b = row.getString(i).getBytes(StandardCharsets.UTF_8)
-          require(b.length <= c.length, s"string too long for ${c.name}")
-          System.arraycopy(b, 0, buf, off, b.length)
-        }
-      } else {
-        val bits = // raw bits: preserve NaN payloads (.A-.Z tagged missing)
-          if (row.isNullAt(i)) 0x7ff0000000000001L // NaN-class → missing
-          else java.lang.Double.doubleToRawLongBits(numeric(c, row, i))
-        var k = 0
-        while (k < 8) { buf(off + k) = ((bits >> (8 * k)) & 0xff).toByte; k += 1 }
-      }
-      off += c.length
-    }
-  }
-
-  private def numeric(c: Col, row: Row, i: Int): Double = c.dataType match {
-    case DateType =>
-      val days = row.get(i) match {
-        case d: java.sql.Date => d.toLocalDate.toEpochDay
-        case d: java.time.LocalDate => d.toEpochDay
-        case x: java.lang.Integer => x.toLong
-        case x => throw new IllegalArgumentException(s"date: $x")
-      }
-      (days + Sas.EpochShiftDays).toDouble
-    case TimestampNTZType | TimestampType =>
-      val micros = row.get(i) match {
-        case t: java.time.LocalDateTime =>
-          t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
-        case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000) % 1000
-        case x => throw new IllegalArgumentException(s"timestamp: $x")
-      }
-      micros / 1e6 + (Sas.EpochShiftDays * Sas.SecondsPerDay).toDouble
-    case LongType if c.fmt == "TIME" => row.getLong(i) / 1e9
-    case ByteType => row.getByte(i).toDouble
-    case ShortType => row.getShort(i).toDouble
-    case IntegerType => row.getInt(i).toDouble
-    case LongType => row.getLong(i).toDouble
-    case FloatType => row.getFloat(i).toDouble
-    case DoubleType => row.getDouble(i)
-    case BooleanType => if (row.getBoolean(i)) 1.0 else 0.0
-    case dt => throw new IllegalArgumentException(s"$dt")
-  }
-
-  private def putU16(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-  }
-  private def putU32(b: Array[Byte], off: Int, v: Long): Unit = {
-    var i = 0
-    while (i < 4) { b(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-  }
-  private def putU64(b: Array[Byte], off: Int, v: Long): Unit = {
-    var i = 0
-    while (i < 8) { b(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-  }
-
   private def buildHeader(headerLen: Int, pageLen: Int, nPages: Int): Array[Byte] = {
     val b = new Array[Byte](headerLen)
     System.arraycopy(Sas.Magic, 0, b, 0, 32)
@@ -447,9 +295,9 @@ object SasFixtureWriter {
     b(39) = '1' // unix
     b(70) = 20 // UTF-8
     val a1 = 4
-    putU32(b, 196 + a1, headerLen.toLong)
-    putU32(b, 200 + a1, pageLen.toLong)
-    putU32(b, 204 + a1, math.max(nPages, 0).toLong)
+    Spill.putLE(b, 196 + a1, headerLen, 4)
+    Spill.putLE(b, 200 + a1, pageLen, 4)
+    Spill.putLE(b, 204 + a1, math.max(nPages, 0), 4)
     "9.0401M7".getBytes(StandardCharsets.US_ASCII).copyToArray(b, 216 + 8)
     b
   }
@@ -499,22 +347,22 @@ object SasFixtureWriter {
       }
     }
     val textPayload = text.toByteArray
-    putU16(textPayload, 0, textPayload.length)
+    Spill.putLE(textPayload, 0, textPayload.length, 2)
 
     // subheaders: (signature ++ body)
     def sub(sig: Array[Int], body: Array[Byte]): Array[Byte] =
       sig.map(_.toByte) ++ body
 
     val rowSizeBody = new Array[Byte](800)
-    putU64(rowSizeBody, 5 * 8 - 8, rowLength.toLong)
-    putU64(rowSizeBody, 6 * 8 - 8, nRows)
-    putU64(rowSizeBody, 9 * 8 - 8, n.toLong)
-    putU64(rowSizeBody, 10 * 8 - 8, 0L)
-    putU64(rowSizeBody, 15 * 8 - 8, 0L) // mix page row count
+    Spill.putLE(rowSizeBody, 5 * 8 - 8, rowLength, 8)
+    Spill.putLE(rowSizeBody, 6 * 8 - 8, nRows, 8)
+    Spill.putLE(rowSizeBody, 9 * 8 - 8, n, 8)
+    Spill.putLE(rowSizeBody, 10 * 8 - 8, 0L, 8)
+    Spill.putLE(rowSizeBody, 15 * 8 - 8, 0L, 8) // mix page row count
     val rowSize = sub(Array(0, 0, 0, 0, 0xF7, 0xF7, 0xF7, 0xF7), rowSizeBody)
 
     val colSizeBody = new Array[Byte](8)
-    putU64(colSizeBody, 0, n.toLong)
+    Spill.putLE(colSizeBody, 0, n, 8)
     val colSize = sub(Array(0, 0, 0, 0, 0xF6, 0xF6, 0xF6, 0xF6), colSizeBody)
 
     val colText = sub(Array(0xFD, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF), textPayload)
@@ -523,9 +371,9 @@ object SasFixtureWriter {
     val colNameBody = new Array[Byte](8 + 8 * n + 12)
     cols.indices.foreach { i =>
       val e = 8 + 8 * i
-      putU16(colNameBody, e, 0)
-      putU16(colNameBody, e + 2, nameRefs(i)._1)
-      putU16(colNameBody, e + 4, nameRefs(i)._2)
+      Spill.putLE(colNameBody, e, 0, 2)
+      Spill.putLE(colNameBody, e + 2, nameRefs(i)._1, 2)
+      Spill.putLE(colNameBody, e + 4, nameRefs(i)._2, 2)
     }
     val colName = sub(Array(0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF), colNameBody)
 
@@ -534,8 +382,8 @@ object SasFixtureWriter {
     var colOff = 0
     cols.zipWithIndex.foreach { case (c, i) =>
       val e = 8 + 16 * i
-      putU64(colAttrsBody, e, colOff.toLong)
-      putU32(colAttrsBody, e + 8, c.length.toLong)
+      Spill.putLE(colAttrsBody, e, colOff, 8)
+      Spill.putLE(colAttrsBody, e + 8, c.length, 4)
       colAttrsBody(e + 14) = if (c.isChar) 2 else 1
       colOff += c.length
     }
@@ -546,12 +394,12 @@ object SasFixtureWriter {
       val body = new Array[Byte](56)
       // base = offset + 24 → body index base-8 = 16; fields at body 16+22-8=30..40
       val b0 = 24 - 8
-      putU16(body, b0 + 22, 0)
-      putU16(body, b0 + 24, fmtRefs(i)._1)
-      putU16(body, b0 + 26, fmtRefs(i)._2)
-      putU16(body, b0 + 28, 0)
-      putU16(body, b0 + 30, 0)
-      putU16(body, b0 + 32, 0)
+      Spill.putLE(body, b0 + 22, 0, 2)
+      Spill.putLE(body, b0 + 24, fmtRefs(i)._1, 2)
+      Spill.putLE(body, b0 + 26, fmtRefs(i)._2, 2)
+      Spill.putLE(body, b0 + 28, 0, 2)
+      Spill.putLE(body, b0 + 30, 0, 2)
+      Spill.putLE(body, b0 + 32, 0, 2)
       sub(Array(0xFE, 0xFB, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF, 0xFF), body)
     }
 

@@ -1,6 +1,6 @@
 package graft.sources.readstat.spss
 
-import java.io.{BufferedOutputStream, FileOutputStream, RandomAccessFile}
+import java.io.RandomAccessFile
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -12,8 +12,10 @@ import graft.sources.readstat.Spill
   * continuations, numeric value labels, long-variable-name record, encoding
   * record (UTF-8), and data at compression 0 (raw) or 1 (bytecode).
   *
-  * Single-file sink like the dta writer; doubles as the fixture generator
-  * for the sav read path (FIXTURES.md §4).
+  * One cell encoder ([[spillEncoders]]) and one case renderer
+  * ([[SavCellSink.renderRows]]) serve the sink's commit and [[writeRows]],
+  * like the dta writer's; doubles as the fixture generator for the sav read
+  * path (FIXTURES.md §4).
   */
 object SavWriter {
 
@@ -162,24 +164,8 @@ object SavWriter {
     writeFramed(schema, specs, path, compress, valueLabels, missingValues, zsav,
       stringValueLabels, stringMissingValues) { out =>
       val sink = new SavCellSink(out, compress || zsav)
-      var n = 0L
-      while (rows.hasNext) {
-        val row = rows.next()
-        var ci = 0
-        specs.foreach { s =>
-          if (s.isString) {
-            val bytes =
-              if (row.isNullAt(ci)) Array.emptyByteArray
-              else row.getString(ci).getBytes(StandardCharsets.UTF_8)
-            sink.stringCell(s, bytes, bytes.length)
-          } else {
-            if (row.isNullAt(ci)) sink.numericBits(Sav.MissingDoubleBits)
-            else sink.numericBits(
-              java.lang.Double.doubleToLongBits(numericValue(s, row, ci)))
-          }
-          ci += 1
-        }
-        n += 1
+      val n = Spill.encodeRows(schema, rows, spillEncoders(schema)) { (in, k, _) =>
+        sink.renderRows(in, k, specs)
       }
       sink.finish()
       n
@@ -199,8 +185,29 @@ object SavWriter {
     private val cell = new Array[Byte](8)
     private var region = new Array[Byte](256)
 
+    /** Renders `rows` spilled cases from `in`: numeric cells as their f64
+      * bits, strings laid into their segment regions.
+      */
+    private[readstat] def renderRows(in: Spill.In, rows: Long, specs: Array[Spec]): Unit = {
+      var buf = new Array[Byte](256)
+      var r = 0L
+      while (r < rows) {
+        var i = 0
+        while (i < specs.length) {
+          if (specs(i).isString) {
+            val len = math.max(0, in.readInt())
+            if (len > buf.length) buf = new Array[Byte](len)
+            in.readFully(buf, 0, len)
+            stringCell(specs(i), buf, len)
+          } else numericBits(in.readLE64())
+          i += 1
+        }
+        r += 1
+      }
+    }
+
     def numericBits(bits: Long): Unit =
-      if (codec == null) { putLE64(cell, 0, bits); out.write(cell) }
+      if (codec == null) { Spill.putLE(cell, 0, bits, 8); out.write(cell) }
       else if (bits == Sav.MissingDoubleBits) codec.sysmiss()
       else codec.numCell(java.lang.Double.longBitsToDouble(bits))
 
@@ -265,227 +272,175 @@ object SavWriter {
       data: java.io.OutputStream => Long): Long = {
     val nominalCaseSize = specs.map(_.widthSegments).sum
 
-    val os = new BufferedOutputStream(new FileOutputStream(path), 1 << 20)
-    var bytesOut = 0L
-    def wr(b: Array[Byte]): Unit = { os.write(b); bytesOut += b.length }
-    def u32(v: Int): Unit = wr(Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte, ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte))
-    def f64le(d: Double): Array[Byte] = {
-      val b = new Array[Byte](8)
-      putLE64(b, 0, java.lang.Double.doubleToLongBits(d))
-      b
-    }
+    Spill.writeFile(path) { os =>
+      var bytesOut = 0L
+      def wr(b: Array[Byte]): Unit = { os.write(b); bytesOut += b.length }
+      def u32(v: Int): Unit = wr(Spill.le(v, 4))
+      def f64le(d: Double): Array[Byte] = Spill.le(java.lang.Double.doubleToLongBits(d), 8)
 
-    // ---- header (row count patched at the end) ----
-    val header = new Array[Byte](176)
-    (if (zsav) "$FL3" else "$FL2").getBytes(StandardCharsets.US_ASCII).copyToArray(header, 0)
-    "@(#) SPSS DATA FILE graft".getBytes(StandardCharsets.US_ASCII).copyToArray(header, 4)
-    writeI32(header, 64, 2)
-    writeI32(header, 68, nominalCaseSize)
-    writeI32(header, 72, if (zsav) 2 else if (compress) 1 else 0)
-    writeI32(header, 80, -1) // patched
-    java.lang.System.arraycopy(f64le(100.0), 0, header, 84, 8)
-    wr(header)
+      // ---- header (row count patched at the end) ----
+      val header = new Array[Byte](176)
+      (if (zsav) "$FL3" else "$FL2").getBytes(StandardCharsets.US_ASCII).copyToArray(header, 0)
+      "@(#) SPSS DATA FILE graft".getBytes(StandardCharsets.US_ASCII).copyToArray(header, 4)
+      Spill.putLE(header, 64, 2, 4)
+      Spill.putLE(header, 68, nominalCaseSize, 4)
+      Spill.putLE(header, 72, if (zsav) 2 else if (compress) 1 else 0, 4)
+      Spill.putLE(header, 80, -1, 4) // patched
+      Spill.putLE(header, 84, java.lang.Double.doubleToLongBits(100.0), 8)
+      wr(header)
 
-    // ---- variable records ----
-    def varRecord(typ: Int, name: String, miss: Seq[Double], fmt: Int): Unit = {
-      u32(2); u32(typ); u32(0); u32(miss.size)
-      u32(fmt); u32(fmt)
-      wr(fixed(name.getBytes(StandardCharsets.US_ASCII), 8, ' '.toByte))
-      miss.foreach(m => wr(f64le(m)))
-    }
-    def continuation(): Unit = {
-      u32(2); u32(-1); u32(0); u32(0); u32(0); u32(0)
-      wr(fixed(Array.emptyByteArray, 8, ' '.toByte))
-    }
-    specs.foreach { s =>
-      val miss = if (s.isString) Seq.empty else missingValues.getOrElse(s.name, Seq.empty).take(3)
-      if (s.isString && s.stringLen > 255) {
-        // very-long string: one typ-255 variable per 252-byte segment
-        val nSeg = (s.stringLen + 251) / 252
-        (0 until nSeg).foreach { k =>
-          val segName = if (k == 0) s.shortName else s"${s.shortName.take(6)}$k".take(8)
-          varRecord(255, segName, Seq.empty, 0)
-          (1 until 32).foreach(_ => continuation())
-        }
-      } else {
-        varRecord(if (s.isString) s.stringLen else 0, s.shortName, miss, s.formatType << 16)
-        (1 until s.widthSegments).foreach(_ => continuation())
+      // ---- variable records ----
+      def varRecord(typ: Int, name: String, miss: Seq[Double], fmt: Int): Unit = {
+        u32(2); u32(typ); u32(0); u32(miss.size)
+        u32(fmt); u32(fmt)
+        wr(fixed(name.getBytes(StandardCharsets.US_ASCII), 8, ' '.toByte))
+        miss.foreach(m => wr(f64le(m)))
       }
-    }
-
-    // ---- numeric value labels ----
-    var segOffset = 0
-    val offsets = specs.map { s => val o = segOffset; segOffset += s.widthSegments; o }
-    specs.zip(offsets).foreach { case (s, off) =>
-      valueLabels.get(s.name).filter(_.nonEmpty && !s.isString).foreach { mapping =>
-        u32(3); u32(mapping.size)
-        mapping.toSeq.sortBy(_._1).foreach { case (v, label) =>
-          wr(f64le(v))
-          val bytes = label.getBytes(StandardCharsets.UTF_8).take(255)
-          wr(Array(bytes.length.toByte))
-          val padded = ((bytes.length + 8) / 8) * 8 - 1
-          wr(fixed(bytes, padded, ' '.toByte))
-        }
-        u32(4); u32(1); u32(off + 1)
+      def continuation(): Unit = {
+        u32(2); u32(-1); u32(0); u32(0); u32(0); u32(0)
+        wr(fixed(Array.emptyByteArray, 8, ' '.toByte))
       }
-    }
-
-    // ---- long-string value labels (subtype 21) ----
-    val lsvl = specs.filter(s => s.isString && stringValueLabels.get(s.name).exists(_.nonEmpty))
-    if (lsvl.nonEmpty) {
-      val body = new java.io.ByteArrayOutputStream()
-      def bu32(v: Int): Unit = {
-        var i = 0
-        while (i < 4) { body.write((v >> (8 * i)) & 0xff); i += 1 }
-      }
-      lsvl.foreach { s2 =>
-        val nm = s2.shortName.getBytes(StandardCharsets.US_ASCII)
-        bu32(nm.length); body.write(nm)
-        bu32(s2.stringLen)
-        val mapping = stringValueLabels(s2.name)
-        bu32(mapping.size)
-        mapping.toSeq.sortBy(_._1).foreach { case (v, l) =>
-          val vb = v.getBytes(StandardCharsets.UTF_8)
-          val lb = l.getBytes(StandardCharsets.UTF_8)
-          bu32(vb.length); body.write(vb)
-          bu32(lb.length); body.write(lb)
+      specs.foreach { s =>
+        val miss = if (s.isString) Seq.empty else missingValues.getOrElse(s.name, Seq.empty).take(3)
+        if (s.isString && s.stringLen > 255) {
+          // very-long string: one typ-255 variable per 252-byte segment
+          val nSeg = (s.stringLen + 251) / 252
+          (0 until nSeg).foreach { k =>
+            val segName = if (k == 0) s.shortName else s"${s.shortName.take(6)}$k".take(8)
+            varRecord(255, segName, Seq.empty, 0)
+            (1 until 32).foreach(_ => continuation())
+          }
+        } else {
+          varRecord(if (s.isString) s.stringLen else 0, s.shortName, miss, s.formatType << 16)
+          (1 until s.widthSegments).foreach(_ => continuation())
         }
       }
-      val b = body.toByteArray
-      u32(7); u32(21); u32(1); u32(b.length); wr(b)
-    }
 
-    // ---- long-string missing values (subtype 22) ----
-    val lsmv = specs.filter(s => s.isString && stringMissingValues.get(s.name).exists(_.nonEmpty))
-    if (lsmv.nonEmpty) {
-      val body = new java.io.ByteArrayOutputStream()
-      def bu32(v: Int): Unit = {
-        var i = 0
-        while (i < 4) { body.write((v >> (8 * i)) & 0xff); i += 1 }
-      }
-      lsmv.foreach { s2 =>
-        val nm = s2.shortName.getBytes(StandardCharsets.US_ASCII)
-        bu32(nm.length); body.write(nm)
-        val vals = stringMissingValues(s2.name).take(3)
-        body.write(vals.size)
-        val width = vals.map(_.getBytes(StandardCharsets.UTF_8).length).max
-        bu32(width)
-        vals.foreach { v =>
-          val vb = v.getBytes(StandardCharsets.UTF_8)
-          body.write(vb)
-          (vb.length until width).foreach(_ => body.write(' '))
+      // ---- numeric value labels ----
+      var segOffset = 0
+      val offsets = specs.map { s => val o = segOffset; segOffset += s.widthSegments; o }
+      specs.zip(offsets).foreach { case (s, off) =>
+        valueLabels.get(s.name).filter(_.nonEmpty && !s.isString).foreach { mapping =>
+          u32(3); u32(mapping.size)
+          mapping.toSeq.sortBy(_._1).foreach { case (v, label) =>
+            wr(f64le(v))
+            val bytes = label.getBytes(StandardCharsets.UTF_8).take(255)
+            wr(Array(bytes.length.toByte))
+            val padded = ((bytes.length + 8) / 8) * 8 - 1
+            wr(fixed(bytes, padded, ' '.toByte))
+          }
+          u32(4); u32(1); u32(off + 1)
         }
       }
-      val b = body.toByteArray
-      u32(7); u32(22); u32(1); u32(b.length); wr(b)
-    }
 
-    // ---- very long strings record (subtype 14) ----
-    val vlsEntries = specs.filter(s => s.isString && s.stringLen > 255)
-      .map(s => s"${s.shortName}=${s.stringLen}").mkString("\t")
-    if (vlsEntries.nonEmpty) {
-      val b = vlsEntries.getBytes(StandardCharsets.US_ASCII)
-      u32(7); u32(14); u32(1); u32(b.length); wr(b)
-    }
-
-    // ---- long variable names ----
-    val lvEntries = specs.filter(s => s.name != s.shortName)
-      .map(s => s"${s.shortName}=${s.name}").mkString("\t")
-    if (lvEntries.nonEmpty) {
-      val b = lvEntries.getBytes(StandardCharsets.UTF_8)
-      u32(7); u32(13); u32(1); u32(b.length); wr(b)
-    }
-
-    // ---- encoding record ----
-    val enc = "UTF-8".getBytes(StandardCharsets.US_ASCII)
-    u32(7); u32(20); u32(1); u32(enc.length); wr(enc)
-
-    // ---- dictionary termination ----
-    u32(999); u32(0)
-
-    // ---- data ----
-    var zsavPatch: Option[(Long, Long, Long)] = None
-    val n =
-      if (!zsav) data(os)
-      else {
-        // zheader: its trailer offset and length are patched below
-        val zheaderOfs = bytesOut
-        wr(new Array[Byte](24))
-        val blocks = new ZsavBlockStream(os, threads)
-        val rows = try data(blocks) finally blocks.close()
-        val ztrailerOfs = zheaderOfs + 24 + blocks.index.map(_._2.toLong).sum
-        zsavPatch = Some((zheaderOfs, ztrailerOfs, 24L + 24L * blocks.index.size))
-        // ztrailer: bias, zero, block size, block count, then per block its
-        // uncompressed and compressed offsets and sizes
-        os.write(le64(-100L)); os.write(le64(0L))
-        os.write(le32(ZsavBlockStream.BlockBytes)); os.write(le32(blocks.index.size))
-        var uOfs = zheaderOfs
-        var cOfs = zheaderOfs + 24
-        blocks.index.foreach { case (u, c) =>
-          os.write(le64(uOfs)); os.write(le64(cOfs)); os.write(le32(u)); os.write(le32(c))
-          uOfs += u
-          cOfs += c
+      // ---- long-string value labels (subtype 21) ----
+      val lsvl = specs.filter(s => s.isString && stringValueLabels.get(s.name).exists(_.nonEmpty))
+      if (lsvl.nonEmpty) {
+        val body = new java.io.ByteArrayOutputStream()
+        def bu32(v: Int): Unit = body.write(Spill.le(v, 4))
+        lsvl.foreach { s2 =>
+          val nm = s2.shortName.getBytes(StandardCharsets.US_ASCII)
+          bu32(nm.length); body.write(nm)
+          bu32(s2.stringLen)
+          val mapping = stringValueLabels(s2.name)
+          bu32(mapping.size)
+          mapping.toSeq.sortBy(_._1).foreach { case (v, l) =>
+            val vb = v.getBytes(StandardCharsets.UTF_8)
+            val lb = l.getBytes(StandardCharsets.UTF_8)
+            bu32(vb.length); body.write(vb)
+            bu32(lb.length); body.write(lb)
+          }
         }
-        rows
+        val b = body.toByteArray
+        u32(7); u32(21); u32(1); u32(b.length); wr(b)
       }
-    os.close()
 
-    val raf = new RandomAccessFile(path, "rw")
-    try {
-      raf.seek(80)
-      raf.write(le32(n.toInt))
-      zsavPatch.foreach { case (zheaderOfs, ztrailerOfs, ztrailerLen) =>
-        raf.seek(zheaderOfs)
-        raf.write(le64(zheaderOfs)); raf.write(le64(ztrailerOfs)); raf.write(le64(ztrailerLen))
+      // ---- long-string missing values (subtype 22) ----
+      val lsmv = specs.filter(s => s.isString && stringMissingValues.get(s.name).exists(_.nonEmpty))
+      if (lsmv.nonEmpty) {
+        val body = new java.io.ByteArrayOutputStream()
+        def bu32(v: Int): Unit = body.write(Spill.le(v, 4))
+        lsmv.foreach { s2 =>
+          val nm = s2.shortName.getBytes(StandardCharsets.US_ASCII)
+          bu32(nm.length); body.write(nm)
+          val vals = stringMissingValues(s2.name).take(3)
+          body.write(vals.size)
+          val width = vals.map(_.getBytes(StandardCharsets.UTF_8).length).max
+          bu32(width)
+          vals.foreach { v =>
+            val vb = v.getBytes(StandardCharsets.UTF_8)
+            body.write(vb)
+            (vb.length until width).foreach(_ => body.write(' '))
+          }
+        }
+        val b = body.toByteArray
+        u32(7); u32(22); u32(1); u32(b.length); wr(b)
       }
-    } finally raf.close()
-    n
+
+      // ---- very long strings record (subtype 14) ----
+      val vlsEntries = specs.filter(s => s.isString && s.stringLen > 255)
+        .map(s => s"${s.shortName}=${s.stringLen}").mkString("\t")
+      if (vlsEntries.nonEmpty) {
+        val b = vlsEntries.getBytes(StandardCharsets.US_ASCII)
+        u32(7); u32(14); u32(1); u32(b.length); wr(b)
+      }
+
+      // ---- long variable names ----
+      val lvEntries = specs.filter(s => s.name != s.shortName)
+        .map(s => s"${s.shortName}=${s.name}").mkString("\t")
+      if (lvEntries.nonEmpty) {
+        val b = lvEntries.getBytes(StandardCharsets.UTF_8)
+        u32(7); u32(13); u32(1); u32(b.length); wr(b)
+      }
+
+      // ---- encoding record ----
+      val enc = "UTF-8".getBytes(StandardCharsets.US_ASCII)
+      u32(7); u32(20); u32(1); u32(enc.length); wr(enc)
+
+      // ---- dictionary termination ----
+      u32(999); u32(0)
+
+      // ---- data ----
+      var zsavPatch: Option[(Long, Long, Long)] = None
+      val n =
+        if (!zsav) data(os)
+        else {
+          // zheader: its trailer offset and length are patched below
+          val zheaderOfs = bytesOut
+          wr(new Array[Byte](24))
+          val blocks = new ZsavBlockStream(os, threads)
+          val rows = try data(blocks) finally blocks.close()
+          val ztrailerOfs = zheaderOfs + 24 + blocks.index.map(_._2.toLong).sum
+          zsavPatch = Some((zheaderOfs, ztrailerOfs, 24L + 24L * blocks.index.size))
+          // ztrailer: bias, zero, block size, block count, then per block its
+          // uncompressed and compressed offsets and sizes
+          os.write(Spill.le(-100L, 8)); os.write(Spill.le(0L, 8))
+          os.write(Spill.le(ZsavBlockStream.BlockBytes, 4)); os.write(Spill.le(blocks.index.size, 4))
+          var uOfs = zheaderOfs
+          var cOfs = zheaderOfs + 24
+          blocks.index.foreach { case (u, c) =>
+            os.write(Spill.le(uOfs, 8)); os.write(Spill.le(cOfs, 8))
+            os.write(Spill.le(u, 4)); os.write(Spill.le(c, 4))
+            uOfs += u
+            cOfs += c
+          }
+          rows
+        }
+      os.close()
+
+      val raf = new RandomAccessFile(path, "rw")
+      try {
+        raf.seek(80)
+        raf.write(Spill.le(n, 4))
+        zsavPatch.foreach { case (zheaderOfs, ztrailerOfs, ztrailerLen) =>
+          raf.seek(zheaderOfs)
+          raf.write(Spill.le(zheaderOfs, 8)); raf.write(Spill.le(ztrailerOfs, 8))
+          raf.write(Spill.le(ztrailerLen, 8))
+        }
+      } finally raf.close()
+      n
+    }
   }
-
-  private def numericValue(s: Spec, row: Row, i: Int): Double = s.dataType match {
-    case DateType =>
-      val days = row.get(i) match {
-        case d: java.sql.Date => d.toLocalDate.toEpochDay
-        case d: java.time.LocalDate => d.toEpochDay
-        case x: java.lang.Integer => x.toLong
-        case x => throw new IllegalArgumentException(s"date value: $x")
-      }
-      (days * 86400L + Sav.SecShift).toDouble
-    case TimestampNTZType | TimestampType =>
-      val micros = row.get(i) match {
-        case t: java.time.LocalDateTime =>
-          t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
-        case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000) % 1000
-        case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
-        case x => throw new IllegalArgumentException(s"timestamp value: $x")
-      }
-      // whole seconds: the sav datetime epoch math is second-granular
-      (Math.floorDiv(micros, 1000000L) + Sav.SecShift).toDouble
-    case LongType if s.formatType == 21 => (row.getLong(i) / 1000000000L).toDouble
-    case ByteType => row.getByte(i).toDouble
-    case ShortType => row.getShort(i).toDouble
-    case IntegerType => row.getInt(i).toDouble
-    case LongType => row.getLong(i).toDouble
-    case FloatType => row.getFloat(i).toDouble
-    case DoubleType => row.getDouble(i)
-    case BooleanType => if (row.getBoolean(i)) 1.0 else 0.0
-    case dt => throw new IllegalArgumentException(s"sav writer: $dt")
-  }
-
-  private def writeI32(b: Array[Byte], off: Int, v: Int): Unit = {
-    var i = 0
-    while (i < 4) { b(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-  }
-
-  private def putLE64(b: Array[Byte], off: Int, v: Long): Unit = {
-    var i = 0
-    while (i < 8) { b(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-  }
-
-  private def le32(v: Int): Array[Byte] = { val b = new Array[Byte](4); writeI32(b, 0, v); b }
-
-  private def le64(v: Long): Array[Byte] = { val b = new Array[Byte](8); putLE64(b, 0, v); b }
 
   private def fixed(b: Array[Byte], len: Int, pad: Byte): Array[Byte] = {
     val out = new Array[Byte](len)
@@ -552,7 +507,7 @@ object SavWriter {
       if (c == Math.rint(c) && c >= 1.0 && c <= 251.0 && c.toInt.toDouble - bias == d)
         code(c.toInt)
       else {
-        putLE64(group, 8 + pay, java.lang.Double.doubleToLongBits(d))
+        Spill.putLE(group, 8 + pay, java.lang.Double.doubleToLongBits(d), 8)
         pay += 8
         code(253)
       }

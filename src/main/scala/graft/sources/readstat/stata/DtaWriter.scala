@@ -1,21 +1,23 @@
 package graft.sources.readstat.stata
 
-import java.io.{BufferedOutputStream, FileOutputStream, RandomAccessFile}
+import java.io.RandomAccessFile
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, max, octet_length}
 import org.apache.spark.sql.types._
 
 import graft.sources.readstat.Spill
 
 /** Stata `.dta` v118 writer (S8 in SURVEY.md §2.1; v119 when >32,767 vars).
   *
-  * Single-file sink: Spark writes are funneled through one stream (the dta
-  * container is a single sequential file with a header patch-back — same
-  * constraint as the reference `src/stata/writer.rs:205-328`). For cluster
-  * use, write partitioned parquet instead; this sink exists for format
-  * parity and doubles as the test fixture generator (FIXTURES.md §3).
+  * One cell encoder ([[spillEncoders]]) and one record renderer
+  * ([[renderRows]]) serve both writers: the readstat sink's commit renders
+  * its spill parts with them, and [[writeRows]] renders in-memory chunks of
+  * local rows. Either way the container is one sequential file with a
+  * header patch-back ([[writeFramed]]; same constraint as the reference
+  * `src/stata/writer.rs:205-328`). For cluster use, write partitioned
+  * parquet instead; this writer exists for format parity and doubles as
+  * the test fixture generator (FIXTURES.md §3).
   *
   * Type mapping (Spark → dta): Byte/Boolean→byte, Short→int, Int→long,
   * Date→long+%td, Float→float, Long/Double→double, TimestampNTZ→double+%tc,
@@ -98,6 +100,9 @@ object DtaWriter {
     mapper.writeValueAsString(root)
   }
 
+  /** Writes local rows, `stringWidths` bytes wide at most (strL past
+    * 2,045), through the sink's encoders and renderer in memory.
+    */
   def writeRows(
       schema: StructType,
       rows: Iterator[Row],
@@ -109,38 +114,62 @@ object DtaWriter {
       sortedBy: Seq[String] = Seq.empty): Long = {
     val specs = schema.fields.map(f => specFor(f, stringWidths.getOrElse(f.name, 1)))
     writeFramed(schema, specs, path, valueLabels, variableLabels, sortedBy) { sink =>
-      var nRows = 0L
-      while (rows.hasNext) {
-        val row = rows.next()
-        sink.clearRow()
-        var off = 0
-        var i = 0
-        while (i < specs.length) {
-          val s = specs(i)
-          writeCell(sink.rowBuf, off, s, row, i, nRows, sink.strls, sink.version)
-          off += s.kind.width
-          i += 1
-        }
-        sink.emitRow()
-        nRows += 1
+      Spill.encodeRows(schema, rows, spillEncoders(schema)) { (in, n, first) =>
+        renderRows(in, n, first, specs, sink.version, sink.data, sink.strls)
       }
-      nRows
     }
   }
 
-  /** Record emission surface handed to `writeFramed`'s data callback: a
-    * reusable record buffer, the data section's stream (`data`, for
-    * records rendered elsewhere) and the strL side table, whose blobs are
-    * written in the order they are added.
+  type StrLs = scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Byte])]
+
+  /** What `writeFramed`'s data callback writes into: the data section's
+    * stream and the strL side table, whose blobs are written in the order
+    * they are added.
     */
   final class DtaDataSink private[DtaWriter] (
-      val version: Int,
-      val recordLen: Int,
-      val data: java.io.OutputStream,
-      val strls: scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Byte])]) {
-    val rowBuf = new Array[Byte](recordLen)
-    def clearRow(): Unit = java.util.Arrays.fill(rowBuf, 0.toByte)
-    def emitRow(): Unit = data.write(rowBuf)
+      val version: Int, val data: java.io.OutputStream, val strls: StrLs)
+
+  /** Renders `rows` spilled rows from `in` as records into `out`: numeric
+    * cells copy verbatim, strings pad to their width or become strL refs
+    * (obs = `firstRow` + row + 1) whose blobs are added to `strls`.
+    */
+  private[readstat] def renderRows(in: Spill.In, rows: Long, firstRow: Long,
+      specs: Array[ColSpec], version: Int, out: java.io.OutputStream, strls: StrLs): Unit = {
+    // strL ref: v118 v(2)+o(6), v119 v(3)+o(5), both little-endian
+    val vBytes = if (version >= 119) 3 else 2
+    val rowBuf = new Array[Byte](specs.map(_.kind.width).sum)
+    var r = 0L
+    while (r < rows) {
+      java.util.Arrays.fill(rowBuf, 0.toByte)
+      var off = 0
+      var i = 0
+      while (i < specs.length) {
+        specs(i).kind match {
+          case KStr(w) =>
+            val len = in.readInt()
+            if (len > 0) {
+              require(len <= w, s"string too long for str$w: ${specs(i).name}")
+              in.readFully(rowBuf, off, len)
+            }
+          case KStrL =>
+            val len = in.readInt()
+            if (len >= 0) {
+              val blob = new Array[Byte](len)
+              in.readFully(blob)
+              val o = firstRow + r + 1
+              strls += ((i + 1, o, blob))
+              Spill.putLE(rowBuf, off, i + 1, vBytes)
+              Spill.putLE(rowBuf, off + vBytes, o, 8 - vBytes)
+            }
+          case k =>
+            in.readFully(rowBuf, off, k.width)
+        }
+        off += specs(i).kind.width
+        i += 1
+      }
+      out.write(rowBuf)
+      r += 1
+    }
   }
 
   /** Writes the full dta container frame — header, map, descriptors, strLs,
@@ -160,223 +189,145 @@ object DtaWriter {
     val nvar = specs.length
     require(nvar > 0, "dta writer: no columns")
     val version = if (nvar > 32767) 119 else 118
-    val recordLen = specs.map(_.kind.width).sum
+    Spill.writeFile(path) { file =>
+      val out = new CountingOut(file)
+      def tag(s: String): Unit = out.write(s.getBytes(StandardCharsets.US_ASCII))
+      def u16(v: Int): Unit = out.write(Spill.le(v, 2))
+      def u32(v: Long): Unit = out.write(Spill.le(v, 4))
+      def u64(v: Long): Unit = out.write(Spill.le(v, 8))
 
-    val out = new CountingOut(new BufferedOutputStream(new FileOutputStream(path), 1 << 20))
-    def tag(s: String): Unit = out.write(s.getBytes(StandardCharsets.US_ASCII))
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def u32(v: Long): Unit = { var i = 0; while (i < 4) { out.write(((v >> (8 * i)) & 0xff).toInt); i += 1 } }
-    def u64(v: Long): Unit = { var i = 0; while (i < 8) { out.write(((v >> (8 * i)) & 0xff).toInt); i += 1 } }
+      // ---- header (placeholders for N; patched at the end) ----
+      tag("<stata_dta>"); tag("<header>")
+      tag(s"<release>$version</release>")
+      tag("<byteorder>LSF</byteorder>")
+      tag("<K>"); if (version >= 119) u32(nvar.toLong) else u16(nvar); tag("</K>")
+      tag("<N>")
+      val nobsOffset = out.count
+      u64(0L)
+      tag("</N>")
+      tag("<label>"); u16(0); tag("</label>")
+      tag("<timestamp>"); out.write(0); tag("</timestamp>")
+      tag("</header>")
 
-    // ---- header (placeholders for N; patched at the end) ----
-    tag("<stata_dta>"); tag("<header>")
-    tag(s"<release>$version</release>")
-    tag("<byteorder>LSF</byteorder>")
-    tag("<K>"); if (version >= 119) u32(nvar.toLong) else u16(nvar); tag("</K>")
-    tag("<N>")
-    val nobsOffset = out.count
-    u64(0L)
-    tag("</N>")
-    tag("<label>"); u16(0); tag("</label>")
-    tag("<timestamp>"); out.write(0); tag("</timestamp>")
-    tag("</header>")
+      val mapOffset = out.count
+      tag("<map>")
+      val mapValuesOffset = out.count
+      (0 until 14).foreach(_ => u64(0L))
+      tag("</map>")
 
-    val mapOffset = out.count
-    tag("<map>")
-    val mapValuesOffset = out.count
-    (0 until 14).foreach(_ => u64(0L))
-    tag("</map>")
-
-    // ---- descriptors ----
-    tag("<variable_types>"); specs.foreach(s => u16(s.kind.typeCode)); tag("</variable_types>")
-    tag("<varnames>")
-    specs.foreach { s => out.write(fixed(s.name.getBytes(StandardCharsets.UTF_8), VarNameLen)) }
-    tag("</varnames>")
-    val srtEntryLen = if (version >= 119) 4 else 2
-    tag("<sortlist>")
-    val srt = new Array[Byte]((nvar + 1) * srtEntryLen)
-    sortedBy.zipWithIndex.foreach { case (name, i) =>
-      val vi = schema.fieldIndex(name) + 1 // 1-based variable index
-      var b = 0
-      while (b < srtEntryLen) { srt(i * srtEntryLen + b) = ((vi >> (8 * b)) & 0xff).toByte; b += 1 }
-    }
-    out.write(srt)
-    tag("</sortlist>")
-    tag("<formats>")
-    specs.foreach(s => out.write(fixed(s.fmt.getBytes(StandardCharsets.UTF_8), FmtLen)))
-    tag("</formats>")
-    tag("<value_label_names>")
-    specs.foreach { s =>
-      val n = if (valueLabels.get(s.name).exists(_.nonEmpty)) s.name else ""
-      out.write(fixed(n.getBytes(StandardCharsets.UTF_8), LblListLen))
-    }
-    tag("</value_label_names>")
-    tag("<variable_labels>")
-    specs.foreach { s =>
-      val l = variableLabels.getOrElse(s.name, "")
-      out.write(fixed(l.getBytes(StandardCharsets.UTF_8), VarLabelLen))
-    }
-    tag("</variable_labels>")
-    tag("<characteristics>"); tag("</characteristics>")
-
-    // ---- data ----
-    tag("<data>")
-    val strls = scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Byte])]()
-    val nRows = data(new DtaDataSink(version, recordLen, out, strls))
-    tag("</data>")
-
-    // ---- strLs ----
-    val strlsStart = out.count
-    tag("<strls>")
-    strls.foreach { case (v, o, data) =>
-      // type 130 (0x82, ASCII): Stata stores these with a terminating NUL
-      // and len INCLUDES it — pandas' reader drops the last byte
-      // unconditionally, so omitting the terminator corrupts the value for
-      // every other parser (fuzz-crosscheck-caught r6; readers that strip
-      // trailing NULs, like ours and the reference, accept both)
-      tag("GSO"); u32(v.toLong); u64(o); out.write(0x82); u32(data.length.toLong + 1)
-      out.write(data)
-      out.write(0)
-    }
-    tag("</strls>")
-
-    // ---- value labels ----
-    val vlStart = out.count
-    tag("<value_labels>")
-    specs.foreach { s =>
-      valueLabels.get(s.name).filter(_.nonEmpty).foreach { mapping =>
-        val sorted = mapping.toSeq.sortBy(_._1)
-        val text = new java.io.ByteArrayOutputStream()
-        val offs = new Array[Int](sorted.length)
-        sorted.zipWithIndex.foreach { case ((_, label), i) =>
-          offs(i) = text.size()
-          text.write(label.getBytes(StandardCharsets.UTF_8).filter(_ != 0))
-          text.write(0)
-        }
-        val tbl = new java.io.ByteArrayOutputStream()
-        def tu32(v: Int): Unit = { var i = 0; while (i < 4) { tbl.write((v >> (8 * i)) & 0xff); i += 1 } }
-        tu32(sorted.length); tu32(text.size())
-        offs.foreach(tu32)
-        sorted.foreach { case (v, _) => tu32(v) }
-        tbl.write(text.toByteArray)
-        val table = tbl.toByteArray
-        tag("<lbl>")
-        u32(table.length.toLong)
-        out.write(fixed(s.name.getBytes(StandardCharsets.UTF_8), LblListLen))
-        out.write(new Array[Byte](3))
-        out.write(table)
-        tag("</lbl>")
+      // ---- descriptors ----
+      tag("<variable_types>"); specs.foreach(s => u16(s.kind.typeCode)); tag("</variable_types>")
+      tag("<varnames>")
+      specs.foreach { s => out.write(fixed(s.name.getBytes(StandardCharsets.UTF_8), VarNameLen)) }
+      tag("</varnames>")
+      val srtEntryLen = if (version >= 119) 4 else 2
+      tag("<sortlist>")
+      val srt = new Array[Byte]((nvar + 1) * srtEntryLen)
+      sortedBy.zipWithIndex.foreach { case (name, i) =>
+        // 1-based variable index
+        Spill.putLE(srt, i * srtEntryLen, schema.fieldIndex(name) + 1, srtEntryLen)
       }
-    }
-    tag("</value_labels>")
-    val endStart = out.count
-    tag("</stata_dta>")
-    val fileEnd = out.count
-    out.close()
+      out.write(srt)
+      tag("</sortlist>")
+      tag("<formats>")
+      specs.foreach(s => out.write(fixed(s.fmt.getBytes(StandardCharsets.UTF_8), FmtLen)))
+      tag("</formats>")
+      tag("<value_label_names>")
+      specs.foreach { s =>
+        val n = if (valueLabels.get(s.name).exists(_.nonEmpty)) s.name else ""
+        out.write(fixed(n.getBytes(StandardCharsets.UTF_8), LblListLen))
+      }
+      tag("</value_label_names>")
+      tag("<variable_labels>")
+      specs.foreach { s =>
+        val l = variableLabels.getOrElse(s.name, "")
+        out.write(fixed(l.getBytes(StandardCharsets.UTF_8), VarLabelLen))
+      }
+      tag("</variable_labels>")
+      tag("<characteristics>"); tag("</characteristics>")
 
-    // ---- patch N and the offset map ----
-    val raf = new RandomAccessFile(path, "rw")
-    try {
-      raf.seek(nobsOffset); raf.write(le64(nRows))
-      // map entries: 0 start, 1 <map>, 2 <variable_types>, 3 <varnames>,
-      // 4 <sortlist>, 5 <formats>, 6 <value_label_names>, 7 <variable_labels>,
-      // 8 <characteristics>, 9 <data>, 10 <strls>, 11 <value_labels>,
-      // 12 </stata_dta>, 13 eof
-      val m = new Array[Long](14)
-      m(0) = 0L
-      m(1) = mapOffset
-      m(2) = mapValuesOffset + 14 * 8 + "</map>".length
-      m(3) = m(2) + "<variable_types>".length + 2L * nvar + "</variable_types>".length
-      m(4) = m(3) + "<varnames>".length + VarNameLen.toLong * nvar + "</varnames>".length
-      m(5) = m(4) + "<sortlist>".length + srtEntryLen.toLong * (nvar + 1) + "</sortlist>".length
-      m(6) = m(5) + "<formats>".length + FmtLen.toLong * nvar + "</formats>".length
-      m(7) = m(6) + "<value_label_names>".length + LblListLen.toLong * nvar + "</value_label_names>".length
-      m(8) = m(7) + "<variable_labels>".length + VarLabelLen.toLong * nvar + "</variable_labels>".length
-      m(9) = m(8) + "<characteristics>".length + "</characteristics>".length
-      m(10) = strlsStart
-      m(11) = vlStart
-      m(12) = endStart
-      m(13) = fileEnd
-      raf.seek(mapValuesOffset)
-      m.foreach(v => raf.write(le64(v)))
-    } finally raf.close()
-    nRows
-  }
+      // ---- data ----
+      tag("<data>")
+      val strls: StrLs = scala.collection.mutable.ArrayBuffer()
+      val nRows = data(new DtaDataSink(version, out, strls))
+      tag("</data>")
 
-  private def writeCell(
-      buf: Array[Byte], off: Int, spec: ColSpec, row: Row, colIdx: Int, rowIdx: Long,
-      strls: scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Byte])],
-      version: Int = 118): Unit = {
-    val isNull = row.isNullAt(colIdx)
-    spec.kind match {
-      case KI8 =>
-        buf(off) = if (isNull) MissI8 else spec.dataType match {
-          case BooleanType => if (row.getBoolean(colIdx)) 1 else 0
-          case _ => row.getByte(colIdx)
-        }
-      case KI16 =>
-        val v: Short = if (isNull) MissI16 else row.getShort(colIdx)
-        buf(off) = (v & 0xff).toByte; buf(off + 1) = ((v >> 8) & 0xff).toByte
-      case KI32 =>
-        val v: Int =
-          if (isNull) MissI32
-          else spec.dataType match {
-            case DateType =>
-              // Row surface gives java.sql.Date / LocalDate depending on config
-              val days = row.get(colIdx) match {
-                case d: java.sql.Date => d.toLocalDate.toEpochDay
-                case d: java.time.LocalDate => d.toEpochDay
-                case i: java.lang.Integer => i.toLong
-                case x => throw new IllegalArgumentException(s"date value: $x")
-              }
-              (days + Dta.EpochShiftDays).toInt
-            case _ => row.getInt(colIdx)
+      // ---- strLs ----
+      val strlsStart = out.count
+      tag("<strls>")
+      strls.foreach { case (v, o, data) =>
+        // type 130 (0x82, ASCII): Stata stores these with a terminating NUL
+        // and len INCLUDES it — pandas' reader drops the last byte
+        // unconditionally, so omitting the terminator corrupts the value for
+        // every other parser (fuzz-crosscheck-caught r6; readers that strip
+        // trailing NULs, like ours and the reference, accept both)
+        tag("GSO"); u32(v.toLong); u64(o); out.write(0x82); u32(data.length.toLong + 1)
+        out.write(data)
+        out.write(0)
+      }
+      tag("</strls>")
+
+      // ---- value labels ----
+      val vlStart = out.count
+      tag("<value_labels>")
+      specs.foreach { s =>
+        valueLabels.get(s.name).filter(_.nonEmpty).foreach { mapping =>
+          val sorted = mapping.toSeq.sortBy(_._1)
+          val text = new java.io.ByteArrayOutputStream()
+          val offs = new Array[Int](sorted.length)
+          sorted.zipWithIndex.foreach { case ((_, label), i) =>
+            offs(i) = text.size()
+            text.write(label.getBytes(StandardCharsets.UTF_8).filter(_ != 0))
+            text.write(0)
           }
-        var i = 0
-        while (i < 4) { buf(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-      case KF32 =>
-        val bits = if (isNull) MissF32Bits else java.lang.Float.floatToIntBits(row.getFloat(colIdx))
-        var i = 0
-        while (i < 4) { buf(off + i) = ((bits >> (8 * i)) & 0xff).toByte; i += 1 }
-      case KF64 =>
-        val d: Double =
-          if (isNull) 0.0
-          else spec.dataType match {
-            case LongType if spec.fmt.startsWith("%tcH") =>
-              (row.getLong(colIdx) / 1000000L).toDouble // nanos → ms-of-day
-            case LongType => row.getLong(colIdx).toDouble
-            case TimestampNTZType | TimestampType =>
-              val micros = row.get(colIdx) match {
-                case t: java.time.LocalDateTime =>
-                  t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
-                case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000) % 1000
-                case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
-                case x => throw new IllegalArgumentException(s"timestamp value: $x")
-              }
-              (micros / 1000L + Dta.EpochShiftMs).toDouble
-            case _ => row.getDouble(colIdx)
-          }
-        val bits = if (isNull) MissF64Bits else java.lang.Double.doubleToLongBits(d)
-        var i = 0
-        while (i < 8) { buf(off + i) = ((bits >> (8 * i)) & 0xff).toByte; i += 1 }
-      case KStr(w) =>
-        if (!isNull) {
-          val bytes = row.getString(colIdx).getBytes(StandardCharsets.UTF_8)
-          require(bytes.length <= w, s"string too long for str$w: ${spec.name}")
-          System.arraycopy(bytes, 0, buf, off, bytes.length)
+          val tbl = new java.io.ByteArrayOutputStream()
+          def tu32(v: Int): Unit = tbl.write(Spill.le(v, 4))
+          tu32(sorted.length); tu32(text.size())
+          offs.foreach(tu32)
+          sorted.foreach { case (v, _) => tu32(v) }
+          tbl.write(text.toByteArray)
+          val table = tbl.toByteArray
+          tag("<lbl>")
+          u32(table.length.toLong)
+          out.write(fixed(s.name.getBytes(StandardCharsets.UTF_8), LblListLen))
+          out.write(new Array[Byte](3))
+          out.write(table)
+          tag("</lbl>")
         }
-      case KStrL =>
-        if (!isNull) {
-          val v = colIdx + 1
-          val o = rowIdx + 1
-          strls += ((v, o, row.getString(colIdx).getBytes(StandardCharsets.UTF_8)))
-          // v118: v(2)+o(6); v119: v(3)+o(5) — both little-endian
-          val vBytes = if (version >= 119) 3 else 2
-          var i = 0
-          while (i < vBytes) { buf(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-          i = 0
-          while (i < 8 - vBytes) { buf(off + vBytes + i) = ((o >> (8 * i)) & 0xff).toByte; i += 1 }
-        }
+      }
+      tag("</value_labels>")
+      val endStart = out.count
+      tag("</stata_dta>")
+      val fileEnd = out.count
+      out.close()
+
+      // ---- patch N and the offset map ----
+      val raf = new RandomAccessFile(path, "rw")
+      try {
+        raf.seek(nobsOffset); raf.write(Spill.le(nRows, 8))
+        // map entries: 0 start, 1 <map>, 2 <variable_types>, 3 <varnames>,
+        // 4 <sortlist>, 5 <formats>, 6 <value_label_names>, 7 <variable_labels>,
+        // 8 <characteristics>, 9 <data>, 10 <strls>, 11 <value_labels>,
+        // 12 </stata_dta>, 13 eof
+        val m = new Array[Long](14)
+        m(0) = 0L
+        m(1) = mapOffset
+        m(2) = mapValuesOffset + 14 * 8 + "</map>".length
+        m(3) = m(2) + "<variable_types>".length + 2L * nvar + "</variable_types>".length
+        m(4) = m(3) + "<varnames>".length + VarNameLen.toLong * nvar + "</varnames>".length
+        m(5) = m(4) + "<sortlist>".length + srtEntryLen.toLong * (nvar + 1) + "</sortlist>".length
+        m(6) = m(5) + "<formats>".length + FmtLen.toLong * nvar + "</formats>".length
+        m(7) = m(6) + "<value_label_names>".length + LblListLen.toLong * nvar + "</value_label_names>".length
+        m(8) = m(7) + "<variable_labels>".length + VarLabelLen.toLong * nvar + "</variable_labels>".length
+        m(9) = m(8) + "<characteristics>".length + "</characteristics>".length
+        m(10) = strlsStart
+        m(11) = vlStart
+        m(12) = endStart
+        m(13) = fileEnd
+        raf.seek(mapValuesOffset)
+        m.foreach(v => raf.write(Spill.le(v, 8)))
+      } finally raf.close()
+      nRows
     }
   }
 
@@ -429,13 +380,6 @@ object DtaWriter {
     val out = new Array[Byte](len)
     System.arraycopy(b, 0, out, 0, math.min(b.length, len))
     out
-  }
-
-  private def le64(v: Long): Array[Byte] = {
-    val b = new Array[Byte](8)
-    var i = 0
-    while (i < 8) { b(i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-    b
   }
 
   private final class CountingOut(os: java.io.OutputStream) extends java.io.OutputStream {

@@ -54,9 +54,9 @@ class DecodeParitySpec extends SparkSpec {
         case _ => i * 3
       }
       val d: Any = i % 6 match {
-        case 4 => Integer.valueOf((miss + 3 - Dta.EpochShiftDays).toInt)
+        case 4 => LocalDate.ofEpochDay((miss + 3 - Dta.EpochShiftDays).toInt)
         case 5 => null
-        case _ => Integer.valueOf(base.plusDays(i).toEpochDay.toInt)
+        case _ => LocalDate.ofEpochDay(base.plusDays(i).toEpochDay.toInt)
       }
       Row(x, d, sVal(i))
     }
