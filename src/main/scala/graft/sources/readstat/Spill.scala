@@ -60,28 +60,43 @@ private[readstat] object Spill {
     */
   def encodeRows(schema: StructType, rows: Iterator[Row], encoders: Array[Cell],
       limit: Long = Long.MaxValue)(render: (In, Int, Long) => Unit): Long = {
-    val toInternal = ExpressionEncoder(schema, true).createSerializer()
-    val chunk = new Chunk
-    val out = new Out(chunk)
-    var total = 0L
-    var n = 0
-    def renderChunk(): Unit = if (n > 0) {
-      out.flush()
-      render(chunk.in, n, total - n)
-      chunk.reset()
-      n = 0
+    val toInternal = serializers.synchronized(serializers.remove(schema)) match {
+      case null => ExpressionEncoder(schema, true).createSerializer()
+      case s => s
     }
-    while (total < limit && rows.hasNext) {
-      val r = toInternal(rows.next())
-      var c = 0
-      while (c < encoders.length) { encoders(c)(r, out); c += 1 }
-      n += 1
-      total += 1
-      if (n == ChunkRows || chunk.filled >= ChunkBytes) renderChunk()
-    }
-    renderChunk()
-    total
+    try {
+      val chunk = new Chunk
+      val out = new Out(chunk)
+      var total = 0L
+      var n = 0
+      def renderChunk(): Unit = if (n > 0) {
+        out.flush()
+        render(chunk.in, n, total - n)
+        chunk.reset()
+        n = 0
+      }
+      while (total < limit && rows.hasNext) {
+        val r = toInternal(rows.next())
+        var c = 0
+        while (c < encoders.length) { encoders(c)(r, out); c += 1 }
+        n += 1
+        total += 1
+        if (n == ChunkRows || chunk.filled >= ChunkBytes) renderChunk()
+      }
+      renderChunk()
+      total
+    } finally serializers.synchronized(serializers.put(schema, toInternal))
   }
+
+  /** Idle Row serializers of the last 16 schemas: a new one generates its
+    * projection's code on first use, about 10 ms. A writer takes one out
+    * for the duration of a write, so no two threads share one.
+    */
+  private val serializers =
+    new java.util.LinkedHashMap[StructType, ExpressionEncoder.Serializer[Row]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[StructType, ExpressionEncoder.Serializer[Row]]): Boolean = size > 16
+    }
 
   /** An in-memory chunk; `filled` reads its size without `size()`'s lock. */
   private final class Chunk extends ByteArrayOutputStream(BufferBytes) {

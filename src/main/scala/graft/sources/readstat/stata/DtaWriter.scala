@@ -120,6 +120,7 @@ object DtaWriter {
     }
   }
 
+  /** strL blobs as (variable, observation, bytes), 1-based. */
   type StrLs = scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Byte])]
 
   /** What `writeFramed`'s data callback writes into: the data section's

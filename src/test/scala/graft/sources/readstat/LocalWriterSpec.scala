@@ -87,6 +87,19 @@ class LocalWriterSpec extends AnyFunSuite {
     assert(SasFixtureWriter.writeRowsStreaming(schema, rows(5), exact.toString, widths, 5L) === 5L)
   }
 
+  test("writes of one schema on several threads at once write the same bytes") {
+    val want = target("seq.dta")
+    DtaWriter.writeRows(schema, rows(3 * Spill.ChunkRows), want.toString, widths)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      val outs = (0 until 6).map(k => target(s"par$k.dta"))
+      outs.map(p => pool.submit(new java.util.concurrent.Callable[Long] {
+        def call(): Long = DtaWriter.writeRows(schema, rows(3 * Spill.ChunkRows), p.toString, widths)
+      })).foreach(_.get())
+      outs.foreach(p => assert(java.util.Arrays.equals(Files.readAllBytes(p), Files.readAllBytes(want)), p))
+    } finally pool.shutdown()
+  }
+
   test("dates and timestamps: java.sql and java.time values write the same bytes") {
     val sch = StructType(Seq(StructField("d", DateType), StructField("ts", TimestampType)))
     val days = Seq(-3653L, 0L, 18000L, 20000L)
